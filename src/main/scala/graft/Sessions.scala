@@ -15,7 +15,8 @@ import org.apache.spark.sql.SparkSession
   * here makes the sizing a property of the engine, not of one main.
   *
   * Per-main knobs stay per-main (core count, shuffle sizing, timezone,
-  * log level) — they are workload shape, not engine tuning. */
+  * log level) — they are workload shape, not engine tuning. Metadata
+  * work gets its own derived session ([[meta]]). */
 object Sessions {
 
   /** Generated-class cache entries: the streaming/store-protocol rows
@@ -44,5 +45,43 @@ object Sessions {
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel(logLevel)
     s
+  }
+
+  /** Pinned on every metadata session: manifest stages are bounded by
+    * FILE counts, so AQE's per-exchange stage jobs are pure scheduler
+    * latency (JobCount r17: 60-80% of each table-protocol row's jobs)
+    * and a data-sized shuffle count is tiny-task overhead. */
+  private val MetaPinned = Map(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> "4")
+
+  private val metaSessions =
+    new java.util.WeakHashMap[SparkSession, SparkSession]()
+
+  /** The METADATA session of `data` (`newSession()`: same context, own
+    * SQL conf), created once and reused; manifest reads and publishes
+    * run on it, so their sizing never shows in `data`'s conf. Each call
+    * copies `data`'s CURRENT runtime SQL conf but the pinned keys
+    * (metadata plans read data files and cast keys to strings: time
+    * zone, `nanosAsLong` windows). Spark restores the caller's active
+    * session after each action. */
+  def meta(data: SparkSession): SparkSession = {
+    val m = metaSessions.synchronized {
+      metaSessions.computeIfAbsent(data, { d =>
+        val s = d.newSession()
+        MetaPinned.foreach { case (k, v) => s.conf.set(k, v) }
+        s
+      })
+    }
+    def runtime(s: SparkSession) = s.conf.getAll.filter { case (k, _) =>
+      !MetaPinned.contains(k) && m.conf.isModifiable(k)
+    }
+    val want = runtime(data)
+    val have = runtime(m)
+    (have.keySet -- want.keySet).foreach(m.conf.unset)
+    want.foreach { case (k, v) =>
+      if (!have.get(k).contains(v)) m.conf.set(k, v)
+    }
+    m
   }
 }

@@ -214,20 +214,25 @@ object TableManifest {
   def update(spark: SparkSession, path: String, partitionCol: String,
              touched: Seq[Any], keyCol: String,
              retainVersions: Int = 2): Unit = {
-    val fresh = statsFor(spark, path, partitionCol, touched, keyCol)
+    val ms = graft.Sessions.meta(spark)
+    val fresh = statsFor(ms, path, partitionCol, touched, keyCol)
     val parts = touched.map(_.toString)
     val merged = load(spark, path) match {
       case None => fresh
       case Some(old) => old.filter(!col("part").isin(parts: _*))
         .unionByName(fresh)
     }
-    MergeUpsert.publishPlain(spark, manifestPath(path), merged,
+    MergeUpsert.publishPlain(ms, manifestPath(path), merged,
       retainVersions)
   }
 
-  /** The live manifest, or None before the first [[update]]. */
+  /** The live manifest, or None before the first [[update]]. The frame
+    * is on `spark`'s metadata session ([[graft.Sessions.meta]]), like
+    * every manifest read here: AQE off, 4 shuffle partitions, without
+    * touching `spark`'s own conf. Collect it before it meets a frame of
+    * `spark` — one plan never mixes the two sessions. */
   def load(spark: SparkSession, path: String): Option[DataFrame] =
-    MergeUpsert.existingPlain(spark, manifestPath(path))
+    MergeUpsert.existingPlain(graft.Sessions.meta(spark), manifestPath(path))
 
   /** The matching file rows' paths, collected BOUNDED: only rows whose
     * partition matches reach the driver (O(files in the requested
@@ -302,7 +307,9 @@ object TableManifest {
       MergeUpsert.batchStats(updates, keys, partitionCol)
     val existing = load(spark, path)
     // when a manifest already exists, the merge's existing-rows read
-    // plans from it; new partitions simply resolve to no files
+    // plans from it; new partitions simply resolve to no files. The
+    // manifest side is collected (keptFiles) before the data read is
+    // planned on `spark`
     val resolver = existing.map { m => (ts: Seq[Any]) =>
       readFiles(spark, path, m,
         keptFiles(m, ts.map(_.toString)).toIndexedSeq)
@@ -316,35 +323,26 @@ object TableManifest {
     beforeManifestPublish()
     if (newFiles.nonEmpty) {
       // manifest maintenance is METADATA-scale always (rows = file
-      // count, bounded by MaxPlanFiles) — its stats agg and publish
-      // write must not inherit the session's data-sized shuffle count
-      // (measured ~0.3 s/publish of pure tiny-task overhead at 32) nor
-      // AQE (every exchange = one query-stage JOB of scheduler latency;
-      // JobCount r17: 60-80% of each protocol row's jobs)
-      graft.ScopedSessionConf.withMetaConf(spark, 4) {
-        val fresh = statsForFiles(spark, path, newFiles, partitionCol,
-          zoneKey.getOrElse(keys.head))
-        val parts = touched.map(_.toString)
-        val merged = existing match {
-          case None => fresh
-          case Some(old) => old.filter(!col("part").isin(parts: _*))
-            .unionByName(fresh)
-        }
-        // one file per manifest version (see replacePartitions)
-        MergeUpsert.publishPlainFrom(spark, manifestPath(path),
-          merged.coalesce(1), retainVersions, mBase)
+      // count, bounded by MaxPlanFiles): its stats agg and publish run
+      // on the metadata session, never at the data session's shuffle
+      // sizing (measured ~0.3 s/publish of pure tiny-task overhead at
+      // 32) or under AQE
+      val ms = graft.Sessions.meta(spark)
+      val fresh = statsForFiles(ms, path, newFiles, partitionCol,
+        zoneKey.getOrElse(keys.head))
+      val parts = touched.map(_.toString)
+      val merged = existing match {
+        case None => fresh
+        case Some(old) => old.filter(!col("part").isin(parts: _*))
+          .unionByName(fresh)
       }
+      // one file per manifest version (see replacePartitions)
+      MergeUpsert.publishPlainFrom(ms, manifestPath(path),
+        merged.coalesce(1), retainVersions, mBase)
     }
     report
   }
 
-  /** Out-of-band APPEND with exact manifest registration: writes `df`
-    * as new files (no merge semantics — the caller owns key
-    * uniqueness) and registers EXACTLY the files it wrote, leaving
-    * every existing manifest row in place. This is the safe form of
-    * "external writer lands data on a live table": unlike [[update]]'s
-    * dir rescan it cannot resurrect superseded copy-on-write files,
-    * because it never looks at files it didn't just create. */
   /** Wholesale COPY-ON-WRITE replacement of a PARTITION SET's
     * contents: `df` (whose rows must all fall in `replaceParts` — the
     * caller owns that containment) is appended as new immutable files,
@@ -359,27 +357,19 @@ object TableManifest {
     * Same interleave guard as [[mergeWriteManifested]]: the manifest
     * base is pinned first, so a concurrent publish is refused at the
     * flip and this call's appended files stay vacuumable orphans. */
-  /** `scopedMeta = false` skips the manifest publish's internal
-    * [[graft.ScopedSessionConf]] window: that window rides a global
-    * re-entrant lock, so a caller invoking this from a HELPER THREAD
-    * while the session's owning thread holds a scoped window (the
-    * streaming batch shape: store merges overlapped in futures inside
-    * the batch's shuffle-sizing scope) would deadlock — such callers
-    * already run the whole batch at micro sizing, so the inner window
-    * is redundant for them anyway. */
   def replacePartitions(spark: SparkSession, path: String, df: DataFrame,
                         keyCol: String, partitionCol: String,
                         replaceParts: Seq[Any],
                         retainVersions: Int = 2,
                         landingParts: Option[Seq[Any]] = None,
                         replaceFiles: Seq[String] = Nil,
-                        bloomKeys: Option[Seq[String]] = None,
-                        scopedMeta: Boolean = true): Unit = {
+                        bloomKeys: Option[Seq[String]] = None): Unit = {
+    val ms = graft.Sessions.meta(spark)
     val mBase = MergeUpsert.currentPlainVersion(spark, manifestPath(path))
     // first write BOOTSTRAPS (no manifest yet → nothing to drop):
     // replacePartitions doubles as the idempotent "this partition's
     // contents ARE this frame" writer (StreamCuration's epoch inserts)
-    val m = mBase.map(v => spark.read.parquet(s"${manifestPath(path)}/$v"))
+    val m = mBase.map(v => ms.read.parquet(s"${manifestPath(path)}/$v"))
       .orElse(load(spark, path))
     // only the dirs receiving NEW files need the before/after listing;
     // the dropped partitions are removed from the manifest by name.
@@ -396,55 +386,47 @@ object TableManifest {
     spark.catalog.refreshByPath(path)
     val newFiles =
       (listPartFiles(spark, path, partitionCol, landing) -- before).toSeq
-    // scopedMeta = false callers (helper threads — see the scaladoc)
-    // must not take the scoped-conf lock at all; they already run
-    // inside the batch's own micro-sized, AQE-off window
-    def metaScoped[T](f: => T): T =
-      if (scopedMeta) graft.ScopedSessionConf.withMetaConf(spark, 4)(f)
-      else f
-    metaScoped {
-      val dropped = replaceParts.map(_.toString)
-      // `replaceFiles` drops SPECIFIC superseded files (the epoch
-      // stores' per-file steal rewrite — file granularity, so a fired
-      // bloom never forces a whole-partition rewrite); strings match
-      // exactly because callers take them from this manifest's rows
-      val kept = m.map { old =>
-        val byPart = old.filter(!col("part").isin(dropped: _*))
-        if (replaceFiles.isEmpty) byPart
-        else byPart.filter(!col("file").isin(replaceFiles: _*))
-      }
-      val fresh =
-        if (newFiles.isEmpty) None
-        else Some(statsForFiles(spark, path, newFiles, partitionCol, keyCol,
-          bloomKeys))
-      // coalesce(1): a manifest version is metadata (one row per data
-      // file) and is re-read/collected on EVERY subsequent store read
-      // and probe — one file per version beats shuffle-partition-many
-      // KB-sized files at streaming cadence (r17; a 1e6-row manifest is
-      // still a single ~50 MB task, maintenance-scale)
-      (kept, fresh) match {
-        case (Some(k), Some(f)) =>
-          MergeUpsert.publishPlainFrom(spark, manifestPath(path),
-            k.unionByName(f).coalesce(1), retainVersions, mBase)
-        case (Some(k), None) =>
-          // nothing landed: publish only if the drop filters actually
-          // removed rows — an empty batch into an epoch store must be a
-          // no-op, not a version bump per tick (the probe is one
-          // limit(1) over the tiny manifest)
-          val dropsAnything = m.exists { old =>
-            !old.filter(col("part").isin(dropped: _*) ||
-                (if (replaceFiles.isEmpty) lit(false)
-                 else col("file").isin(replaceFiles: _*)))
-              .limit(1).isEmpty
-          }
-          if (dropsAnything)
-            MergeUpsert.publishPlainFrom(spark, manifestPath(path),
-              k.coalesce(1), retainVersions, mBase)
-        case (None, Some(f)) =>
-          MergeUpsert.publishPlainFrom(spark, manifestPath(path),
-            f.coalesce(1), retainVersions, mBase)
-        case (None, None) => () // empty df on an absent table: no-op
-      }
+    val dropped = replaceParts.map(_.toString)
+    // `replaceFiles` drops SPECIFIC superseded files (the epoch
+    // stores' per-file steal rewrite — file granularity, so a fired
+    // bloom never forces a whole-partition rewrite); strings match
+    // exactly because callers take them from this manifest's rows
+    val kept = m.map { old =>
+      val byPart = old.filter(!col("part").isin(dropped: _*))
+      if (replaceFiles.isEmpty) byPart
+      else byPart.filter(!col("file").isin(replaceFiles: _*))
+    }
+    val fresh =
+      if (newFiles.isEmpty) None
+      else Some(statsForFiles(ms, path, newFiles, partitionCol, keyCol,
+        bloomKeys))
+    // coalesce(1): a manifest version is metadata (one row per data
+    // file) and is re-read/collected on EVERY subsequent store read
+    // and probe — one file per version beats shuffle-partition-many
+    // KB-sized files at streaming cadence (r17; a 1e6-row manifest is
+    // still a single ~50 MB task, maintenance-scale)
+    (kept, fresh) match {
+      case (Some(k), Some(f)) =>
+        MergeUpsert.publishPlainFrom(ms, manifestPath(path),
+          k.unionByName(f).coalesce(1), retainVersions, mBase)
+      case (Some(k), None) =>
+        // nothing landed: publish only if the drop filters actually
+        // removed rows — an empty batch into an epoch store must be a
+        // no-op, not a version bump per tick (the probe is one
+        // limit(1) over the tiny manifest)
+        val dropsAnything = m.exists { old =>
+          !old.filter(col("part").isin(dropped: _*) ||
+              (if (replaceFiles.isEmpty) lit(false)
+               else col("file").isin(replaceFiles: _*)))
+            .limit(1).isEmpty
+        }
+        if (dropsAnything)
+          MergeUpsert.publishPlainFrom(ms, manifestPath(path),
+            k.coalesce(1), retainVersions, mBase)
+      case (None, Some(f)) =>
+        MergeUpsert.publishPlainFrom(ms, manifestPath(path),
+          f.coalesce(1), retainVersions, mBase)
+      case (None, None) => () // empty df on an absent table: no-op
     }
   }
 
@@ -457,33 +439,51 @@ object TableManifest {
     * batches), and a genuine reuse names exactly the files holding the
     * stolen keys. Returns (file, part) pairs.
     *
-    * ONE small job: the distinct probe-key hashes against the
-    * broadcast manifest bloom rows under a codegen'd membership
-    * condition (broadcast nested loop — per-pair cost is k map
-    * lookups). Rows without a bloom (legacy publishes) are
-    * always-maybe. `bloomKeys` must match the writes'. */
+    * The manifest's bloom rows (bounded by [[MaxPlanFiles]]) are
+    * collected from the metadata session first; the probe then runs on
+    * `probe`'s own session: the distinct probe-key hashes against
+    * those rows under a codegen'd membership condition (per-pair cost
+    * is k map lookups), as a nested loop over a one-partition local
+    * relation — replicated to the probe's tasks without a broadcast
+    * exchange, which would cost a job of its own. Rows without a bloom
+    * (legacy publishes) are always-maybe. `bloomKeys` must match the
+    * writes'. */
   def filesMaybeContaining(spark: SparkSession, path: String,
                            probe: DataFrame, bloomKeys: Seq[String])
       : Seq[(String, String)] =
     load(spark, path) match {
       case None => Seq.empty
       case Some(m) =>
-        val hashes = probe
-          .select(BloomFilter.keyHashCols(bloomKeys.map(col)).as("h_"))
+        val blooms =
+          if (m.columns.contains("key_bloom"))
+            m.select("file", "part", "bloom_m", "key_bloom")
+          else m.select(col("file"), col("part"),
+            lit(null).cast("long").as("bloom_m"),
+            lit(null).cast("array<bigint>").as("key_bloom"))
+        val rows = blooms.collect()
+        require(rows.length <= MaxPlanFiles,
+          s"${rows.length} manifest files — beyond the $MaxPlanFiles-file " +
+            "planning bound; compact the store")
+        val local = probe.sparkSession
+          .createDataFrame(java.util.Arrays.asList(rows: _*), blooms.schema)
+          .coalesce(1)
+        probe.select(BloomFilter.keyHashCols(bloomKeys.map(col)).as("h_"))
           .distinct()
-        val collected =
-          if (!m.columns.contains("key_bloom"))
-            m.select("file", "part").distinct()
-              .crossJoin(broadcast(hashes.limit(1))).select("file", "part")
-          else hashes.join(
-            broadcast(m.select("file", "part", "bloom_m", "key_bloom")),
+          .join(local.hint("shuffle_replicate_nl"),
             col("key_bloom").isNull ||
               BloomFilter.mightContainDyn(col("key_bloom"), col("h_"),
                 col("bloom_m"), BloomKeyK))
-            .select("file", "part").distinct()
-        collected.collect().map(r => (r.getString(0), r.getString(1))).toSeq
+          .select("file", "part").distinct()
+          .collect().map(r => (r.getString(0), r.getString(1))).toSeq
     }
 
+  /** Out-of-band APPEND with exact manifest registration: writes `df`
+    * as new files (no merge semantics — the caller owns key
+    * uniqueness) and registers EXACTLY the files it wrote, leaving
+    * every existing manifest row in place. This is the safe form of
+    * "external writer lands data on a live table": unlike [[update]]'s
+    * dir rescan it cannot resurrect superseded copy-on-write files,
+    * because it never looks at files it didn't just create. */
   def appendManifested(spark: SparkSession, path: String, df: DataFrame,
                        keyCol: String, partitionCol: String = "date",
                        retainVersions: Int = 2): Unit = {
@@ -499,17 +499,15 @@ object TableManifest {
     val newFiles =
       (listPartFiles(spark, path, partitionCol, touched) -- before).toSeq
     if (newFiles.isEmpty) return
-    // metadata-scale publish: see mergeWriteManifested's scoped block
-    graft.ScopedSessionConf.withMetaConf(spark, 4) {
-      val fresh = statsForFiles(spark, path, newFiles, partitionCol, keyCol)
-      val merged = load(spark, path) match {
-        case None => fresh
-        case Some(old) => old.unionByName(fresh)
-      }
-      // one file per manifest version (see replacePartitions)
-      MergeUpsert.publishPlainFrom(spark, manifestPath(path),
-        merged.coalesce(1), retainVersions, mBase)
+    val ms = graft.Sessions.meta(spark)
+    val fresh = statsForFiles(ms, path, newFiles, partitionCol, keyCol)
+    val merged = load(spark, path) match {
+      case None => fresh
+      case Some(old) => old.unionByName(fresh)
     }
+    // one file per manifest version (see replacePartitions)
+    MergeUpsert.publishPlainFrom(ms, manifestPath(path),
+      merged.coalesce(1), retainVersions, mBase)
   }
 
   /** Manifest-planned read of the given PARTITION values: keep only
@@ -586,21 +584,17 @@ object TableManifest {
     // silently unreferenced the interleaver's files. With base and
     // contents pinned to the same version, such an interleave is
     // refused at the flip instead (the publishPlainFrom contract).
+    val ms = graft.Sessions.meta(spark)
     val mBase = MergeUpsert.currentPlainVersion(spark, manifestPath(path))
-    val m = mBase.map(v => spark.read.parquet(s"${manifestPath(path)}/$v"))
+    val m = mBase.map(v => ms.read.parquet(s"${manifestPath(path)}/$v"))
       .orElse(load(spark, path)) // legacy flat manifest: no guard possible
       .getOrElse(sys.error(s"no manifest at $path — call update() first"))
-    // metadata actions at meta sizing (see mergeWriteManifested)
-    val (filesBefore, overParts) =
-      graft.ScopedSessionConf.withMetaConf(spark, 4) {
-        val fb = m.count()
-        // over-threshold partitions found DISTRIBUTED from the manifest;
-        // only their names (bounded by partition count) reach the driver
-        val op = m.groupBy("part").agg(count(lit(1)).as("nf"))
-          .filter(col("nf") > maxFilesPerPart)
-          .select("part").collect().map(_.getString(0)).toSeq
-        (fb, op)
-      }
+    val filesBefore = m.count()
+    // over-threshold partitions found DISTRIBUTED from the manifest;
+    // only their names (bounded by partition count) reach the driver
+    val overParts = m.groupBy("part").agg(count(lit(1)).as("nf"))
+      .filter(col("nf") > maxFilesPerPart)
+      .select("part").collect().map(_.getString(0)).toSeq
     if (overParts.isEmpty)
       return CompactReport(0, filesBefore, filesBefore)
     val files = keptFiles(m, overParts)
@@ -621,25 +615,19 @@ object TableManifest {
       (listPartFiles(spark, path, partitionCol, overParts) -- before).toSeq
     // replace exactly the compacted partitions' manifest rows with the
     // new files' stats; the partition values re-enter statsForFiles in
-    // their DECODED string form
-    // metadata-scale publish: see mergeWriteManifested's scoped block
-    // (the DATA rewrite above deliberately stays at the session's
-    // shuffle sizing AND keeps AQE — it is table-scale work)
-    graft.ScopedSessionConf.withMetaConf(spark, 4) {
-      val fresh = statsForFiles(spark, path, newFiles, partitionCol,
-        zoneKey.getOrElse(keyCol))
-      val merged = m.filter(!col("part").isin(overParts: _*))
-        .unionByName(fresh)
-      MergeUpsert.publishPlainFrom(spark, manifestPath(path), merged,
-        retainVersions, mBase)
-    }
+    // their DECODED string form. The DATA rewrite above stays on the
+    // caller's session (table-scale work keeps its sizing and AQE)
+    val fresh = statsForFiles(ms, path, newFiles, partitionCol,
+      zoneKey.getOrElse(keyCol))
+    val merged = m.filter(!col("part").isin(overParts: _*))
+      .unionByName(fresh)
+    MergeUpsert.publishPlainFrom(ms, manifestPath(path), merged,
+      retainVersions, mBase)
     // filesAfter is MEASURED from the refreshed manifest (one row per
     // file), not derived from a one-file-per-partition assumption a
     // writer setting like maxRecordsPerFile could break
     CompactReport(overParts.size, filesBefore,
-      graft.ScopedSessionConf.withMetaConf(spark, 4) {
-        load(spark, path).map(_.count()).getOrElse(0L)
-      })
+      load(spark, path).map(_.count()).getOrElse(0L))
   }
 
   /** The manifest's retained version names (oldest first) — the
@@ -659,12 +647,12 @@ object TableManifest {
   def readVersion(spark: SparkSession, path: String,
                   version: String,
                   partitionCol: String = "date"): DataFrame = {
-    val mv = MergeUpsert.readPlainVersion(spark, manifestPath(path), version)
+    val mv = MergeUpsert.readPlainVersion(graft.Sessions.meta(spark),
+      manifestPath(path), version)
     // file count = manifest row count: decide the plan shape BEFORE
     // any driver materialization (r15 — the old gate collected the
-    // list first, then threw past MaxPlanFiles). Meta sizing: the
-    // count's one exchange must not cost an AQE stage job
-    val nFiles = graft.ScopedSessionConf.withMetaConf(spark, 4)(mv.count())
+    // list first, then threw past MaxPlanFiles)
+    val nFiles = mv.count()
     require(nFiles > 0,
       s"manifest version $version of $path lists no files")
     if (nFiles > MaxPlanFiles)
@@ -710,14 +698,13 @@ object TableManifest {
   def readVersionAll(spark: SparkSession, path: String,
                      version: String,
                      partitionCol: String = "date"): DataFrame = {
-    val mv = MergeUpsert.readPlainVersion(spark, manifestPath(path), version)
+    val mv = MergeUpsert.readPlainVersion(graft.Sessions.meta(spark),
+      manifestPath(path), version)
     // ONE metadata action serves the part list, the partition-column
     // derivation AND the gate inside readVersionPartitionsImpl (r16
     // verdict task 2: the gate used to re-collect the same distinct
     // plus a file probe — two extra Spark jobs per versioned read)
-    val sampled = graft.ScopedSessionConf.withMetaConf(spark, 4) {
-      mv.groupBy("part").agg(min(col("file")).as("f")).collect()
-    }
+    val sampled = mv.groupBy("part").agg(min(col("file")).as("f")).collect()
     val parts = sampled.map(_.getString(0)).toSeq
     // the version's own paths name the partition column — prefer that
     // over the caller's default (r15 advice: a wrong default built
@@ -772,8 +759,9 @@ object TableManifest {
                                         pcDerived: Option[String])
       : DataFrame = {
     require(parts.nonEmpty, "readVersionPartitions needs >= 1 partition")
+    val ms = graft.Sessions.meta(spark)
     val mv = MergeUpsert
-      .readPlainVersion(spark, manifestPath(path), version)
+      .readPlainVersion(ms, manifestPath(path), version)
       .filter(col("part").isin(parts.map(_.toString): _*))
     val fs = MergeUpsert.fsFor(spark, path)
     val dirs = parts
@@ -789,9 +777,7 @@ object TableManifest {
     // when the caller passed the set through).
     locally {
       val refd = referencedParts.getOrElse(
-        graft.ScopedSessionConf.withMetaConf(spark, 4) {
-          mv.select("part").distinct().collect().map(_.getString(0)).toSet
-        })
+        mv.select("part").distinct().collect().map(_.getString(0)).toSet)
       val missing = parts.map(_.toString).filter(refd)
         .filterNot(v => fs.exists(
           new org.apache.hadoop.fs.Path(partDir(path, partitionCol, v))))
@@ -817,10 +803,14 @@ object TableManifest {
       // schema from ONE referenced file of the version (or the live
       // manifest when the subset is empty in this version too)
       return readFiles(spark, path,
-        MergeUpsert.readPlainVersion(spark, manifestPath(path), version),
+        MergeUpsert.readPlainVersion(ms, manifestPath(path), version),
         Seq.empty)
-    val referenced = mv.select(canonCol(col("file")).as("cfile_"))
-      .distinct()
+    // the semi join's side: the same version rows re-read on `spark`
+    // (the returned plan's session) under the schema already inferred
+    val referenced = spark.read.schema(mv.schema)
+      .parquet(s"${manifestPath(path)}/$version")
+      .filter(col("part").isin(parts.map(_.toString): _*))
+      .select(canonCol(col("file")).as("cfile_")).distinct()
     spark.read.option("basePath", path).parquet(dirs: _*)
       // input_file_name() is the URI-encoded form; the manifest holds
       // the decoded path — decode then canonicalize BOTH sides (the
@@ -843,7 +833,7 @@ object TableManifest {
                    vOld: String, vNew: String): DataFrame = {
     val mp = manifestPath(path)
     def side(v: String, p: String) =
-      MergeUpsert.readPlainVersion(spark, mp, v)
+      MergeUpsert.readPlainVersion(graft.Sessions.meta(spark), mp, v)
         .groupBy("part")
         .agg(count(lit(1)).as(s"${p}files"),
           sum(col("rows")).as(s"${p}rows"),
@@ -943,13 +933,16 @@ object TableManifest {
     // scoped: the global we-still-reference-SOMETHING guard must look
     // at the whole manifest (a legitimately dead partition has zero
     // live files of its own), then the live set narrows to the scope
-    val liveAll = keep.map(v =>
-        MergeUpsert.readPlainVersion(spark, mp, v).select("file", "part"))
+    // (read on the metadata session for the driver-side gates, on
+    // `spark` where the distributed path joins it with the listing)
+    def liveAllOn(s: SparkSession) = keep.map(v =>
+        MergeUpsert.readPlainVersion(s, mp, v).select("file", "part"))
       .reduce(_.unionByName(_))
-    val live = scope.map { case (_, parts) =>
-        liveAll.filter(col("part").isin(parts.map(_.toString): _*))
-      }.getOrElse(liveAll)
+    def live(all: DataFrame) = scope.map { case (_, parts) =>
+        all.filter(col("part").isin(parts.map(_.toString): _*))
+      }.getOrElse(all)
       .select(canonCol(col("file")).as("cfile")).distinct()
+    val liveAll = liveAllOn(graft.Sessions.meta(spark))
     // candidates: parquet files under the FIRST-LEVEL partition dirs
     // (the only place this format writes data); `_manifest`, pointer
     // files and job markers are never candidates. Unscoped, the dir
@@ -984,10 +977,8 @@ object TableManifest {
       }
       if (candPaths.size <= VacuumDriverMaxFiles) {
         // metadata-scale distinct: a handful of manifest versions,
-        // bounded rows — 4 shuffle partitions + no AQE stage jobs
-        val liveSet = graft.ScopedSessionConf.withMetaConf(spark, 4) {
-          live.collect()
-        }.map(_.getString(0)).toSet
+        // bounded rows
+        val liveSet = live(liveAll).collect().map(_.getString(0)).toSet
         require(liveSet.size <= MaxPlanFiles,
           s"${liveSet.size} live files referenced by a " +
             s"${candPaths.size}-file table — manifest inconsistent")
@@ -1026,7 +1017,8 @@ object TableManifest {
     // ONE shuffle decides everything: live-but-missing (refuse),
     // dead-on-disk (delete), live count (report)
     val joined = cands
-      .join(live.withColumn("live", lit(true)), Seq("cfile"), "full_outer")
+      .join(live(liveAllOn(spark)).withColumn("live", lit(true)),
+        Seq("cfile"), "full_outer")
       .persist()
     try {
       val stats = joined.agg(
@@ -1122,7 +1114,7 @@ object TableManifest {
     require(kept.length <= MaxPlanFiles,
       s"${kept.length} files survive zone pruning — beyond the " +
         s"$MaxPlanFiles-file planning bound; compact the table")
-    val total = graft.ScopedSessionConf.withMetaConf(spark, 4)(m.count())
+    val total = m.count()
     val df = readFiles(spark, path, m, kept.toIndexedSeq)
     val exact = partVal match {
       case Some(v) =>
@@ -1172,42 +1164,34 @@ object TableManifest {
       case None => m
     }
     // the export is MANIFEST rows (one line per data file) — metadata
-    // scale end to end, so the whole body runs in the meta window (no
-    // AQE stage jobs; the repartition/distinct exchanges move file-path
-    // strings, bounded by MaxPlanFiles)
-    graft.ScopedSessionConf.withMetaConf(spark, 4) {
-      val rows = scoped.select(col("file").as("value"),
-        col("part").as(partitionCol)).cache()
-      val n = rows.count()
-      parts match {
-        case None =>
-          rows.repartition(col(partitionCol))
-            .write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
-            .text(out)
-        case Some(ps) =>
-          if (n > 0)
-            // dynamic overwrite: only partitions present in `rows` are
-            // replaced; the untouched ones keep their existing exports
-            graft.ScopedSessionConf.withConf(spark,
-              "spark.sql.sources.partitionOverwriteMode", "dynamic") {
-              rows.repartition(col(partitionCol))
-                .write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
-                .text(out)
-            }
-          // requested partitions that no longer hold live files: remove
-          // their export dirs (the writer above never visits them)
-          val live = rows.select(col(partitionCol)).distinct()
-            .collect().map(_.getString(0)).toSet
-          val fs = MergeUpsert.fsFor(spark, out)
-          ps.map(_.toString).filterNot(live).foreach { v =>
-            fs.delete(
-              new org.apache.hadoop.fs.Path(partDir(out, partitionCol, v)),
-              true)
-          }
-      }
-      rows.unpersist()
-      n
+    // scale end to end, so the whole body runs on the metadata session
+    // (the repartition/distinct exchanges move file-path strings,
+    // bounded by MaxPlanFiles)
+    val rows = scoped.select(col("file").as("value"),
+      col("part").as(partitionCol)).cache()
+    val n = rows.count()
+    val writer = rows.repartition(col(partitionCol))
+      .write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
+    parts match {
+      case None => writer.text(out)
+      case Some(ps) =>
+        // dynamic overwrite: only partitions present in `rows` are
+        // replaced; the untouched ones keep their existing exports
+        if (n > 0)
+          writer.option("partitionOverwriteMode", "dynamic").text(out)
+        // requested partitions that no longer hold live files: remove
+        // their export dirs (the writer above never visits them)
+        val live = rows.select(col(partitionCol)).distinct()
+          .collect().map(_.getString(0)).toSet
+        val fs = MergeUpsert.fsFor(spark, out)
+        ps.map(_.toString).filterNot(live).foreach { v =>
+          fs.delete(
+            new org.apache.hadoop.fs.Path(partDir(out, partitionCol, v)),
+            true)
+        }
     }
+    rows.unpersist()
+    n
   }
 
   /** Incremental export maintenance: re-export ONLY the partitions a
@@ -1226,11 +1210,9 @@ object TableManifest {
   def refreshSymlinkExport(spark: SparkSession, path: String,
                            out: String, vOld: String, vNew: String,
                            partitionCol: String = "date"): Long = {
-    val changed = graft.ScopedSessionConf.withMetaConf(spark, 4) {
-      diffVersions(spark, path, vOld, vNew)
-        .filter(col("status") =!= "carried")
-        .select("part").collect().map(_.getString(0)).toSeq
-    }
+    val changed = diffVersions(spark, path, vOld, vNew)
+      .filter(col("status") =!= "carried")
+      .select("part").collect().map(_.getString(0)).toSeq
     if (changed.isEmpty) 0L
     else exportSymlinkManifest(spark, path, out, partitionCol,
       Some(changed))

@@ -181,16 +181,11 @@ object StreamCuration {
           .join(probe, keys, "left_anti")
         stamped.unionByName(victims)
       }
-    // scopedMeta = false: this merge runs from curateBatch's OVERLAPPED
-    // futures while the batch thread holds the ScopedSessionConf lock —
-    // the inner metadata window would deadlock, and the whole batch
-    // already runs at micro shuffle sizing (the window's only point)
     TableManifest.replacePartitions(spark, path, df, keys.head, epochCol,
       replaceParts = Seq(epochStr),
       landingParts = Some((epochStr +: firing.map(_._2)).distinct),
       replaceFiles = firing.map(_._1),
-      bloomKeys = Some(keys),
-      scopedMeta = false)
+      bloomKeys = Some(keys))
   }
 
   /** Drain all currently-available document files, curating
@@ -601,9 +596,7 @@ object StreamCuration {
     // is a micro-batch-sized join), so it runs width-wide and
     // materializes BEFORE the pairs merge — the merge round-trip then
     // moves only slim verified rows. Same-thread nesting of the scoped
-    // conf restores outside-in; the background merges above read
-    // whatever sizing is current when they plan, which is harmless for
-    // their metadata-scale stages. Micro-batches keep the lazy narrow
+    // conf restores outside-in. Micro-batches keep the lazy narrow
     // verify (one fewer materialization round).
     // verified is consumed twice (pairs merge + label edges); the
     // micro path COLLECTS it (pairs are candidate-verified near-dups —
@@ -792,9 +785,7 @@ object StreamCuration {
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField(name,
             org.apache.spark.sql.types.LongType))))
-    // deletes merge overlaps (plain store, lock-free); the inserts
-    // replace stays on the caller thread (it takes the
-    // ScopedSessionConf lock this thread already holds re-entrantly)
+    // the deletes merge overlaps the inserts replace below
     val fDels: Future[Unit] =
       if (lostKeep.isEmpty) Future.successful(())
       else Future {

@@ -52,8 +52,6 @@ object StreamJoin {
                                watermarkDelay: String = "1 hour",
                                maxFilesPerTrigger: Int = 0,
                                shufflePartitions: Int = 0): StreamingQuery = {
-    val spKey = "spark.sql.shuffle.partitions"
-    val prevSp = spark.conf.get(spKey)
     def side(glob: String, tag: String): DataFrame = {
       val rd = spark.readStream.schema(schema)
       if (maxFilesPerTrigger > 0)
@@ -79,8 +77,7 @@ object StreamJoin {
       .select(col("a_key").as(key), col("a_id"), col("b_id"),
         unix_millis(col("a_ts")).as("a_ms"),
         unix_millis(col("b_ts")).as("b_ms"))
-    if (shufflePartitions > 0) spark.conf.set(spKey, shufflePartitions)
-    try {
+    graft.ScopedSessionConf.withShufflePartitions(spark, shufflePartitions) {
       val q = joined.writeStream
         .format("parquet")
         .option("path", targetPath)
@@ -89,7 +86,7 @@ object StreamJoin {
         .start()
       q.awaitTermination()
       q
-    } finally if (shufflePartitions > 0) spark.conf.set(spKey, prevSp)
+    }
   }
 
   /** Read the joined table back through the sink's commit log. */

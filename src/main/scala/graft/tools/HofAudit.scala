@@ -181,7 +181,7 @@ object HofAudit {
       f"ratio=${tb2 / tb1}%4.2fx (linear <= ~2x; files=${nb1._1},${nb2._1})")
 
     // ---- the probe side (filesMaybeContaining's condition): batch key
-    //      hashes x broadcast bloom rows under mightContainDyn — all
+    //      hashes x replicated bloom rows under mightContainDyn — all
     //      builtins, absolute cost only, like x174scan ----
     val (tbp, nbp) = {
       import graft.operators.BloomFilter
@@ -202,11 +202,11 @@ object HofAudit {
         .localCheckpoint()
       blooms.count()
       // 10k-key batch probed against every file's bloom (the
-      // filesMaybeContaining shape: distinct hashes x broadcast rows)
+      // filesMaybeContaining shape: hashes x one-partition bloom rows)
       val probe = spark.range(1L << 40, (1L << 40) + 10000)
         .select(xxhash64(col("id")).bitwiseAND(lit(Long.MaxValue)).as("h_"))
       time {
-        probe.join(broadcast(blooms),
+        probe.join(blooms.coalesce(1).hint("shuffle_replicate_nl"),
             BloomFilter.mightContainDyn(col("key_bloom"), col("h_"),
               col("bloom_m"), 16))
           .agg(count(lit(1)), coalesce(sum(col("file")), lit(0L)))

@@ -278,7 +278,8 @@ object MergeStress {
             i += 1
           }
         }
-      val real = TableManifest.load(spark, path).get
+      // read on `spark`, not via load(): it is unioned with `spark` frames
+      val real = MergeUpsert.readPlain(spark, s"$path/_manifest")
         .filter(!col("part").startsWith("2200-")).localCheckpoint()
       val synthRows = spark.range(nFiles).select(
         synthFile.as("file"),
@@ -354,7 +355,7 @@ object MergeStress {
         (col("id") % 7).cast("int").as("total_beds"))
       TableManifest.mergeWriteManifested(spark, path, base,
         Seq("date", "region_id"), zoneKey = Some("region_id"))
-      val real = TableManifest.load(spark, s"$work/bigmanifest").get
+      val real = MergeUpsert.readPlain(spark, s"$path/_manifest")
       val aRealFile = real.select("file").collect().head.getString(0)
       val synth = spark.range(100000L).select(
         lit(aRealFile).as("file"),

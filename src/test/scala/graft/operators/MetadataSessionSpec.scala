@@ -1,0 +1,162 @@
+package graft.operators
+
+import graft.SparkSpec
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
+
+/** Manifest metadata work runs on its own session
+  * ([[graft.Sessions.meta]]): its sizing never shows through the data
+  * session's conf, it still sees the data session's runtime conf, and
+  * it never leaves itself as the caller's active session. */
+class MetadataSessionSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def tmpDir(): String =
+    java.nio.file.Files.createTempDirectory("graft-metasession").toString +
+      "/t"
+
+  /** Runs `f` and checks the calling thread's active session is still
+    * the data session afterwards. */
+  private def onData[T](what: String)(f: => T): T = {
+    val r = f
+    assert(SparkSession.active eq spark,
+      s"$what left ${SparkSession.active} active")
+    r
+  }
+
+  private def withConfs[T](kvs: (String, String)*)(f: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("one metadata session per data session, pinned once, data conf " +
+    "untouched") {
+    val ms = graft.Sessions.meta(spark)
+    assert(ms ne spark)
+    assert(graft.Sessions.meta(spark) eq ms, "created once and reused")
+    assert(ms.sparkContext eq spark.sparkContext)
+    assert(ms.conf.get("spark.sql.adaptive.enabled") == "false")
+    assert(ms.conf.get("spark.sql.shuffle.partitions") == "4")
+    withConfs("spark.sql.shuffle.partitions" -> "7") {
+      assert(graft.Sessions.meta(spark).conf
+        .get("spark.sql.shuffle.partitions") == "4")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "7")
+    }
+    assert(!spark.conf.getAll.get("spark.sql.adaptive.enabled")
+      .contains("false"))
+  }
+
+  test("metadata session carries the data session's runtime conf: " +
+    "timestamp zones and lookups under a non-UTC zone set at runtime") {
+    SparkSession.setActiveSession(spark)
+    withConfs("spark.sql.session.timeZone" -> "America/Los_Angeles") {
+      val path = tmpDir()
+      // 01:30 Pacific, half an hour before the DST switch
+      val t0 = java.sql.Timestamp.from(
+        java.time.Instant.parse("2024-03-10T09:30:00Z"))
+      val evs = (0 until 40).map { i =>
+        (new java.sql.Timestamp(t0.getTime + i * 1800L * 1000L),
+          if (i < 20) "2024-03-10" else "2024-03-11", i.toDouble)
+      }.toDF("k", "date", "value")
+      onData("mergeWriteManifested") {
+        TableManifest.mergeWriteManifested(spark, path, evs, keys = Seq("k"))
+      }
+      onData("appendManifested") {
+        TableManifest.appendManifested(spark, path,
+          Seq((new java.sql.Timestamp(t0.getTime - 3600L * 1000L),
+            "2024-03-09", -1.0)).toDF("k", "date", "value"), "k")
+      }
+      // the zones as the DATA session renders the key
+      val expected = onData("readViaManifest") {
+        TableManifest.readViaManifest(spark, path)
+      }.groupBy(col("date").cast("string").as("part"))
+        .agg(min(col("k")).cast("string").as("lo"),
+          max(col("k")).cast("string").as("hi"))
+        .as[(String, String, String)].collect().toSet
+      val zones = onData("load") {
+        TableManifest.load(spark, path).get
+          .select("part", "key_lo", "key_hi")
+          .as[(String, String, String)].collect().toSet
+      }
+      assert(zones == expected)
+      assert(zones.contains(("2024-03-09", "2024-03-10 00:30:00",
+        "2024-03-10 00:30:00")),
+        s"zones must render in the runtime zone, got $zones")
+
+      val lo = new java.sql.Timestamp(t0.getTime + 3 * 1800L * 1000L)
+      val hi = new java.sql.Timestamp(t0.getTime + 24 * 1800L * 1000L)
+      val (hit, rep) = onData("lookup") {
+        TableManifest.lookup(spark, path, "k", lo, hi)
+      }
+      val want = spark.read.parquet(path)
+        .filter(col("k").between(lit(lo), lit(hi)))
+        .select("k", "value").as[(java.sql.Timestamp, Double)]
+        .collect().toSet
+      assert(hit.select("k", "value").as[(java.sql.Timestamp, Double)]
+        .collect().toSet == want)
+      assert(want.size == 22 && rep.filesKept < rep.filesTotal)
+
+      val parts = onData("readPartitions") {
+        TableManifest.readPartitions(spark, path, Seq("2024-03-11"))
+      }
+      assert(parts.count() == 20)
+      val v = TableManifest.versions(spark, path)
+      onData("diffVersions") {
+        TableManifest.diffVersions(spark, path, v.head, v.last).collect()
+      }
+      onData("readVersion") {
+        TableManifest.readVersion(spark, path, v.head).count()
+      }
+      onData("compactManifested") {
+        TableManifest.compactManifested(spark, path, "k")
+      }
+      onData("exportSymlinkManifest") {
+        TableManifest.exportSymlinkManifest(spark, path, tmpDir())
+      }
+      onData("vacuum")(TableManifest.vacuum(spark, path, keepVersions = 1))
+    }
+  }
+
+  test("a data query on another thread never sees metadata sizing while " +
+    "vacuum, compactManifested and exportSymlinkManifest run") {
+    withConfs("spark.sql.shuffle.partitions" -> "7") {
+      val path = tmpDir()
+      def day(d: String, ids: Range) =
+        ids.map(i => (i.toLong, d, i.toDouble)).toDF("id", "date", "value")
+      TableManifest.mergeWriteManifested(spark, path,
+        day("2024-01-01", 0 until 50).unionByName(day("2024-01-02", 50 until 90)),
+        keys = Seq("id"))
+      val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+      @volatile var done = false
+      @volatile var failure: Option[Throwable] = None
+      val meta = new Thread(() => try {
+        (0 until 3).foreach { r =>
+          TableManifest.appendManifested(spark, path,
+            day("2024-01-01", (1000 + r * 10) until (1005 + r * 10)), "id")
+          TableManifest.compactManifested(spark, path, "id")
+          TableManifest.exportSymlinkManifest(spark, path, tmpDir())
+          TableManifest.vacuum(spark, path, keepVersions = 1)
+        }
+      } catch { case t: Throwable => failure = Some(t) }
+      finally done = true)
+      meta.start()
+      var samples = 0L
+      while (!done) {
+        seen.add(spark.conf.get("spark.sql.adaptive.enabled") + "/" +
+          spark.conf.get("spark.sql.shuffle.partitions"))
+        samples += 1
+      }
+      meta.join()
+      failure.foreach(throw _)
+      assert(samples > 0)
+      assert(seen.asScala == Set("true/7"),
+        s"data session conf changed under metadata work: $seen")
+      assert(TableManifest.readViaManifest(spark, path).count() == 105L)
+    }
+  }
+}

@@ -108,4 +108,30 @@ class StreamJoinSpec extends SparkSpec {
     assert(stateRows > 0 && stateRows <= 2,
       s"state should hold only the unevictable tail, got $stateRows")
   }
+
+  test("scoped shuffle partitions leave the session conf as found, " +
+    "an unset key included") {
+    val work = mkWork("graft-sjoin-conf")
+    writeArrival(work, "a", "f0", Seq((1L, 10L, ns(0))))
+    writeArrival(work, "b", "f0", Seq((101L, 10L, ns(100))))
+    def drain(tag: String) = StreamJoin.intervalJoinAvailableNow(spark,
+      s"$work/a", s"$work/b", schema, "user_id", "event_id", "ts",
+      boundMs = 1000, s"$work/out-$tag", s"$work/cp-$tag",
+      shufflePartitions = 2)
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.getAll.get(key)
+    try {
+      val before = spark.conf.getAll
+      drain("set")
+      val keptSet = spark.conf.getAll == before
+      assert(keptSet, s"conf changed: ${spark.conf.getAll.toSet -- before}")
+      spark.conf.unset(key)
+      val unset = spark.conf.getAll
+      assert(!unset.contains(key))
+      drain("unset")
+      val keptUnset = spark.conf.getAll == unset
+      assert(keptUnset,
+        s"restored as ${spark.conf.getAll.get(key)}, expected unset")
+    } finally prev.foreach(spark.conf.set(key, _))
+  }
 }
