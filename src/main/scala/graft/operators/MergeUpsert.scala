@@ -12,17 +12,23 @@ import org.apache.spark.sql.functions._
   * has no MERGE, so we implement it as a distributed algorithm over
   * builtins — no driver materialization, no custom physical operator.
   *
-  * Scale design (100 TB):
-  *   - `merge` uses `updates`-deduped ∪ (existing ⟕anti updates-keys).
-  *     The anti join probes existing rows against only the DISTINCT KEYS
-  *     of the update batch — typically tiny (one ingest file) → Catalyst
-  *     broadcasts it and the existing table is NEVER shuffled. Compare the
-  *     naive union+window form, which shuffles the full table on every
-  *     merge.
-  *   - `mergeWrite` additionally prunes by partition: only the date
-  *     partitions present in the update batch are read, merged, and
-  *     rewritten (dynamic partition overwrite). A day's upsert into a
-  *     100 TB table touches one day's partitions, not the table.
+  * Scale design (100 TB): `merge` uses `updates`-deduped ∪ (existing
+  * ⟕anti updates-keys). The anti join probes existing rows against only
+  * the DISTINCT KEYS of the update batch — typically tiny (one ingest
+  * file) → Catalyst broadcasts it and the existing table is NEVER
+  * shuffled. Compare the naive union+window form, which shuffles the
+  * full table on every merge.
+  *
+  * Two table layouts ride this merge:
+  *   - the plain versioned store ([[mergeWritePlain]] and friends): a
+  *     small unpartitioned table, each publish a whole new version dir
+  *     behind the `_CURRENT` pointer;
+  *   - the date-partitioned fact table, written only by
+  *     [[TableManifest.mergeWriteManifested]]: the batch's touched
+  *     dates are read from the manifest's file list, merged, and
+  *     appended as new files, and one manifest publish makes them live.
+  *     A day's upsert into a 100 TB table touches one day's files, not
+  *     the table.
   */
 object MergeUpsert {
 
@@ -55,8 +61,8 @@ object MergeUpsert {
     // written. For a backfill-scale batch (millions of keys) a forced
     // broadcast inverts into the bottleneck — callers that know they're
     // backfilling pass broadcastKeys = false for a plain shuffle join
-    // (mergeWrite flips this automatically off the batch's estimated
-    // distinct-key count).
+    // (TableManifest.mergeWriteManifested flips this automatically off
+    // the batch's estimated distinct-key count).
     val distinctKeys = deduped.select(keyCols: _*).distinct()
     val updateKeys = if (broadcastKeys) broadcast(distinctKeys) else distinctKeys
     val survivors = existing.join(updateKeys, keys, "left_anti")
@@ -95,8 +101,8 @@ object MergeUpsert {
                               updates: DataFrame, keys: Seq[String],
                               sumCols: Seq[String],
                               retainVersions: Int = 2): Unit = {
-    val (cur, legacyFlat, base) = resolveBase(spark, path)
-    val merged = base match {
+    val cur = currentPlainVersion(spark, path)
+    val merged = cur.map(v => spark.read.parquet(s"$path/$v")) match {
       case Some(existing) =>
         // additive semantics are defined over keys ++ sumCols ONLY;
         // silently projecting a wider store onto them would PUBLISH the
@@ -111,7 +117,7 @@ object MergeUpsert {
         val aggs = sumCols.map(c => sum(col(c)).as(c))
         updates.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
     }
-    publishVersion(spark, path, merged, retainVersions, cur, legacyFlat)
+    publishVersion(spark, path, merged, retainVersions, cur)
   }
 
   /** Retention-prune a versioned plain store OUTSIDE the publish path:
@@ -203,44 +209,22 @@ object MergeUpsert {
     * the protocol Delta/Iceberg implement with a transaction log,
     * reduced to its minimal pointer form. Single-writer, like the
     * reference's ingest — concurrent writers would need a lock service.
-    *
-    * A legacy flat table (parquet files directly at `path`, no pointer)
-    * is read as the merge base on first call, left untouched until the
-    * new version is live, then cleaned best-effort. For large facts
-    * prefer `mergeWrite` (partition-pruned rewrite). */
+    * For date-partitioned facts use
+    * [[TableManifest.mergeWriteManifested]] (touched-partition rewrite). */
   def mergeWritePlain(spark: SparkSession, path: String, updates: DataFrame,
                       keys: Seq[String], retainVersions: Int = 2): Unit = {
-    val (cur, legacyFlat, base) = resolveBase(spark, path)
-    val merged = base match {
+    val cur = currentPlainVersion(spark, path)
+    val merged = cur.map(v => spark.read.parquet(s"$path/$v")) match {
       case Some(existing) => merge(existing, updates, keys)
       case None => updates.dropDuplicates(keys)
     }
-    publishVersion(spark, path, merged, retainVersions, cur, legacyFlat)
+    publishVersion(spark, path, merged, retainVersions, cur)
   }
 
-  /** The ONE place the merge-base protocol lives: the live version if
-    * published, else a legacy flat table if present, else nothing.
-    * Every writer that builds on the store's current contents must
-    * route through this (or [[existingPlain]]) — checking only
-    * `currentPlainVersion` treats a legacy flat store as empty, and
-    * the subsequent publish's legacy cleanup would then DELETE the
-    * flat files it never read. */
-  private def resolveBase(spark: SparkSession, path: String)
-      : (Option[String], Boolean, Option[DataFrame]) = {
-    val fs = fsFor(spark, path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val cur = currentPlainVersion(spark, path)
-    val legacyFlat = cur.isEmpty && hasFlatParquet(fs, p)
-    val base =
-      cur.map(v => spark.read.parquet(s"$path/$v"))
-        .orElse(if (legacyFlat) Some(spark.read.parquet(path)) else None)
-    (cur, legacyFlat, base)
-  }
-
-  /** The store's current contents (versioned or legacy flat), if any —
-    * the safe existence check for external incremental writers. */
+  /** The store's live version, if one is published — the existence
+    * check for external incremental writers. */
   def existingPlain(spark: SparkSession, path: String): Option[DataFrame] =
-    resolveBase(spark, path)._3
+    currentPlainVersion(spark, path).map(v => spark.read.parquet(s"$path/$v"))
 
   /** Atomic full-table publish: write `df` as a new immutable version
     * and flip the `_CURRENT` pointer — the whole-table-replace analogue
@@ -251,13 +235,9 @@ object MergeUpsert {
     * keyed upsert cannot express (upserts never delete). Readers keep
     * the same [[readPlain]] protocol and retention window. */
   def publishPlain(spark: SparkSession, path: String, df: DataFrame,
-                   retainVersions: Int = 2): Unit = {
-    val fs = fsFor(spark, path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val cur = currentPlainVersion(spark, path)
-    publishVersion(spark, path, df, retainVersions, cur,
-      cur.isEmpty && hasFlatParquet(fs, p))
-  }
+                   retainVersions: Int = 2): Unit =
+    publishVersion(spark, path, df, retainVersions,
+      currentPlainVersion(spark, path))
 
   /** [[publishPlain]] with the caller's BASE version pinned: `baseCur`
     * is the live version the caller read when it started computing
@@ -270,16 +250,12 @@ object MergeUpsert {
     * merge start, publish through this. */
   def publishPlainFrom(spark: SparkSession, path: String, df: DataFrame,
                        retainVersions: Int,
-                       baseCur: Option[String]): Unit = {
-    val fs = fsFor(spark, path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    publishVersion(spark, path, df, retainVersions, baseCur,
-      baseCur.isEmpty && hasFlatParquet(fs, p))
-  }
+                       baseCur: Option[String]): Unit =
+    publishVersion(spark, path, df, retainVersions, baseCur)
 
-  /** Shared publish core: version write, pointer flip, GC. `cur` and
-    * `legacyFlat` are the caller's already-resolved filesystem state
-    * (one pointer read + listing per publish, not two).
+  /** Shared publish core: version write, pointer flip, GC. `cur` is the
+    * caller's already-resolved live version (one pointer read per
+    * publish, not two).
     *
     * CONCURRENCY GUARD (read-check-flip): just before the pointer
     * flip, the live version is re-resolved; if it moved past `cur` —
@@ -296,15 +272,14 @@ object MergeUpsert {
     * error. Package-private for the two-writer interleaving spec. */
   private[operators] def publishVersion(spark: SparkSession, path: String,
                              df: DataFrame, retainVersions: Int,
-                             cur: Option[String],
-                             legacyFlat: Boolean): Unit = {
+                             cur: Option[String]): Unit = {
     require(retainVersions >= 2,
       s"retainVersions must keep at least the live version plus one " +
         s"superseded version for in-flight readers, got $retainVersions")
     val fs = fsFor(spark, path)
     val p = new org.apache.hadoop.fs.Path(path)
-    // ONE pre-write listing serves nextN, orphan GC, tmp GC and legacy
-    // cleanup (LIST is a billable RPC at streaming cadence): under
+    // ONE pre-write listing serves nextN, orphan GC and tmp GC (LIST is
+    // a billable RPC at streaming cadence): under
     // single-writer, the only entries created between this listing and
     // the GC are this publish's own vname (explicitly excluded) and
     // its tmp dir (renamed away before the GC runs).
@@ -398,10 +373,6 @@ object MergeUpsert {
     entries.filter(d => d.isDirectory &&
         d.getPath.getName.startsWith(".tmp-v-"))
       .foreach(d => fs.delete(d.getPath, true))
-    if (legacyFlat)
-      entries.filter(_.isFile)
-        .map(_.getPath).filter(f => f.getName != PointerName)
-        .foreach(fs.delete(_, false))
     spark.catalog.refreshByPath(path)
   }
 
@@ -428,14 +399,10 @@ object MergeUpsert {
     * the next publish GCs. Contents are bit-identical by construction —
     * compaction is a pure re-layout.
     *
-    * A legacy FLAT table (bare parquet files, no version pointer) is
-    * adopted into the versioned layout by the same call. Already-compact
-    * stores (file count ≤ target) are left untouched — repeated
-    * compaction must not bump versions forever.
-    *
-    * The partitioned [[mergeWrite]] layout needs no analogue: dynamic
-    * partition overwrite rewrites every touched partition wholesale
-    * (one file per date by construction), so partitions never fragment.
+    * Already-compact stores (file count ≤ target) and stores with no
+    * published version are left untouched — repeated compaction must
+    * not bump versions forever. Date-partitioned manifested tables
+    * compact with [[TableManifest.compactManifested]].
     */
   def compactPlain(spark: SparkSession, path: String,
                    targetBytes: Long = 128L << 20,
@@ -443,17 +410,15 @@ object MergeUpsert {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
     val fs = fsFor(spark, path)
     val p = new org.apache.hadoop.fs.Path(path)
-    val cur = currentPlainVersion(spark, path)
-    val dataDir = cur match {
+    val dataDir = currentPlainVersion(spark, path) match {
       case Some(v) => new org.apache.hadoop.fs.Path(p, v)
-      case None if hasFlatParquet(fs, p) => p
       case None => return CompactionReport(0, 0, 0L, compacted = false)
     }
     val files = fs.listStatus(dataDir)
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
     val bytes = files.map(_.getLen).sum
     val targetN = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    if (cur.isDefined && files.length <= targetN)
+    if (files.length <= targetN)
       return CompactionReport(files.length, files.length, bytes,
         compacted = false)
     val df = spark.read.parquet(dataDir.toString).coalesce(targetN)
@@ -470,13 +435,13 @@ object MergeUpsert {
   }
 
   /** Read the live version of a [[mergeWritePlain]] table: the
-    * `_CURRENT` pointer's version dir; with no pointer (legacy layout or
-    * a lost pointer) the newest version dir, else the flat path. */
+    * `_CURRENT` pointer's version dir, or after a lost pointer the
+    * newest committed version dir. A store with no live version fails
+    * here — it was never published. */
   def readPlain(spark: SparkSession, path: String): DataFrame =
-    currentPlainVersion(spark, path) match {
-      case Some(v) => spark.read.parquet(s"$path/$v")
-      case None => spark.read.parquet(path)
-    }
+    existingPlain(spark, path).getOrElse(throw new IllegalStateException(
+      s"no published version at $path — nothing was ever published " +
+        "there through the versioned-store protocol"))
 
   /** Time travel: read a SPECIFIC retained version (as listed by
     * [[retainedVersions]]). Versions outside the retention window are
@@ -537,18 +502,17 @@ object MergeUpsert {
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
 
   /** The live version-dir name: pointer first; as the lost-pointer
-    * recovery fallback, the newest version dir carrying a completion
-    * marker — our own `_GRAFT_COMMITTED` (written by publishVersion as
-    * the last act before the pointer flip, independent of the
-    * committer's marksuccessfuljobs setting) or the committer's
-    * `_SUCCESS` (pre-_GRAFT_COMMITTED layouts). A bare unmarked dir is
-    * NEVER adopted: on object stores the dir rename is a file-by-file
-    * copy, so an unmarked `v-` dir can be a dead writer's half-copied
-    * version — exactly the garbage the marker exists to exclude. A
-    * crash between rename and marker leaves the dir unadopted AND the
-    * pointer unflipped, so that publish simply never happened
-    * (upstream redelivery re-merges its batch). None for flat/absent
-    * tables. */
+    * recovery fallback, the newest version dir carrying our
+    * `_GRAFT_COMMITTED` marker (written by publishVersion as the last
+    * act before the pointer flip, independent of the committer's
+    * marksuccessfuljobs setting). An unmarked dir is NEVER adopted,
+    * whatever else it holds: on object stores the dir rename is a
+    * file-by-file copy, so an unmarked `v-` dir can be a dead writer's
+    * half-copied version — exactly the garbage the marker exists to
+    * exclude. A crash between rename and marker leaves the dir
+    * unadopted AND the pointer unflipped, so that publish simply never
+    * happened (upstream redelivery re-merges its batch). None when no
+    * version was ever published. */
   def currentPlainVersion(spark: SparkSession, path: String): Option[String] = {
     val fs = fsFor(spark, path)
     val p = new org.apache.hadoop.fs.Path(path)
@@ -565,20 +529,8 @@ object MergeUpsert {
       }
     def marked(v: String): Boolean = fs.exists(new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(p, v), CommitMarker))
-    def legacyCommitted(v: String): Boolean = fs.exists(
-      new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(p, v),
-        "_SUCCESS"))
-    val dirs = versionDirs(fs, p)
-    val markedDirs = dirs.filter(marked)
-    // _SUCCESS counts as commit proof ONLY on a pure pre-marker table:
-    // once any dir carries our marker, the writer is marker-layout, and
-    // an unmarked dir — even with _SUCCESS — is a dead writer's
-    // half-copied rename (the parquet job writes _SUCCESS into the tmp
-    // dir BEFORE the copy, so a partial dir can still carry it)
     pointed.filter(v => fs.exists(new org.apache.hadoop.fs.Path(p, v)))
-      .orElse(markedDirs.sorted.lastOption)
-      .orElse(if (markedDirs.isEmpty)
-        dirs.filter(legacyCommitted).sorted.lastOption else None)
+      .orElse(versionDirs(fs, p).filter(marked).sorted.lastOption)
   }
 
   private def versionDirs(fs: org.apache.hadoop.fs.FileSystem,
@@ -588,132 +540,4 @@ object MergeUpsert {
       .filter(n => n.startsWith("v-") && n.drop(2).forall(_.isDigit)).toSeq
 
   private def versionNumber(name: String): Long = name.drop(2).toLong
-
-  private def hasFlatParquet(fs: org.apache.hadoop.fs.FileSystem,
-                             p: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(p) && fs.listStatus(p)
-      .exists(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-
-  /** What [[mergeWrite]] decided: how many partitions the batch
-    * touched, the estimated distinct-key cardinality of the batch, and
-    * whether the anti-join broadcast the key set. The create-table
-    * first write reports (0, 0, false) — there is no join to plan. */
-  final case class MergeWriteReport(touchedPartitions: Int,
-                                    keyEstimate: Long,
-                                    broadcastKeys: Boolean)
-
-  /** Merge `updates` into the date-partitioned parquet table at `path`,
-    * rewriting ONLY the partitions the batch touches. Creates the table on
-    * first write. `partitionCol` values must be present in `updates`.
-    *
-    * The broadcast-vs-shuffle anti-join decision gates on the batch's
-    * ESTIMATED DISTINCT-KEY COUNT (`approx_count_distinct`, computed in
-    * the same single stats pass as the touched-partition IN-list), not
-    * on how many partitions it touches — two touched dates of a
-    * mega-table can carry millions of keys, and a partition-count gate
-    * would happily broadcast them (the r4 audit's few-but-huge hole;
-    * MergeStress's `few-huge` case proves the switch). */
-  /** ONE stats pass over a batch: the touched-partition IN-list (small
-    * by construction — one ingest covers few dates) and the
-    * key-cardinality estimate the join decision needs. Exposed to
-    * callers (TableManifest) that need `touched` for their own
-    * bookkeeping, so the batch is scanned once, not once per layer. */
-  def batchStats(updates: DataFrame, keys: Seq[String],
-                 partitionCol: String): (Seq[Any], Long) = {
-    // AQE off for the collect: a global agg's exchange carries one
-    // partial row per map task regardless of batch size (nothing to
-    // adapt), and AQE would materialize it as its own query-stage JOB —
-    // pure scheduler latency on every merge (JobCount r17)
-    val statsRow = graft.ScopedSessionConf.withConf(
-        updates.sparkSession, "spark.sql.adaptive.enabled", "false") {
-      updates.agg(
-        collect_set(col(partitionCol)).as("parts"),
-        approx_count_distinct(xxhash64(keys.map(col): _*)).as("key_est"))
-        .collect().head
-    }
-    (statsRow.getSeq[Any](0), statsRow.getLong(1))
-  }
-
-  def mergeWrite(spark: SparkSession, path: String, updates: DataFrame,
-                 keys: Seq[String], partitionCol: String = "date",
-                 broadcastMaxKeys: Long = 500000L,
-                 listingVia: Option[Seq[Any] => DataFrame] = None,
-                 cow: Boolean = false,
-                 precomputedStats: Option[(Seq[Any], Long)] = None)
-      : MergeWriteReport = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(new org.apache.hadoop.fs.Path(path))
-    if (!exists) {
-      // repartition by the partition column first: otherwise EVERY task
-      // writes a file into EVERY touched partition (tasks × dates tiny
-      // files — measured 80× write amplification on a historical
-      // backfill spanning ~2400 dates)
-      updates.dropDuplicates(keys)
-        .repartition(col(partitionCol))
-        .write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(path)
-      return MergeWriteReport(0, 0L, broadcastKeys = false)
-    }
-    val (touched, keyEst) =
-      precomputedStats.getOrElse(batchStats(updates, keys, partitionCol))
-    // `listingVia` (e.g. TableManifest's file-zone planner) resolves
-    // the touched partitions' rows WITHOUT the O(partitions) recursive
-    // root listing — MergeStress measured that listing as the dominant
-    // cost of incremental merges at 2400 partitions. Default keeps the
-    // plain scan+filter (partition pruning still skips data, but the
-    // discovery listing is table-wide).
-    val pruned = listingVia match {
-      case Some(resolve) => resolve(touched)
-      case None => spark.read.parquet(path)
-        .filter(col(partitionCol).isin(touched: _*))
-    }
-    // Incremental batches (few distinct keys) keep the broadcast
-    // anti-join; a backfill-scale key set — whether spread over 600
-    // dates or packed into 2 — switches to a shuffle join before the
-    // broadcast becomes the bottleneck.
-    val broadcastDecision = keyEst <= broadcastMaxKeys
-    val merged = merge(pruned, updates, keys,
-      broadcastKeys = broadcastDecision)
-    // Publish the touched partitions' merged rows. Two physical modes
-    // with identical logical semantics for manifest-planned readers:
-    //   - dynamic partition overwrite (default): replace the touched
-    //     partitions in place — superseded files are DELETED by the
-    //     commit, so the dir stays plain-readable but no prior
-    //     snapshot of a rewritten partition survives;
-    //   - copy-on-write (`cow`, the TableManifest protocol): APPEND
-    //     the merged rows as new immutable files and leave the
-    //     superseded ones on disk — visibility is the MANIFEST version
-    //     flip, prior versions stay readable (time travel / in-flight
-    //     readers) until TableManifest.vacuum reclaims them. A cow dir
-    //     is NOT plain-readable after its first rewrite (it holds both
-    //     generations); every read must plan from the manifest.
-    val doWrite = () => {
-      val laidOut = merged
-        .repartition(col(partitionCol)) // one task per date → one file per date
-        .sortWithinPartitions(keys.map(col): _*) // clustered row groups →
-        // parquet min/max stats prune key lookups inside each date file
-        .write
-      if (cow)
-        laidOut.mode(SaveMode.Append).partitionBy(partitionCol).parquet(path)
-      else laidOut
-        .mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionCol)
-        .parquet(path)
-    }
-    // Incremental-sized batches (the same signal that picks the
-    // broadcast anti-join) also drop AQE for the write: the plan's
-    // exchanges (update dedup, the partition-layout repartition) would
-    // each materialize as a sequential query-stage JOB, and an
-    // incremental merge has nothing for AQE to adapt — its shuffles are
-    // key-estimate-bounded and its layout repartition is explicit.
-    // Backfill-scale batches keep AQE (skew + coalescing matter there).
-    if (broadcastDecision)
-      graft.ScopedSessionConf.withConf(spark,
-        "spark.sql.adaptive.enabled", "false")(doWrite())
-    else doWrite()
-    // invalidate the shared file-listing cache for readers of this path
-    spark.catalog.refreshByPath(path)
-    MergeWriteReport(touched.length, keyEst, broadcastDecision)
-  }
 }

@@ -83,9 +83,8 @@ object Sketches {
                    k: Int, m: Long, retainVersions: Int = 2): Unit = {
     val batchSk = kmvSketch(batch, groupCol, value, k, m)
       .select(col(groupCol), col("sketch"))
-    // existingPlain, NOT currentPlainVersion: a legacy FLAT sketch
-    // table must be merged as the base (and adopted by the publish),
-    // not treated as empty and have its files deleted by the cleanup
+    // the live version is the merge base; the first batch publishes
+    // alone
     val merged = MergeUpsert.existingPlain(spark, storePath) match {
       case None => batchSk
       case Some(existing) => existing.as("o")

@@ -38,8 +38,8 @@ object MetricsJob {
                      metricsPath: String, runId: String,
                      dates: Seq[java.sql.Date]): Unit = {
     // manifest-planned partition read: only the touched dates' FILES
-    // are addressed (zero root listing when the ingest maintains the
-    // capacity manifest; plain pruned scan for a legacy table)
+    // are addressed, with zero root listing (IngestJob maintains the
+    // capacity manifest)
     val capacity = TableManifest.readPartitions(spark, capacityPath,
       dates)
     TableManifest.mergeWriteManifested(spark, metricsPath,

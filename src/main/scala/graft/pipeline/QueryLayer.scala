@@ -60,9 +60,8 @@ object QueryLayer {
   /** Manifest-planned twins of the date-filtered endpoints: the
     * served table is addressed by its manifest's file list for exactly
     * the needed date partitions — zero directory listing per request
-    * (the reference's Postgres B-tree lookup, distributed; legacy
-    * tables without a manifest fall back to the pruned scan). Same
-    * plans as the DataFrame forms above once the scan is resolved. */
+    * (the reference's Postgres B-tree lookup, distributed). Same plans
+    * as the DataFrame forms above once the scan is resolved. */
   def capacityLatestAt(spark: org.apache.spark.sql.SparkSession,
                        capacityPath: String, regions: DataFrame,
                        targetDate: java.sql.Date): DataFrame =

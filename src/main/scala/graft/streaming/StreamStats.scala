@@ -27,9 +27,9 @@ object StreamStats {
     * collide with corpus vocabulary). */
   val LedgerKey = "__graft last batch__"
 
-  /** The last applied batch id, if the store exists (versioned OR
-    * legacy flat — a flat store's ledger row still counts; ignoring it
-    * would double-apply a redelivered batch). */
+  /** The last applied batch id, if the store has a published version
+    * (its ledger row; ignoring it would double-apply a redelivered
+    * batch). */
   def lastApplied(spark: SparkSession, storePath: String): Option[Long] =
     MergeUpsert.existingPlain(spark, storePath).flatMap(
       _.filter(col("term") === LedgerKey)
@@ -50,8 +50,8 @@ object StreamStats {
     val counts = batch
       .select(explode(TextFunctions.tokens(lower(col(textCol)))).as("term"))
       .groupBy("term").agg(count(lit(1)).as("freq"))
-    // existingPlain so a legacy flat vocab store is merged and adopted,
-    // never overwritten by the batch alone
+    // the live version is the merge base; the first batch publishes
+    // alone
     val merged = MergeUpsert.existingPlain(spark, storePath) match {
       case None => counts
       case Some(existing) => MergeUpsert.mergeAdditive(

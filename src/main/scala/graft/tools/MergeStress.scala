@@ -1,21 +1,25 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.MergeUpsert
+import graft.operators.{MergeUpsert, TableManifest}
 
 /** Merge-path stress (r2 verdict stretch): a date-partitioned keyed
-  * table at factor*6M rows (2400 dates × factor*2500 regions), then the
-  * three merge shapes that matter at backfill scale:
+  * table at factor*6M rows (2400 dates × factor*2500 regions), laid
+  * out by one plain partitioned write and adopted with
+  * `TableManifest.update` (the 2400-partition bootstrap row), then the
+  * three merge shapes that matter at backfill scale, all through
+  * `TableManifest.mergeWriteManifested`:
   *   - incremental 1-day batch — broadcast anti-join, touches ONE
   *     partition of 2400;
   *   - a 600-date backfill — the touched-partition IN-list and the
-  *     dynamic-overwrite fan-out at their worst, and the key set is far
-  *     past broadcast size (mergeWrite auto-switches to a shuffle join);
-  *   - a point-lookup read proving the sorted row groups prune.
+  *     append fan-out at their worst, and the key set is far past
+  *     broadcast size (the merge auto-switches to a shuffle join);
+  *   - a few-but-huge 2-date batch past the same key threshold;
+  * then a manifest point lookup proving the file zones prune.
   * Update batches are materialized (cached + counted) BEFORE the timed
   * region — the first cut of this harness re-derived each batch from a
-  * 60M-row `spark.range` three times inside mergeWrite's plan (touched
+  * 60M-row `spark.range` three times inside the merge's plan (touched
   * collect, anti-join build, write), and the batch-generation scans
   * dwarfed the merge being measured.
   *
@@ -37,33 +41,45 @@ object MergeStress {
       ((col("id") % 1000) + bump).cast("int").as("total_beds"))
     println(s"[stress] merge table rows=${nDates.toLong * nRegions} dates=$nDates")
 
-    val init = capTable(0)
-    time("mergeWrite init (2400 dates)")({
-      MergeUpsert.mergeWrite(spark, s"$work/bigcap", init,
-        Seq("date", "region_id"))
+    // one file per date, as the merge's create path lays it out
+    time("plain write init (2400 dates)")({
+      capTable(0).repartition(col("date"))
+        .write.partitionBy("date").parquet(s"$work/bigcap")
       spark.read.parquet(s"$work/bigcap").count()
     })
+    // ---- manifest bootstrap (the round-9 "listing-dominated"
+    // finding): adopt all 2400 partitions once, then every merge and
+    // read below plans from the manifest — maintenance O(touched),
+    // reads planned from file zones with zero directory listing ----
+    time("manifest bootstrap (2400)")({
+      TableManifest.update(spark, s"$work/bigcap", "date",
+        spark.read.parquet(s"$work/bigcap").select("date").distinct()
+          .collect().map(_.get(0)).toSeq,
+        "region_id")
+      TableManifest.load(spark, s"$work/bigcap").get.count()
+    })
+    def merge(batch: DataFrame) =
+      TableManifest.mergeWriteManifested(spark, s"$work/bigcap", batch,
+        Seq("date", "region_id"), zoneKey = Some("region_id"))
 
     val oneDay = capTable(1)
       .filter(col("date") === lit("2018-06-01").cast("date")).cache()
     val oneDayRows = oneDay.count()
-    time("mergeWrite 1-day batch")({
-      MergeUpsert.mergeWrite(spark, s"$work/bigcap", oneDay,
-        Seq("date", "region_id"))
+    time("manifested 1-day batch")({
+      merge(oneDay)
       oneDayRows
     })
+    oneDay.unpersist()
 
     val backfill = capTable(2)
       .filter(col("date") < lit("2019-09-01").cast("date")).cache()
     val backfillRows = backfill.count()
-    time("mergeWrite 600-date backfill")({
-      val rep = MergeUpsert.mergeWrite(spark, s"$work/bigcap", backfill,
-        Seq("date", "region_id"))
+    time("manifested 600-date backfill")({
+      val rep = merge(backfill)
       println(s"[stress]   backfill report: $rep")
       assert(!rep.broadcastKeys, s"600-date backfill must not broadcast: $rep")
       backfillRows
     })
-    oneDay.unpersist()
     backfill.unpersist()
 
     // few-but-HUGE: 2 touched dates carrying factor*600k keys — the
@@ -76,9 +92,8 @@ object MergeStress {
       concat(lit("fh"), (col("id") / 2).cast("long")).as("region_id"),
       lit(7).cast("int").as("total_beds")).cache()
     val fewHugeRows = fewHuge.count()
-    time("mergeWrite few-huge (2 dates)")({
-      val rep = MergeUpsert.mergeWrite(spark, s"$work/bigcap", fewHuge,
-        Seq("date", "region_id"))
+    time("manifested few-huge (2 dates)")({
+      val rep = merge(fewHuge)
       println(s"[stress]   few-huge report: $rep")
       assert(rep.touchedPartitions == 2 && !rep.broadcastKeys,
         s"few-but-huge batch must shuffle, not broadcast: $rep")
@@ -86,34 +101,6 @@ object MergeStress {
     })
     fewHuge.unpersist()
 
-    time("point lookup (sorted row groups)")(
-      spark.read.parquet(s"$work/bigcap")
-        .filter(col("date") === lit("2018-06-01").cast("date") &&
-          col("region_id") === "r1234")
-        .count())
-
-    // ---- manifest-backed rows (the round-9 "listing-dominated"
-    // finding): bootstrap once over all 2400 partitions, then measure
-    // the SAME 1-day merge and point lookup with a manifest in front —
-    // maintenance O(touched), reads planned from file zones with zero
-    // directory listing ----
-    import graft.operators.TableManifest
-    time("manifest bootstrap (2400)")({
-      TableManifest.update(spark, s"$work/bigcap", "date",
-        spark.read.parquet(s"$work/bigcap").select("date").distinct()
-          .collect().map(_.get(0)).toSeq,
-        "region_id")
-      TableManifest.load(spark, s"$work/bigcap").get.count()
-    })
-    val oneDay2 = capTable(3)
-      .filter(col("date") === lit("2018-07-01").cast("date")).cache()
-    val oneDay2Rows = oneDay2.count()
-    time("manifested 1-day batch")({
-      TableManifest.mergeWriteManifested(spark, s"$work/bigcap",
-        oneDay2, Seq("date", "region_id"), zoneKey = Some("region_id"))
-      oneDay2Rows
-    })
-    oneDay2.unpersist()
     time("manifest point lookup")({
       val (df, rep) = TableManifest.lookup(spark, s"$work/bigcap",
         "region_id", "r1234", "r1234",
@@ -378,13 +365,11 @@ object MergeStress {
       hits
     })
 
-    // ---- parity-surface rows (r10 verdict item 1): the HOSPITAL
-    // pipeline's own incremental derive at 2400 partitions.
-    // capacity is written the way IngestJob now writes it
-    // (mergeWriteManifested); "legacy" is the same table without a
-    // manifest. The timed op is MetricsJob.runIncremental — its
-    // capacity read plans from the manifest's file list vs the plain
-    // scan's O(partitions) root listing ----
+    // ---- parity-surface row (r10 verdict item 1): the HOSPITAL
+    // pipeline's own incremental derive at 2400 partitions, capacity
+    // written the way IngestJob writes it (mergeWriteManifested). The
+    // timed op is MetricsJob.runIncremental — its capacity read plans
+    // from the manifest's file list ----
     def hospitalCap = spark.range(nDates.toLong * (factor * 250L)).select(
       date_add(lit("2018-01-01").cast("date"),
         (col("id") % nDates).cast("int")).as("date"),
@@ -397,23 +382,10 @@ object MergeStress {
     val oneDate = Seq(java.sql.Date.valueOf("2018-06-01"))
     TableManifest.mergeWriteManifested(spark, s"$work/hospcap",
       hospitalCap, Seq("date", "region_id"), zoneKey = Some("region_id"))
-    MergeUpsert.mergeWrite(spark, s"$work/hospcap_legacy", hospitalCap,
-      Seq("date", "region_id"))
-    // metrics tables pre-created (bootstrap write is not the measured
-    // path) so both timed rows are the same-shape INCREMENTAL merge
+    // metrics table pre-created (bootstrap write is not the measured
+    // path) so the timed row is the INCREMENTAL merge
     MetricsJob.runIncremental(spark, s"$work/hospcap",
       s"$work/hospmet", "seed-m", oneDate)
-    val legacySeed = spark.read.parquet(s"$work/hospcap_legacy")
-      .filter(col("date").isin(oneDate: _*))
-    MergeUpsert.mergeWrite(spark, s"$work/hospmet_legacy",
-      MetricsJob.derive(legacySeed, "seed-l"), Seq("date", "region_id"))
-    time("parity 1-day derive legacy")({
-      val cap = spark.read.parquet(s"$work/hospcap_legacy")
-        .filter(col("date").isin(oneDate: _*))
-      MergeUpsert.mergeWrite(spark, s"$work/hospmet_legacy",
-        MetricsJob.derive(cap, "m-legacy"), Seq("date", "region_id"))
-      factor * 250L
-    })
     time("parity 1-day derive manifest")({
       MetricsJob.runIncremental(spark, s"$work/hospcap",
         s"$work/hospmet", "m-manifest", oneDate)

@@ -46,20 +46,6 @@ class CompactionSpec extends SparkSpec {
     assert(MergeUpsert.currentPlainVersion(spark, store) == v1)
   }
 
-  test("legacy flat table is adopted into the versioned layout") {
-    val store = tmp()
-    spark.range(50).toDF("id").repartition(4)
-      .write.parquet(store) // flat layout, no pointer
-    val rep = MergeUpsert.compactPlain(spark, store, targetBytes = 1L << 30)
-    assert(rep.compacted && rep.filesAfter == 1)
-    assert(MergeUpsert.currentPlainVersion(spark, store).isDefined)
-    assert(MergeUpsert.readPlain(spark, store).count() == 50)
-    // flat files cleaned up; further merges keep working
-    MergeUpsert.mergeWritePlain(spark, store,
-      spark.range(50, 60).toDF("id"), Seq("id"))
-    assert(MergeUpsert.readPlain(spark, store).count() == 60)
-  }
-
   test("superseded version is retained for in-flight readers") {
     val store = tmp()
     (0 until 2).foreach { k =>

@@ -125,20 +125,15 @@ class MergeUpsertSpec extends SparkSpec {
       .select("total_beds").as[Int].collect().toSeq == Seq(2),
       "recovery keys on the engine-written commit marker, not the " +
         "committer's _SUCCESS")
-    // mixed lineage: a legacy _SUCCESS-only older version must NOT
-    // shadow a newer marker-committed one (stale-base adoption would
-    // silently drop the newer acknowledged batch), and an UNMARKED
-    // newer dir (half-copied object-store rename) must not be adopted
-    new java.io.File(s"$dir/v-0000000001/_GRAFT_COMMITTED").delete()
-    tbl(("2024-01-15", "CA", 1)).write.mode("overwrite")
-      .parquet(s"$dir/v-0000000001")       // legacy: _SUCCESS, no marker
+    // an UNMARKED newer dir (half-copied object-store rename) must not
+    // be adopted
     tbl(("2024-01-15", "CA", 7)).write.mode("overwrite")
       .parquet(s"$dir/v-0000000007")
     new java.io.File(s"$dir/v-0000000007/_SUCCESS").delete() // unmarked
     assert(MergeUpsert.currentPlainVersion(spark, dir)
       .contains("v-0000000002"),
-      "newest COMMITTED version wins: legacy-markered v1 is older, " +
-        "unmarked v7 is a dead writer's half-copied dir")
+      "newest COMMITTED version wins: unmarked v7 is a dead writer's " +
+        "half-copied dir")
     new java.io.File(s"$dir/v-0000000007").listFiles()
       .foreach(_.delete())
     new java.io.File(s"$dir/v-0000000007").delete()
@@ -166,31 +161,18 @@ class MergeUpsertSpec extends SparkSpec {
       .contains("v-0000000002"))
   }
 
-  test("S7 mergeWritePlain: legacy flat tables migrate on first merge") {
-    val dir = Files.createTempDirectory("graft-flat").toString + "/t"
-    tbl(("2024-01-15", "CA", 100), ("2024-01-15", "TX", 200))
-      .write.parquet(dir) // pre-versioning layout
-    MergeUpsert.mergeWritePlain(spark, dir,
-      tbl(("2024-01-15", "CA", 111)), Seq("date", "region_id"))
-    val got = MergeUpsert.readPlain(spark, dir)
-      .orderBy("region_id").select("total_beds").as[Int].collect().toSeq
-    assert(got == Seq(111, 200), "flat base rows merge into the new version")
-    assert(!new java.io.File(dir).listFiles()
-      .exists(f => f.isFile && f.getName.endsWith(".parquet")),
-      "migrated flat files are cleaned after the version goes live")
-  }
-
   test("S7 mergeWrite rewrites only touched date partitions") {
     val dir = Files.createTempDirectory("graft-merge").toString + "/fact"
     val init = tbl(("2024-01-15", "CA", 100), ("2024-01-16", "CA", 200))
-    MergeUpsert.mergeWrite(spark, dir, init, Seq("date", "region_id"))
+    TableManifest.mergeWriteManifested(spark, dir, init,
+      Seq("date", "region_id"))
     val filesBefore = new java.io.File(s"$dir/date=2024-01-16").listFiles().toSet
     // second merge touches only 2024-01-15
-    MergeUpsert.mergeWrite(spark, dir,
+    TableManifest.mergeWriteManifested(spark, dir,
       tbl(("2024-01-15", "CA", 150)), Seq("date", "region_id"))
     val filesAfter = new java.io.File(s"$dir/date=2024-01-16").listFiles().toSet
     assert(filesBefore == filesAfter, "untouched partition must not be rewritten")
-    val got = spark.read.parquet(dir)
+    val got = TableManifest.readViaManifest(spark, dir)
       .orderBy("date").select("total_beds").as[Int].collect()
     assert(got.toSeq == Seq(150, 200))
   }
@@ -202,27 +184,28 @@ class MergeUpsertSpec extends SparkSpec {
         (col("id") % dates).cast("int")).as("date"),
       concat(lit(tag), col("id")).as("region_id"),
       lit(1).as("total_beds"))
-    val create = MergeUpsert.mergeWrite(spark, dir, rows("c", 100, 4),
-      Seq("date", "region_id"))
-    assert(create == MergeUpsert.MergeWriteReport(0, 0L, false),
+    def mergeRows(tag: String, n: Long, dates: Int) =
+      TableManifest.mergeWriteManifested(spark, dir, rows(tag, n, dates),
+        Seq("date", "region_id"))
+    val create = mergeRows("c", 100, 4)
+    assert(create == TableManifest.MergeWriteReport(0, 0L, false),
       "create path plans no join")
     // small batch, few keys -> broadcast
-    val small = MergeUpsert.mergeWrite(spark, dir, rows("s", 50, 2),
-      Seq("date", "region_id"))
+    val small = mergeRows("s", 50, 2)
     assert(small.touchedPartitions == 2 && small.broadcastKeys,
       s"small batch should broadcast: $small")
-    // few-but-HUGE: 2 touched dates, keys far past the threshold ->
-    // shuffle (a partition-count gate would broadcast here)
-    val fewHuge = MergeUpsert.mergeWrite(spark, dir, rows("h", 40000, 2),
-      Seq("date", "region_id"), broadcastMaxKeys = 10000L)
+    // few-but-HUGE: 2 touched dates, keys past the 500k broadcast
+    // threshold -> shuffle (a partition-count gate would broadcast here)
+    val fewHuge = mergeRows("h", 700000, 2)
     assert(fewHuge.touchedPartitions == 2 && !fewHuge.broadcastKeys,
       s"few-but-huge batch must shuffle: $fewHuge")
-    // the estimate is approximate (HLL) but must be in the right decade
-    assert(fewHuge.keyEstimate > 30000L && fewHuge.keyEstimate < 50000L,
+    // the estimate is approximate (HLL) but must be in the right range
+    assert(fewHuge.keyEstimate > 600000L && fewHuge.keyEstimate < 800000L,
       s"key estimate off: $fewHuge")
     // correctness unaffected by the join strategy (tags disjoint ->
     // every batch row inserts)
-    assert(spark.read.parquet(dir).count() == 100L + 50L + 40000L)
+    assert(TableManifest.readViaManifest(spark, dir).count() ==
+      100L + 50L + 700000L)
   }
 
   test("additive merge sums per key; store bootstrap sums in-batch dups") {
@@ -354,8 +337,7 @@ class MergeUpsertSpec extends SparkSpec {
 
     // B's flip must refuse: its merge never saw A's row
     intercept[java.util.ConcurrentModificationException] {
-      MergeUpsert.publishVersion(spark, dir, mergedB, 2, curB,
-        legacyFlat = false)
+      MergeUpsert.publishVersion(spark, dir, mergedB, 2, curB)
     }
 
     // the x202-style invariant: the table is EXACTLY A's publish —

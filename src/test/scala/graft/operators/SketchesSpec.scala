@@ -77,29 +77,6 @@ class SketchesSpec extends SparkSpec {
     }
   }
 
-  test("appendSketch adopts a legacy flat store instead of replacing it") {
-    import spark.implicits._
-    val rows = (1 to 600).map(i => (s"g${i % 2}", s"tok$i")).toDF("g", "v")
-    val half1 = rows.filter(hash(col("v")) % 2 === 0 ||
-      hash(col("v")) % 2 === -1)
-    val half2 = rows.exceptAll(half1)
-    // legacy layout: the first half's sketches as BARE parquet files
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-kmvflat").toString + "/s"
-    Sketches.kmvSketch(half1, "g", col("v"), K, M)
-      .select("g", "sketch").write.parquet(store)
-    // an append must MERGE with the flat base (and adopt the layout),
-    // not treat the store as empty and let publish delete the files
-    Sketches.appendSketch(spark, store, half2, "g", col("v"), K, M)
-    val inc = MergeUpsert.readPlain(spark, store)
-      .select("g", "sketch").collect()
-      .map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
-    val scratch = Sketches.kmvSketch(rows, "g", col("v"), K, M)
-      .select("g", "sketch").collect()
-      .map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
-    assert(inc == scratch)
-  }
-
   test("CMS sketch is bounded depth×width rows at any vocabulary size") {
     val docs = (0 until 400)
       .map(i => (i.toLong, (0 until 20).map(j => s"w${i}_$j").mkString(" ")))

@@ -79,6 +79,49 @@ class TableManifestSpec extends SparkSpec {
     assert(got == Map("2024-01-01" -> 50L, "2024-02-01" -> 20L))
   }
 
+  test("a partitioned dir with no manifest is refused by the merge, " +
+    "never half-adopted; update adopts it") {
+    val path = tmpDir()
+    val dates = Seq("2024-01-01", "2024-01-02", "2024-01-03")
+    rows(dates(0), 1L to 10L, 1.0)
+      .unionByName(rows(dates(1), 11L to 20L, 1.0))
+      .unionByName(rows(dates(2), 21L to 30L, 1.0))
+      .write.partitionBy("date").parquet(path)
+    def fileSet() = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
+      try walk.toArray.map(_.toString).toSet finally walk.close()
+    }
+    val filesBefore = fileSet()
+    val batch = rows(dates(1), 15L to 20L, 2.0)
+    // every publisher but update refuses the dir and writes nothing
+    Seq[(String, () => Any)](
+      "merge" -> (() =>
+        TableManifest.mergeWriteManifested(spark, path, batch, keys = Seq("id"))),
+      "append" -> (() =>
+        TableManifest.appendManifested(spark, path, batch, keyCol = "id")),
+      "replace" -> (() =>
+        TableManifest.replacePartitions(spark, path, batch, keyCol = "id",
+          partitionCol = "date", replaceParts = Seq(dates(1)))),
+      "compact" -> (() =>
+        TableManifest.compactManifested(spark, path, keyCol = "id"))
+    ).foreach { case (name, publish) =>
+      val e = intercept[IllegalStateException](publish())
+      assert(e.getMessage.contains("update"), s"$name: ${e.getMessage}")
+      assert(fileSet() == filesBefore, s"a refused $name must write nothing")
+    }
+    // adopted by update, the same merge keeps every partition
+    TableManifest.update(spark, path, "date", dates, "id")
+    TableManifest.mergeWriteManifested(spark, path, batch, keys = Seq("id"))
+    val got = TableManifest.readViaManifest(spark, path)
+      .select(col("id"), col("date").cast("string"), col("value"))
+      .as[(Long, String, Double)].collect().sorted.toSeq
+    val want = ((1L to 10L).map(i => (i, dates(0), 1.0)) ++
+      (11L to 14L).map(i => (i, dates(1), 1.0)) ++
+      (15L to 20L).map(i => (i, dates(1), 2.0)) ++
+      (21L to 30L).map(i => (i, dates(2), 1.0)))
+    assert(got == want)
+  }
+
   test("diffVersions: added/removed/rewritten/carried per partition " +
     "from retained manifest metadata alone") {
     val path = tmpDir()

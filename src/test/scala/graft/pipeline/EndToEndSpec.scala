@@ -58,6 +58,37 @@ class EndToEndSpec extends SparkSpec {
       s"expected the last row of the last file (999) to win, got $got")
   }
 
+  test("an all-rejected first ingest creates no table; the next ingest " +
+    "creates it") {
+    val dir = Files.createTempDirectory("graft-rejected-first").toString
+    val header = "date,state,inpatient_beds,inpatient_beds_used," +
+      "total_staffed_adult_icu_beds,staffed_adult_icu_bed_occupancy"
+    def ingest(row: String, runId: String) = {
+      val csv = s"$dir/$runId.csv"
+      Files.writeString(java.nio.file.Paths.get(csv), s"$header\n$row\n")
+      IngestJob.run(spark, csv,
+        capacityPath = s"$dir/capacity", regionsPath = s"$dir/regions",
+        rejectsPath = s"$dir/rejects", runsPath = s"$dir/runs",
+        runId = runId, source = "fixture", now = ts("2024-01-18 00:00:00"))
+    }
+    // occupied 50000 > total 40000: the only row is rejected
+    val first = ingest("2024-01-17,New York,40000,50000,4000,3800", "run-r")
+    assert(first.rowsLoaded == 0 && first.rowsRejected == 1)
+    val second = ingest("2024-01-15,California,50000,42000,5000,4800",
+      "run-v")
+    assert(second.rowsLoaded == 1)
+    val got = graft.operators.TableManifest
+      .readOrPlain(spark, s"$dir/capacity")
+      .select($"date".cast("string"), $"total_beds", $"occupied_beds",
+        $"icu_beds", $"icu_occupied", $"source_run_id")
+      .as[(String, Int, Int, Int, Int, String)].collect().toSeq
+    assert(got == Seq(("2024-01-15", 50000, 42000, 5000, 4800, "run-v")))
+    val loaded = Lineage.read(spark, s"$dir/runs")
+      .filter($"status" === "success")
+      .select($"run_id", $"rows_loaded").as[(String, Long)].collect().toMap
+    assert(loaded == Map("run-r" -> 0L, "run-v" -> 1L))
+  }
+
   test("ingest → metrics → compare reproduces hand-computed strain deltas") {
     val res = IngestJob.run(spark, csvPath,
       capacityPath = s"$base/capacity", regionsPath = s"$base/regions",
