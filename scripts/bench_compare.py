@@ -244,6 +244,17 @@ def main():
                     "contention; value is an upper bound]")
         return ""
 
+    # jobs (Spark jobs per query, recorded rep): counts repeat exactly
+    # across windows, so a flag whose job count ROSE is more driver
+    # round-trips in the new tree, and one whose count held is host
+    # noise or per-job cost. Noted only when both artifacts carry it.
+    ojobs, njobs = old.get("jobs"), new.get("jobs")
+
+    def jobs_note(q):
+        if ojobs is None or njobs is None:
+            return ""
+        return f" [jobs {ojobs.get(q, 'n/a')} -> {njobs.get(q, 'n/a')}]"
+
     ratios = []
     flagged = []
     masked = []
@@ -304,7 +315,7 @@ def main():
         if ok is not True:
             fatal.append(q)
         print(f"FLAG {q}: {o:.2f}s -> {n:.2f}s raw {raw:.2f}x "
-              f"norm {norm:.2f}x{spread_note(q)}{note}")
+              f"norm {norm:.2f}x{spread_note(q)}{note}{jobs_note(q)}")
     for q, raw, norm, o, n in sorted(masked, key=lambda t: -t[1]):
         note, ok = sw_note(q)
         # a MASKED query the same-window A/B CONFIRMS is a real
@@ -316,7 +327,7 @@ def main():
         print(f"MASKED {q}: {o:.2f}s -> {n:.2f}s raw {raw:.2f}x passes "
               f"only via canary normalization (norm {norm:.2f}x) -- "
               f"adjudicate against a clean-window artifact"
-              f"{spread_note(q)}{note}")
+              f"{spread_note(q)}{note}{jobs_note(q)}")
     if raw_io and raw_io > 1.2 and not (raw_canary and raw_canary > 1.2):
         print(f"WARN: io canary ratio {raw_io:.2f} marks IO/job-latency "
               "drift (scan canary clean) -- store-probe rows' movement "

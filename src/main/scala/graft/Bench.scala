@@ -1,7 +1,8 @@
 package graft
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 object Bench {
@@ -9,12 +10,20 @@ object Bench {
   /** Per-query telemetry: shuffle bytes written, shuffle bytes read,
     * and the max per-task peak execution memory — the numbers that
     * expose a plan regression (a new shuffle, a ballooning hash table)
-    * even when wall time hides it in the noise band. Counters reset
-    * per query after draining the listener bus. */
-  private final class Telemetry extends SparkListener {
+    * even when wall time hides it in the noise band — plus the Spark
+    * jobs started, stages completed and their tasks: at micro-batch
+    * scale a store-protocol row's wall is dominated by the NUMBER of
+    * sequential driver round-trips (each job ≈ 20–60 ms of scheduling
+    * at local[32]), not by data volume, and the count repeats exactly
+    * where wall time does not. Events only: counting adds no job.
+    * Counters reset per query after draining the listener bus. */
+  private[graft] final class Telemetry extends SparkListener {
     val shuffleWrite = new AtomicLong
     val shuffleRead = new AtomicLong
     val peakTaskMem = new AtomicLong
+    val jobs = new AtomicLong
+    val stages = new AtomicLong
+    val tasks = new AtomicLong
     override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
       val m = te.taskMetrics
       if (m != null) {
@@ -23,8 +32,14 @@ object Bench {
         peakTaskMem.accumulateAndGet(m.peakExecutionMemory, Math.max(_, _))
       }
     }
+    override def onJobStart(js: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet()
+      tasks.addAndGet(sc.stageInfo.numTasks.toLong)
+    }
     def reset(): Unit = { shuffleWrite.set(0); shuffleRead.set(0)
-      peakTaskMem.set(0) }
+      peakTaskMem.set(0); jobs.set(0); stages.set(0); tasks.set(0) }
   }
 
   def main(args: Array[String]): Unit = {
@@ -78,7 +93,8 @@ object Bench {
       org.apache.spark.metrics.source.CodegenMetrics
         .METRIC_COMPILATION_TIME.getCount
     final case class Timing(sec: Double, shufMb: Double, peakMb: Double,
-      gcDeltaMs: Long, compiles: Long, err: Option[String])
+      gcDeltaMs: Long, compiles: Long, jobs: Long, stages: Long,
+      tasks: Long, err: Option[String])
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Timing = {
       org.apache.spark.graft.listenerBridge.drain(spark.sparkContext)
@@ -94,7 +110,8 @@ object Bench {
       val shufMb =
         (telemetry.shuffleWrite.get + telemetry.shuffleRead.get) / 1e6
       val peakMb = telemetry.peakTaskMem.get / 1e6
-      Timing(sec, shufMb, peakMb, gcMs() - gc0, codegenCompiles() - cg0, err)
+      Timing(sec, shufMb, peakMb, gcMs() - gc0, codegenCompiles() - cg0,
+        telemetry.jobs.get, telemetry.stages.get, telemetry.tasks.get, err)
     }
     // Canary: one fixed scan+agg whose cost depends only on host state,
     // timed single-shot before and after the suite. A hot host benches it
@@ -151,9 +168,7 @@ object Bench {
     val ioCanaryPre = ioCanary()
     // above this, the window is treated as IO-degraded and the blip
     // guard's spread trigger tightens (clean-host probe ≈ 0.3-0.6 s)
-    val ioBlipThreshold =
-      sys.env.get("SPARK_GRAFT_IO_BLIP_SEC")
-        .flatMap(_.toDoubleOption).getOrElse(1.2)
+    val ioBlipThreshold = 1.2
     val results = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
@@ -196,6 +211,7 @@ object Bench {
           f"[bench] $name reps=[${runs.map(r => f"${r.sec}%.2f").mkString(",")}]"
             + s" gc=[${runs.map(_.gcDeltaMs).mkString(",")}]ms"
             + s" compiles=[${runs.map(_.compiles).mkString(",")}]"
+            + s" jobs=[${runs.map(_.jobs).mkString(",")}]"
             + (if (blipped) " blipped(min-of-3)" else ""))
         (name, best, runs.map(_.sec).toSeq, blipped)
       }.toSeq
@@ -211,7 +227,7 @@ object Bench {
         case c if c < ' ' => f"\\u${c.toInt}%04x"
         case c => c.toString
       } + "\""
-    def numMap(f: Timing => Double): String =
+    def numMap(f: Timing => AnyVal): String =
       results.map { case (n, t, _, _) => s"\"" + n + "\":" + f(t) }
         .mkString("{", ",", "}")
     // every rep's wall time, first to last: the reported min is the
@@ -240,6 +256,11 @@ object Bench {
     val peak = numMap(t => math.round(t.peakMb * 100.0) / 100.0)
     val gc = numMap(_.gcDeltaMs.toDouble)
     val compiles = numMap(_.compiles.toDouble)
+    // driver round-trips of the recorded rep: jobs started, stages
+    // completed, and their summed task counts
+    val jobs = numMap(_.jobs)
+    val stages = numMap(_.stages)
+    val tasks = numMap(_.tasks)
     val failed = results.collect { case (k, t, _, _) if t.err.isDefined =>
       k -> t.err.get }
     val errs = failed.map { case (k, e) => s"\"" + k + "\":" + jstr(e) }
@@ -256,7 +277,7 @@ object Bench {
     val blippedArr = results.collect { case (n, _, _, true) => "\"" + n + "\"" }
       .mkString("[", ",", "]")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec",$canaries,"queries":$qs,"shuffle_mb":$shuf,"peak_mem_mb":$peak,"gc_ms":$gc,"codegen_compiles":$compiles,"reps_sec":$repsMap,"rep_spread":$spreadMap,"blipped":$blippedArr,"errors":$errs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec",$canaries,"queries":$qs,"shuffle_mb":$shuf,"jobs":$jobs,"stages":$stages,"tasks":$tasks,"peak_mem_mb":$peak,"gc_ms":$gc,"codegen_compiles":$compiles,"reps_sec":$repsMap,"rep_spread":$spreadMap,"blipped":$blippedArr,"errors":$errs,"sf":"$sfDir"}"""
     // A SCOPED run (SPARK_GRAFT_ONLY set) writes BENCH_SCOPED.json and
     // leaves the full-suite artifacts untouched — a dev subset run can
     // no longer clobber BENCH_FULL/BENCH_SUMMARY with partial totals

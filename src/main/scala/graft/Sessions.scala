@@ -49,8 +49,9 @@ object Sessions {
 
   /** Pinned on every metadata session: manifest stages are bounded by
     * FILE counts, so AQE's per-exchange stage jobs are pure scheduler
-    * latency (JobCount r17: 60-80% of each table-protocol row's jobs)
-    * and a data-sized shuffle count is tiny-task overhead. */
+    * latency (60-80% of each table-protocol row's jobs in Bench's
+    * `jobs` column) and a data-sized shuffle count is tiny-task
+    * overhead. */
   private val MetaPinned = Map(
     "spark.sql.adaptive.enabled" -> "false",
     "spark.sql.shuffle.partitions" -> "4")

@@ -339,7 +339,7 @@ object TableManifest {
     // AQE off for the collect: a global agg's exchange carries one
     // partial row per map task regardless of batch size (nothing to
     // adapt), and AQE would materialize it as its own query-stage JOB —
-    // pure scheduler latency on every merge (JobCount r17)
+    // pure scheduler latency on every merge (Bench's `jobs` column)
     val statsRow = graft.ScopedSessionConf.withConf(
         updates.sparkSession, "spark.sql.adaptive.enabled", "false") {
       updates.agg(
