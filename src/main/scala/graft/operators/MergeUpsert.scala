@@ -222,9 +222,11 @@ object MergeUpsert {
   }
 
   /** The store's live version, if one is published — the existence
-    * check for external incremental writers. */
+    * check for external incremental writers. The version's schema
+    * comes from [[TableManifest]]'s planning memo. */
   def existingPlain(spark: SparkSession, path: String): Option[DataFrame] =
-    currentPlainVersion(spark, path).map(v => spark.read.parquet(s"$path/$v"))
+    currentPlainVersion(spark, path)
+      .map(v => TableManifest.readPublished(spark, s"$path/$v")._1)
 
   /** Atomic full-table publish: write `df` as a new immutable version
     * and flip the `_CURRENT` pointer — the whole-table-replace analogue
@@ -500,6 +502,16 @@ object MergeUpsert {
   private[operators] def fsFor(spark: SparkSession, path: String) =
     org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+
+  /** Modification time of a version dir's `_GRAFT_COMMITTED` marker —
+    * the planning memo's version identity; None when the dir has no
+    * marker (or is gone). */
+  private[operators] def committedAt(spark: SparkSession,
+                                     versionDir: String): Option[Long] =
+    try Some(fsFor(spark, versionDir).getFileStatus(
+      new org.apache.hadoop.fs.Path(versionDir, CommitMarker))
+      .getModificationTime)
+    catch { case _: java.io.FileNotFoundException => None }
 
   /** The live version-dir name: pointer first; as the lost-pointer
     * recovery fallback, the newest version dir carrying our

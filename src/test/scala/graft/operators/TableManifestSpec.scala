@@ -728,4 +728,182 @@ class TableManifestSpec extends SparkSpec {
     assert(rFull.filesDeleted > 0 && filesIn("2024-01-02").size < d2Before.size)
     assert(TableManifest.readViaManifest(spark, path).count() == 60)
   }
+
+  /** `body`'s result and the Spark jobs it started, counted by Bench's
+    * listener with the bus drained before and after. */
+  private def jobsOf[T](body: => T): (T, Long) = {
+    val t = new graft.Bench.Telemetry
+    val sc = spark.sparkContext
+    org.apache.spark.graft.listenerBridge.drain(sc)
+    sc.addSparkListener(t)
+    try {
+      val out = body
+      org.apache.spark.graft.listenerBridge.drain(sc)
+      (out, t.jobs.get)
+    } finally sc.removeSparkListener(t)
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select("id", "value", "date").collect().map(_.toString).sorted.toSeq
+
+  private def values(df: org.apache.spark.sql.DataFrame): Set[Double] =
+    df.select("value").distinct().as[Double].collect().toSet
+
+  test("planning memo: re-planning reads of an unchanged version runs " +
+    "no Spark job and returns the same rows") {
+    val path = tmpDir()
+    TableManifest.mergeWriteManifested(spark, path,
+      rows("2024-01-01", 1L to 50L, 1.0)
+        .unionByName(rows("2024-01-02", 51L to 90L, 1.0)),
+      keys = Seq("id"))
+    def plans() = Seq(
+      TableManifest.readPartitions(spark, path, Seq("2024-01-02")),
+      TableManifest.readViaManifest(spark, path),
+      TableManifest.readOrPlain(spark, path),
+      TableManifest.lookup(spark, path, "id", 60L, 70L)._1,
+      TableManifest.lookup(spark, path, "id", 500L, 600L)._1)
+    TableManifest.clearPlanMemo()
+    val (cold, coldJobs) = jobsOf(plans())
+    assert(coldJobs > 0, "the first plans infer schemas and collect lists")
+    val (warm, warmJobs) = jobsOf(plans())
+    assert(warmJobs == 0L, s"re-planning ran $warmJobs jobs")
+    assert(warm.map(sortedRows) == cold.map(sortedRows))
+    val plain = spark.read.parquet(path)
+    assert(sortedRows(warm(1)) == sortedRows(plain))
+    assert(sortedRows(warm(0)) ==
+      sortedRows(plain.filter(col("date") === "2024-01-02")))
+    assert(warm(3).count() == 11L && warm(4).count() == 0L)
+  }
+
+  test("planning memo: a read after a publish sees the new version; a " +
+    "frame planned before it still reads the old one") {
+    val path = tmpDir()
+    TableManifest.mergeWriteManifested(spark, path,
+      rows("2024-01-01", 1L to 20L, 1.0), keys = Seq("id"))
+    assert(values(TableManifest.readPartitions(spark, path,
+      Seq("2024-01-01"))) == Set(1.0))
+    val early = TableManifest.readPartitions(spark, path, Seq("2024-01-01"))
+    TableManifest.mergeWriteManifested(spark, path,
+      rows("2024-01-01", 1L to 20L, 2.0), keys = Seq("id"))
+    assert(values(TableManifest.readPartitions(spark, path,
+      Seq("2024-01-01"))) == Set(2.0))
+    assert(values(TableManifest.readOrPlain(spark, path)) == Set(2.0))
+    assert(values(early) == Set(1.0) && early.count() == 20L)
+  }
+
+  test("planning memo: a version dir deleted and republished under the " +
+    "same name is read with its new contents") {
+    val path = tmpDir()
+    TableManifest.mergeWriteManifested(spark, path,
+      rows("2024-01-01", 1L to 20L, 1.0), keys = Seq("id"))
+    val names = TableManifest.versions(spark, path)
+    assert(TableManifest.readViaManifest(spark, path).count() == 20L)
+    assert(TableManifest.readPartitions(spark, path, Seq("2024-01-01"))
+      .count() == 20L)
+    MergeUpsert.fsFor(spark, path)
+      .delete(new org.apache.hadoop.fs.Path(path), true)
+    TableManifest.mergeWriteManifested(spark, path,
+      (1L to 5L).map(i => (i, "2024-01-01", 3.0, i * 10L))
+        .toDF("id", "date", "value", "score"), keys = Seq("id"))
+    assert(TableManifest.versions(spark, path) == names,
+      "the republished manifest reuses the version name")
+    val all = TableManifest.readViaManifest(spark, path)
+    assert(all.columns.contains("score") && all.count() == 5L)
+    val part = TableManifest.readPartitions(spark, path, Seq("2024-01-01"))
+    assert(part.columns.contains("score") && values(part) == Set(3.0))
+  }
+
+  test("planning memo: an evolved-schema read with mergeSchema equals " +
+    "the un-memoized read, and mergeSchema keys its own entry") {
+    val path = tmpDir()
+    TableManifest.mergeWriteManifested(spark, path,
+      rows("2024-01-01", 1L to 50L, 1.0), keys = Seq("id"))
+    // each generation carries a column the other lacks, so a plain
+    // read (one footer) and a merged read never infer the same schema
+    TableManifest.appendManifested(spark, path,
+      (101L to 120L).map(i => (i, "2024-01-01", i * 10L))
+        .toDF("id", "date", "score"), keyCol = "id")
+    def fresh(mergeSchema: Boolean) = {
+      TableManifest.clearPlanMemo()
+      TableManifest.readViaManifest(spark, path, mergeSchema)
+    }
+    val truth = Seq(false, true).map(m => m -> fresh(m).schema).toMap
+    assert(truth(true).fieldNames.toSet.subsetOf(Set("id", "value",
+      "score", "date")) && truth(true).fieldNames.length == 4)
+    assert(truth(false) != truth(true))
+    for ((first, second) <- Seq(false -> true, true -> false)) {
+      TableManifest.clearPlanMemo()
+      TableManifest.readViaManifest(spark, path, first)
+      val (again, jobs) =
+        jobsOf(TableManifest.readViaManifest(spark, path, first))
+      assert(jobs == 0L && again.schema == truth(first))
+      assert(TableManifest.readViaManifest(spark, path, second).schema ==
+        truth(second))
+    }
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "value", "score").collect().map(_.toString).sorted.toSeq
+    assert(sorted(TableManifest.readViaManifest(spark, path,
+      mergeSchema = true)) ==
+      sorted(spark.read.option("mergeSchema", "true").parquet(path)))
+  }
+
+  test("planning memo: a change to an inference conf is honoured") {
+    val path = tmpDir()
+    TableManifest.mergeWriteManifested(spark, path,
+      rows("2024-01-01", 1L to 50L, 1.0), keys = Seq("id"))
+    def read() = TableManifest.readPartitions(spark, path, Seq("2024-01-01"))
+    assert(read().schema("date").dataType ==
+      org.apache.spark.sql.types.DateType)
+    graft.ScopedSessionConf.withConf(spark,
+      "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
+      val untyped = read()
+      assert(untyped.schema("date").dataType ==
+        org.apache.spark.sql.types.StringType)
+      assert(untyped.count() == 50L)
+    }
+    val (typed, warmJobs) = jobsOf(read())
+    assert(warmJobs == 0L && typed.schema("date").dataType ==
+      org.apache.spark.sql.types.DateType)
+    graft.ScopedSessionConf.withConf(spark, "spark.sql.caseSensitive",
+      "true") {
+      val (sensitive, jobs) = jobsOf(read())
+      assert(jobs > 0L, "a caseSensitive change must plan afresh")
+      assert(sortedRows(sensitive) == sortedRows(typed))
+    }
+  }
+
+  test("planning memo: a reader beside a publishing writer only ever " +
+    "sees published versions") {
+    val path = tmpDir()
+    val ids = 1L to 20L
+    def publish(v: Double): Unit = TableManifest.mergeWriteManifested(spark,
+      path, rows("2024-01-01", ids, v), keys = Seq("id"),
+      retainVersions = 20)
+    publish(0.0)
+    @volatile var writing = true
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[(Long, Double)]]
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val reader = new Thread(() =>
+      try while (writing) seen.add(
+        TableManifest.readPartitions(spark, path, Seq("2024-01-01"))
+          .select("id", "value").as[(Long, Double)].collect().toSeq)
+      catch { case t: Throwable => failure.set(t) })
+    reader.start()
+    try (1 to 4).foreach(i => publish(i.toDouble))
+    finally { writing = false; reader.join() }
+    assert(failure.get == null, s"reader failed: ${failure.get}")
+    import scala.jdk.CollectionConverters._
+    val reads = seen.asScala.toSeq
+    assert(reads.nonEmpty)
+    reads.foreach { r =>
+      assert(r.map(_._1).sorted == ids, "every read holds the whole key set")
+      assert(r.map(_._2).distinct.size == 1, s"a read mixed versions: $r")
+    }
+    val versionsSeen = reads.map(_.head._2)
+    assert(versionsSeen.forall(v => v >= 0.0 && v <= 4.0))
+    assert(versionsSeen == versionsSeen.sorted,
+      "each read resolves the pointer: versions never go back")
+    assert(values(TableManifest.readPartitions(spark, path,
+      Seq("2024-01-01"))) == Set(4.0))
+  }
 }
