@@ -65,13 +65,12 @@ object Bench {
       "documents", "embeddings").foreach { t =>
       spark.read.parquet(s"$sfDir/$t.parquet").count()
     }
-    // events carries TIMESTAMP(NANOS): warm it under a scoped
-    // nanosAsLong window, then restore — the catalog's events helper
-    // does its own scoped inference, so the benched queries must run
-    // (and do run) in a conf-clean session
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$sfDir/events.parquet").count()
-    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    // events may carry TIMESTAMP(NANOS): warm it on a nanosAsLong
+    // session derived from `spark` — the catalog's events helper does
+    // its own inference the same way, so the benched queries run in a
+    // conf-clean session
+    Sessions.derived(spark, Sessions.NanosAsLong)
+      .read.parquet(s"$sfDir/events.parquet").count()
     // a crashing query must FAIL the bench visibly (nonzero exit + its
     // error in the JSON), never bench as a fast query — r1's x15 failure
     // was invisible here and caught only by the correctness oracle.

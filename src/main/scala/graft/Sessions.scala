@@ -15,8 +15,15 @@ import org.apache.spark.sql.SparkSession
   * here makes the sizing a property of the engine, not of one main.
   *
   * Per-main knobs stay per-main (core count, shuffle sizing, timezone,
-  * log level) — they are workload shape, not engine tuning. Metadata
-  * work gets its own derived session ([[meta]]). */
+  * log level) — they are workload shape, not engine tuning.
+  *
+  * Work that needs other SQL settings than its caller's session —
+  * metadata-scale manifest plans ([[meta]]), micro-batch shuffle
+  * sizing, AQE off on batch-bounded plans, a parquet inference flag —
+  * runs on a [[derived]] session with those settings pinned. No code
+  * sets or unsets a conf on a session that other work shares: a
+  * reader beside a writer plans under its own session's conf, never
+  * under a window the writer opened. */
 object Sessions {
 
   /** Generated-class cache entries: the streaming/store-protocol rows
@@ -47,42 +54,69 @@ object Sessions {
     s
   }
 
+  /** AQE off, for plans whose every exchange is batch-bounded: each
+    * adaptive query stage would only be one more scheduler round-trip
+    * (a JOB), with nothing to adapt. */
+  val AqeOff: Map[String, String] = Map("spark.sql.adaptive.enabled" -> "false")
+
+  /** `spark.sql.shuffle.partitions` pinned to `n`; `n <= 0` pins
+    * nothing (the parent's sizing is inherited). */
+  def shufflePartitions(n: Int): Map[String, String] =
+    if (n <= 0) Map.empty
+    else Map("spark.sql.shuffle.partitions" -> n.toString)
+
+  /** TIMESTAMP(NANOS) parquet columns read as ns-since-epoch longs:
+    * Spark 4 refuses to infer that footer type otherwise. */
+  val NanosAsLong: Map[String, String] =
+    Map("spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
   /** Pinned on every metadata session: manifest stages are bounded by
     * FILE counts, so AQE's per-exchange stage jobs are pure scheduler
     * latency (60-80% of each table-protocol row's jobs in Bench's
     * `jobs` column) and a data-sized shuffle count is tiny-task
     * overhead. */
-  private val MetaPinned = Map(
-    "spark.sql.adaptive.enabled" -> "false",
-    "spark.sql.shuffle.partitions" -> "4")
+  private val MetaPinned = AqeOff ++ shufflePartitions(4)
 
-  private val metaSessions =
-    new java.util.WeakHashMap[SparkSession, SparkSession]()
+  private val derivedSessions = new java.util.WeakHashMap[SparkSession,
+    java.util.HashMap[Map[String, String], SparkSession]]()
 
-  /** The METADATA session of `data` (`newSession()`: same context, own
-    * SQL conf), created once and reused; manifest reads and publishes
-    * run on it, so their sizing never shows in `data`'s conf. Each call
-    * copies `data`'s CURRENT runtime SQL conf but the pinned keys
-    * (metadata plans read data files and cast keys to strings: time
-    * zone, `nanosAsLong` windows). Spark restores the caller's active
-    * session after each action. */
-  def meta(data: SparkSession): SparkSession = {
-    val m = metaSessions.synchronized {
-      metaSessions.computeIfAbsent(data, { d =>
-        val s = d.newSession()
-        MetaPinned.foreach { case (k, v) => s.conf.set(k, v) }
-        s
-      })
+  /** The session `parent` becomes under `pins`: a `newSession()` (same
+    * context, cache, catalog and extensions; its own SQL conf), created
+    * once per (parent, pins) and reused, with `pins` set on it. Each
+    * call copies `parent`'s CURRENT runtime SQL conf but the pinned
+    * keys, so work on it sees the parent's time zone, inference and
+    * other settings, and the pins never show in `parent`'s conf. A
+    * derived session of a derived session keeps both sets of pins.
+    * No pins = `parent` itself. Spark restores the caller's active
+    * session after each action; put a frame of `parent` onto it with
+    * [[org.apache.spark.sql.graft.bridge.onSession]]. */
+  def derived(parent: SparkSession, pins: Map[String, String]): SparkSession =
+    if (pins.isEmpty) parent
+    else {
+      val d = derivedSessions.synchronized {
+        derivedSessions
+          .computeIfAbsent(parent, _ => new java.util.HashMap())
+          .computeIfAbsent(pins, { _ =>
+            val s = parent.newSession()
+            pins.foreach { case (k, v) => s.conf.set(k, v) }
+            s
+          })
+      }
+      def runtime(s: SparkSession) = s.conf.getAll.filter { case (k, _) =>
+        !pins.contains(k) && d.conf.isModifiable(k)
+      }
+      val want = runtime(parent)
+      val have = runtime(d)
+      (have.keySet -- want.keySet).foreach(d.conf.unset)
+      want.foreach { case (k, v) =>
+        if (!have.get(k).contains(v)) d.conf.set(k, v)
+      }
+      d
     }
-    def runtime(s: SparkSession) = s.conf.getAll.filter { case (k, _) =>
-      !MetaPinned.contains(k) && m.conf.isModifiable(k)
-    }
-    val want = runtime(data)
-    val have = runtime(m)
-    (have.keySet -- want.keySet).foreach(m.conf.unset)
-    want.foreach { case (k, v) =>
-      if (!have.get(k).contains(v)) m.conf.set(k, v)
-    }
-    m
-  }
+
+  /** The METADATA session of `data`: manifest reads and publishes run
+    * on it, so their sizing ([[MetaPinned]]) never shows in `data`'s
+    * conf, while metadata plans that read data files and cast keys to
+    * strings still see `data`'s time zone and inference confs. */
+  def meta(data: SparkSession): SparkSession = derived(data, MetaPinned)
 }

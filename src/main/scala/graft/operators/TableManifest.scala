@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 
 /** File manifest for keyed, date-partitioned parquet tables — the
   * Delta/Iceberg idea reduced to its load-bearing core: readers and
@@ -224,10 +225,6 @@ object TableManifest {
     new java.util.LinkedHashMap[AnyRef, (AnyRef, Int)](64, 0.75f, true)
   private var memoWeight = 0L
 
-  private val sessionIds =
-    new java.util.WeakHashMap[SparkSession, java.lang.Long]()
-  private val nextSessionId = new java.util.concurrent.atomic.AtomicLong
-
   /** Runtime confs (exact keys and key prefixes) that steer parquet
     * schema and partition-value inference. */
   private val InferenceConfs = Seq("spark.sql.caseSensitive",
@@ -235,15 +232,13 @@ object TableManifest {
     "spark.sql.ansi.enabled", "spark.sql.parquet.", "spark.sql.files.",
     "spark.sql.sources.", "spark.sql.legacy.")
 
-  /** The memo scope of a reading session: its identity and its current
-    * [[InferenceConfs]] values — changing any of them plans afresh. */
-  private def scopeOf(s: SparkSession): (java.lang.Long, Map[String, String]) = {
-    val id = sessionIds.synchronized {
-      sessionIds.computeIfAbsent(s,
-        (_: SparkSession) => Long.box(nextSessionId.incrementAndGet()))
-    }
-    (id, s.conf.getAll.filter { case (k, _) => InferenceConfs.exists(k.startsWith) })
-  }
+  /** The memo scope of a reading session: its current
+    * [[InferenceConfs]] values — changing any of them plans afresh.
+    * Not the session itself: every memoized value is a schema or a
+    * file list, never a frame, so a session derived from the reader
+    * (same inference confs) reuses the reader's entries. */
+  private def scopeOf(s: SparkSession): Map[String, String] =
+    s.conf.getAll.filter { case (k, _) => InferenceConfs.exists(k.startsWith) }
 
   private def weightOf(x: Any): Int = x match {
     case s: Iterable[_] => s.size + s.iterator.map(weightOf).sum
@@ -452,13 +447,12 @@ object TableManifest {
     // partial row per map task regardless of batch size (nothing to
     // adapt), and AQE would materialize it as its own query-stage JOB —
     // pure scheduler latency on every merge (Bench's `jobs` column)
-    val statsRow = graft.ScopedSessionConf.withConf(
-        updates.sparkSession, "spark.sql.adaptive.enabled", "false") {
-      updates.agg(
+    val statsRow = bridge.onSession(updates,
+        graft.Sessions.derived(updates.sparkSession, graft.Sessions.AqeOff))
+      .agg(
         collect_set(col(partitionCol)).as("parts"),
         approx_count_distinct(xxhash64(keys.map(col): _*)).as("key_est"))
-        .collect().head
-    }
+      .collect().head
     (statsRow.getSeq[Any](0), statsRow.getLong(1))
   }
 
@@ -538,11 +532,6 @@ object TableManifest {
         val broadcastKeys = keyEst <= BroadcastMaxKeys
         val merged = MergeUpsert.merge(existing, updates, keys,
           broadcastKeys = broadcastKeys)
-        val write = () => merged
-          .repartition(col(partitionCol)) // one task per date → one file per date
-          .sortWithinPartitions(keys.map(col): _*) // clustered row groups →
-          // parquet min/max stats prune key lookups inside each date file
-          .write.mode(SaveMode.Append).partitionBy(partitionCol).parquet(path)
         // Incremental-sized batches (the same signal that picks the
         // broadcast anti-join) also drop AQE for the write: the plan's
         // exchanges (update dedup, the partition-layout repartition)
@@ -551,10 +540,13 @@ object TableManifest {
         // are key-estimate-bounded and its layout repartition is
         // explicit. Backfill-scale batches keep AQE (skew + coalescing
         // matter there).
-        if (broadcastKeys)
-          graft.ScopedSessionConf.withConf(spark,
-            "spark.sql.adaptive.enabled", "false")(write())
-        else write()
+        val writer = if (broadcastKeys)
+          graft.Sessions.derived(spark, graft.Sessions.AqeOff) else spark
+        bridge.onSession(merged, writer)
+          .repartition(col(partitionCol)) // one task per date → one file per date
+          .sortWithinPartitions(keys.map(col): _*) // clustered row groups →
+          // parquet min/max stats prune key lookups inside each date file
+          .write.mode(SaveMode.Append).partitionBy(partitionCol).parquet(path)
         MergeWriteReport(touched.length, keyEst, broadcastKeys)
     }
     // invalidate the shared file-listing cache for readers of this path
@@ -780,11 +772,33 @@ object TableManifest {
     * deleted and republished under the same name gets a new marker. A
     * frame already planned keeps the version it was planned from. */
   def readPartitions(spark: SparkSession, path: String, parts: Seq[Any],
-                     partitionCol: String = "date"): DataFrame = {
-    val live = liveOrFail(spark, path)
+                     partitionCol: String = "date"): DataFrame =
+    readLiveParts(spark, path, liveOrFail(spark, path), parts, partitionCol)
+
+  private def readLiveParts(spark: SparkSession, path: String, live: Live,
+                            parts: Seq[Any], partitionCol: String): DataFrame =
     readFiles(spark, path, live, keptFiles(spark, live, parts.map(_.toString)))
       .filter(col(partitionCol).isin(parts: _*))
-  }
+
+  /** [[readPartitions]] of the live manifest's partitions that `keep`
+    * selects; None when there is no manifest or `keep` selects none.
+    * The partition list and the read come from ONE resolution of the
+    * manifest, so a publish between them cannot make them disagree. */
+  def readPartitionsWhere(spark: SparkSession, path: String,
+                          partitionCol: String)(
+                          keep: String => Boolean): Option[DataFrame] =
+    liveManifest(spark, path).flatMap { live =>
+      // the partition list is O(#partitions) manifest metadata
+      val parts = live.rows.select("part").distinct().collect()
+        .map(_.getString(0)).filter(keep).toSeq
+      if (parts.isEmpty) None
+      else Some(readLiveParts(spark, path, live, parts, partitionCol))
+    }
+
+  /** [[readViaManifest]] when a manifest exists, else None — one
+    * resolution of the live manifest serves both. */
+  def readIfManifested(spark: SparkSession, path: String): Option[DataFrame] =
+    liveManifest(spark, path).map(readLive(spark, path, _, mergeSchema = false))
 
   /** [[readViaManifest]] when a manifest exists, else a plain scan of
     * `path` — for dirs that are plain parquet rather than manifested
@@ -792,10 +806,7 @@ object TableManifest {
     * unregistered out-of-band files are silently excluded, not an
     * error. */
   def readOrPlain(spark: SparkSession, path: String): DataFrame =
-    liveManifest(spark, path) match {
-      case Some(live) => readLive(spark, path, live, mergeSchema = false)
-      case None => spark.read.parquet(path)
-    }
+    readIfManifested(spark, path).getOrElse(spark.read.parquet(path))
 
   final case class CompactReport(partsCompacted: Int, filesBefore: Long,
                                  filesAfter: Long)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types._
 import graft.functions.{QualityRules, TextFunctions}
 import graft.operators.{ArtifactStore, AsOfJoin, BloomFilter, Chunking,
@@ -27,15 +28,12 @@ object ExtensionCatalog {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** Scoped micro-batch shuffle sizing for incremental-store replays
-    * (the StreamCuration lesson): each appended batch is small by
-    * construction, so its store merges and candidate joins should not
-    * run at the session's batch-sized partition count. Lives at the
-    * CALL site, not inside appendBatch/appendExact — those return lazy
-    * frames, so the scope must cover the loop that materializes them
-    * (localCheckpoint/count). */
-  private def withShufflePartitions[T](s: SparkSession, n: Int)(f: => T): T =
-    graft.ScopedSessionConf.withShufflePartitions(s, n)(f)
+  /** `s` with micro-batch shuffle sizing, for incremental-store
+    * replays (the StreamCuration lesson): each appended batch is small
+    * by construction, so its store merges and candidate joins should
+    * not run at the session's batch-sized partition count. */
+  private def microBatch(s: SparkSession): SparkSession =
+    graft.Sessions.derived(s, graft.Sessions.shufflePartitions(8))
 
   /** The streaming sources' documented event layout: `ts` as
     * ns-since-epoch longs. The on-disk testdata layout is the driver's
@@ -2261,18 +2259,18 @@ object ExtensionCatalog {
          |SELECT id_a, id_b, est_jaccard FROM cand
          |ORDER BY id_a, id_b""".stripMargin),
       (s, dir) => {
-        val docs = t(s, dir, "documents")
+        val mb = microBatch(s)
+        val docs = t(mb, dir, "documents")
         val store = tmp("graft-incdedup") + "/sigs"
-        withShufflePartitions(s, 8) {
-          (0 until 3).map { k =>
-            // localCheckpoint: each emission is materialized before the
-            // next append supersedes the store version it reads — and
-            // inside the partition scope, which a lazy return would miss
-            IncrementalDedup.appendBatch(s, store,
-              docs.filter(col("doc_id") % 3 === k), "doc_id", "text")
-              .localCheckpoint()
-          }.reduce(_ unionByName _)
-        }.orderBy("id_a", "id_b")
+        val emitted = (0 until 3).map { k =>
+          // localCheckpoint: each emission is materialized before the
+          // next append supersedes the store version it reads
+          IncrementalDedup.appendBatch(mb, store,
+            docs.filter(col("doc_id") % 3 === k), "doc_id", "text")
+            .localCheckpoint()
+        }.reduce(_ unionByName _)
+        // the final sort is corpus-sized: back at the caller's sizing
+        bridge.onSession(emitted, s).orderBy("id_a", "id_b")
       }),
 
     // ---- incremental STREAMING curation: the corpus arrives in three
@@ -2353,13 +2351,12 @@ object ExtensionCatalog {
         |       count(*) AS n_copies
         |FROM documents GROUP BY 1 ORDER BY text_hash""".stripMargin),
       (s, dir) => {
-        val docs = t(s, dir, "documents")
+        val mb = microBatch(s)
+        val docs = t(mb, dir, "documents")
         val store = tmp("graft-incexact") + "/hashes"
-        withShufflePartitions(s, 8) {
-          (0 until 3).foreach { k =>
-            IncrementalDedup.appendExact(s, store,
-              docs.filter(col("doc_id") % 3 === k), "doc_id", "text").count()
-          }
+        (0 until 3).foreach { k =>
+          IncrementalDedup.appendExact(mb, store,
+            docs.filter(col("doc_id") % 3 === k), "doc_id", "text").count()
         }
         IncrementalDedup.exactReport(s, store).orderBy("text_hash")
       }),

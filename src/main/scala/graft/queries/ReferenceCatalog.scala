@@ -45,26 +45,16 @@ object ReferenceCatalog {
     *
     * No session-level side effect: `nanosAsLong` is needed only for
     * eager, driver-side SCHEMA INFERENCE (the footer's ns type maps to
-    * LongType), so it is set and restored around that call alone. The
-    * returned lazy frame carries the inferred schema explicitly, and a
-    * scan with an explicit long schema needs no conf at execution time
-    * (NanosProbeSpec proves this). Later reads in the same session see
-    * whatever conf they started with. */
-  /** Guards the set-infer-restore window below: two threads of one
-    * session interleaving set/restore could leave the conf flipped
-    * (A restores, then B "restores" the value it read during A's
-    * window). Serializing the window makes restore exact; a concurrent
-    * bare ns-parquet read OUTSIDE this helper can still observe the
-    * in-window value — the helper is the convention point, direct
-    * reads are on the caller. */
-  private val nanosInferLock = new Object
-
+    * LongType), so only that inference runs with it, on a session
+    * derived from `s`. The returned lazy frame carries the inferred
+    * schema explicitly, and a scan with an explicit long schema needs
+    * no conf at execution time (NanosProbeSpec proves this). `s`'s own
+    * conf never changes. */
   def events(s: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
     // Plain inference succeeds for MICROS/MILLIS layouts (with or
     // without tz annotation); only a TIMESTAMP(NANOS) footer makes
-    // Spark 4 throw, and only then do we need the nanosAsLong window.
+    // Spark 4 throw, and only then do we need nanosAsLong.
     val schema =
       try s.read.parquet(path).schema
       catch {
@@ -77,17 +67,10 @@ object ReferenceCatalog {
             if Option(first.getMessage)
               .exists(m => m.contains("Illegal Parquet type") &&
                 m.contains("NANOS")) =>
-          nanosInferLock.synchronized {
-            val prev = s.conf.getOption(key)
-            s.conf.set(key, "true")
-            try s.read.parquet(path).schema
-            catch { case scala.util.control.NonFatal(retry) =>
-              retry.addSuppressed(first); throw retry }
-            finally prev match {
-              case Some(v) => s.conf.set(key, v)
-              case None => s.conf.unset(key)
-            }
-          }
+          try graft.Sessions.derived(s, graft.Sessions.NanosAsLong)
+            .read.parquet(path).schema
+          catch { case scala.util.control.NonFatal(retry) =>
+            retry.addSuppressed(first); throw retry }
       }
     val raw = s.read.schema(schema).parquet(path)
     schema("ts").dataType match {

@@ -40,20 +40,16 @@ object Bucketing {
     spark.table(tableName)
 
   /** Join two same-bucket-count tables on their bucket keys without a
-    * shuffle, with broadcast disabled for the scope so the SMB path is
-    * the one that runs (a broadcast would ALSO skip the shuffle, but
-    * then the layout proves nothing). The caller's `agg` runs and is
-    * MATERIALIZED inside the scope — a lazy frame would escape it. */
+    * shuffle. A `merge` join hint makes the sort-merge path the one
+    * that runs (a broadcast would ALSO skip the shuffle, but then the
+    * layout proves nothing). Returns the caller's `agg` of the join. */
   def bucketedJoin(spark: SparkSession, leftTable: String,
                    rightTable: String, leftKey: String,
                    rightKey: String)(
                    agg: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.col
-    graft.ScopedSessionConf.withConf(spark,
-      "spark.sql.autoBroadcastJoinThreshold", "-1") {
-      val joined = readTable(spark, leftTable)
-        .join(readTable(spark, rightTable), col(leftKey) === col(rightKey))
-      agg(joined).localCheckpoint(eager = true)
-    }
+    agg(readTable(spark, leftTable)
+      .join(readTable(spark, rightTable).hint("merge"),
+        col(leftKey) === col(rightKey)))
   }
 }

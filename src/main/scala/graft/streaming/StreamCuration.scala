@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.functions.TextFunctions
@@ -138,8 +139,7 @@ object StreamCuration {
     * epoch partition column; filters on it are partition PRUNING. */
   private[graft] def readStoreOpt(spark: SparkSession,
                                   path: String): Option[DataFrame] =
-    TableManifest.load(spark, path)
-      .map(_ => TableManifest.readViaManifest(spark, path))
+    TableManifest.readIfManifested(spark, path)
 
   /** O(batch) merge into an epoch-partitioned manifested keyed store —
     * the r17 replacement for the per-batch [[MergeUpsert.mergeWritePlain]]
@@ -245,17 +245,12 @@ object StreamCuration {
       new IllegalStateException(
         s"no published curated table under $workDir — run a publishing " +
           "batch or republishCurated first"))
-    val base = TableManifest.load(spark, curatedBasePath(workDir)) match {
-      case None => emptyCurated(spark, workDir)
-      case Some(m) =>
-        // the epoch list is O(#epochs) manifest metadata, tiny by
-        // construction (compactCurated folds old epochs)
-        val parts = m.select("part").distinct().collect()
-          .map(_.getString(0)).filter(_ <= p).toSeq
-        if (parts.isEmpty) emptyCurated(spark, workDir)
-        else TableManifest.readPartitions(spark, curatedBasePath(workDir),
-          parts, EpochCol).drop(EpochCol)
-    }
+    // the epoch list is O(#epochs), tiny by construction
+    // (compactCurated folds old epochs)
+    val base = TableManifest.readPartitionsWhere(spark,
+        curatedBasePath(workDir), EpochCol)(_ <= p)
+      .map(_.drop(EpochCol))
+      .getOrElse(emptyCurated(spark, workDir))
     MergeUpsert.existingPlain(spark, curatedDelsPath(workDir)) match {
       case Some(d) =>
         // deletion vectors are SPARSE (displaced near-dup keepers) —
@@ -435,25 +430,23 @@ object StreamCuration {
     // face): a micro-batch is SMALL by construction, but its ~10
     // shuffles (store merges, candidate join, verify, publish) would
     // otherwise run at the session's batch-sized partition count —
-    // measured 26% of the 3-batch drain at 32 partitions. The shared
-    // ScopedSessionConf lock makes the set/restore window sound even if
-    // batches ever stop being serial. 0 = inherit the session conf.
-    graft.ScopedSessionConf.withShufflePartitions(spark, shufflePartitions) {
-      // AQE off for the MICRO path (r16): adaptive execution
-      // materializes every exchange as its own query-stage JOB, and at
-      // micro-batch scale those jobs are pure scheduler latency — the
-      // warm 3-batch x39 replay ran 105 jobs under AQE for ~20 actual
-      // actions (~25 ms apiece). A micro plan has nothing for AQE to
-      // adapt: its joins are explicitly broadcast and its shuffles are
-      // already scoped to `shufflePartitions`. Replay-scale batches
-      // (width > 0) keep AQE — skew and coalescing matter there.
-      val run = () => curateBatchInner(spark, batch, workDir, minQuality,
-        rates, defaultRate, publish, width, epoch, scanWidth)
-      if (width == 0)
-        graft.ScopedSessionConf.withConf(spark,
-          "spark.sql.adaptive.enabled", "false")(run())
-      else run()
-    }
+    // measured 26% of the 3-batch drain at 32 partitions. 0 = inherit
+    // the session conf.
+    // AQE off for the MICRO path (r16): adaptive execution
+    // materializes every exchange as its own query-stage JOB, and at
+    // micro-batch scale those jobs are pure scheduler latency — the
+    // warm 3-batch x39 replay ran 105 jobs under AQE for ~20 actual
+    // actions (~25 ms apiece). A micro plan has nothing for AQE to
+    // adapt: its joins are explicitly broadcast and its shuffles are
+    // already scoped to `shufflePartitions`. Replay-scale batches
+    // (width > 0) keep AQE — skew and coalescing matter there.
+    // Both run on a session derived from `spark`, so a reader of
+    // `spark` beside the batch never plans under this sizing.
+    val cs = graft.Sessions.derived(spark,
+      graft.Sessions.shufflePartitions(shufflePartitions) ++
+        (if (width == 0) graft.Sessions.AqeOff else Map.empty))
+    curateBatchInner(cs, bridge.onSession(batch, cs), workDir, minQuality,
+      rates, defaultRate, publish, width, epoch, scanWidth)
   }
 
   /** ~2 MB of compressed parquet per core ≈ the old 2048-rows-per-core
@@ -595,20 +588,23 @@ object StreamCuration {
     // a replay-scale batch it inherits narrow parallelism (its input
     // is a micro-batch-sized join), so it runs width-wide and
     // materializes BEFORE the pairs merge — the merge round-trip then
-    // moves only slim verified rows. Same-thread nesting of the scoped
-    // conf restores outside-in. Micro-batches keep the lazy narrow
-    // verify (one fewer materialization round).
+    // moves only slim verified rows; its width-wide shuffles run on a
+    // session derived from this batch's, and the checkpoint comes back
+    // onto the batch's session for the merge. Micro-batches keep the
+    // lazy narrow verify (one fewer materialization round).
     // verified is consumed twice (pairs merge + label edges); the
     // micro path COLLECTS it (pairs are candidate-verified near-dups —
     // collected-scale by the pipeline's whole point) and re-merges a
     // LocalRelation; the replay path keeps the distributed checkpoint
     val verified =
-      if (width > 0)
-        graft.ScopedSessionConf.withShufflePartitions(spark, width) {
-          Dedup.verifyCandidates(involved.repartition(width), "doc_id",
-            "text", cands, minJaccard = 0.4).localCheckpoint()
-        }
-      else
+      if (width > 0) {
+        val ws = graft.Sessions.derived(spark,
+          graft.Sessions.shufflePartitions(width))
+        bridge.onSession(Dedup.verifyCandidates(
+          bridge.onSession(involved, ws).repartition(width), "doc_id",
+          "text", bridge.onSession(cands, ws), minJaccard = 0.4)
+          .localCheckpoint(), spark)
+      } else
         // checkpointed on the micro path too (r16): mergeWritePlain's
         // plan consumes `updates` twice (distinct-keys broadcast +
         // union), so a lazy verify ran its wide text join TWICE inside

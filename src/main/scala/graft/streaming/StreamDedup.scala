@@ -61,10 +61,11 @@ object StreamDedup {
     * Returns the terminated query so callers can read
     * `lastProgress.stateOperators` and assert the state bound holds.
     *
-    * `shufflePartitions` > 0 scopes `spark.sql.shuffle.partitions` for
-    * the drain (restored after) — the [[StreamJoin]] lesson: the dedup
-    * materializes ONE state store per shuffle partition, each
-    * snapshot/delta-committed per micro-batch, so with per-file
+    * `shufflePartitions` > 0 sets `spark.sql.shuffle.partitions` for
+    * the drain alone, on a session derived from `spark` — the
+    * [[StreamJoin]] lesson: the dedup materializes ONE state store per
+    * shuffle partition, each snapshot/delta-committed per micro-batch,
+    * so with per-file
     * micro-batches the floor is O(files × partitions) state-store
     * FILE I/O however small the data. A stateful query pins its
     * partition count in the checkpoint at first start; size it to the
@@ -75,25 +76,25 @@ object StreamDedup {
                          checkpoint: String,
                          watermarkDelay: String = "1 hour",
                          shufflePartitions: Int = 0): StreamingQuery = {
-    graft.ScopedSessionConf.withShufflePartitions(spark, shufflePartitions) {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcGlob)
-        // DIV, not /: true division goes through double and loses
-        // sub-ms precision at epoch-ns magnitudes
-        .withColumn("_ets", timestamp_micros(expr(s"$tsNsCol DIV 1000")))
-        .withWatermark("_ets", watermarkDelay)
-        .dropDuplicatesWithinWatermark(idCol)
-        .drop("_ets")
-        .writeStream
-        .format("parquet")
-        .option("path", targetPath)
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q
-    }
+    val q = graft.Sessions.derived(spark,
+        graft.Sessions.shufflePartitions(shufflePartitions))
+      .readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(srcGlob)
+      // DIV, not /: true division goes through double and loses
+      // sub-ms precision at epoch-ns magnitudes
+      .withColumn("_ets", timestamp_micros(expr(s"$tsNsCol DIV 1000")))
+      .withWatermark("_ets", watermarkDelay)
+      .dropDuplicatesWithinWatermark(idCol)
+      .drop("_ets")
+      .writeStream
+      .format("parquet")
+      .option("path", targetPath)
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    q
   }
 
   /** Read the deduplicated table back through the sink's commit log. */

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.operators.MergeUpsert
@@ -94,32 +95,31 @@ object StreamIngest {
         // session partition count. Default inherits the session conf —
         // measured: corpus-sized redelivery batches (x243's shape)
         // REGRESS under a small fixed count, so this must stay a
-        // caller decision. Set on the micro-batch's OWN session clone,
-        // where the batch plans actually execute.
-        graft.ScopedSessionConf.withShufflePartitions(
-          batch.sparkSession, shufflePartitions) {
-          // `transform` maps the PRODUCER's arrival layout to the table
-          // layout (parse ts → partition date, round, project) before
-          // the keyed merge — per micro-batch, so a redelivered file
-          // re-maps to identical rows
-          // retainVersions must COVER the vacuum window: each publish
-          // GCs the manifest store to its retainVersions, so merging
-          // with the default (2) while keepVersions > 2 would silently
-          // shrink the retained-version set every batch — vacuum could
-          // then never see (or honor) the window the caller asked for
-          graft.operators.TableManifest.mergeWriteManifested(
-            batch.sparkSession, targetPath, transform(batch), keys,
-            partitionCol, zoneKey,
-            retainVersions = math.max(2, keepVersions))
-          // a vacuum that races a crash is safe: it deletes only files
-          // no retained manifest version references, which no restart
-          // can resurrect (the checkpointed source never re-delivers a
-          // committed batch, and an uncommitted batch re-merges fresh)
-          if (vacuumEvery > 0 && (batchId + 1) % vacuumEvery == 0) {
-            graft.operators.TableManifest.vacuum(
-              batch.sparkSession, targetPath, keepVersions)
-            ()
-          }
+        // caller decision. The merge runs on a session derived from
+        // the micro-batch's OWN session clone, where the batch plans
+        // execute.
+        val bs = graft.Sessions.derived(batch.sparkSession,
+          graft.Sessions.shufflePartitions(shufflePartitions))
+        // `transform` maps the PRODUCER's arrival layout to the table
+        // layout (parse ts → partition date, round, project) before
+        // the keyed merge — per micro-batch, so a redelivered file
+        // re-maps to identical rows
+        // retainVersions must COVER the vacuum window: each publish
+        // GCs the manifest store to its retainVersions, so merging
+        // with the default (2) while keepVersions > 2 would silently
+        // shrink the retained-version set every batch — vacuum could
+        // then never see (or honor) the window the caller asked for
+        graft.operators.TableManifest.mergeWriteManifested(
+          bs, targetPath, transform(bridge.onSession(batch, bs)), keys,
+          partitionCol, zoneKey,
+          retainVersions = math.max(2, keepVersions))
+        // a vacuum that races a crash is safe: it deletes only files
+        // no retained manifest version references, which no restart
+        // can resurrect (the checkpointed source never re-delivers a
+        // committed batch, and an uncommitted batch re-merges fresh)
+        if (vacuumEvery > 0 && (batchId + 1) % vacuumEvery == 0) {
+          graft.operators.TableManifest.vacuum(bs, targetPath, keepVersions)
+          ()
         }
         afterBatch(batchId)
       }

@@ -34,10 +34,11 @@ object StreamJoin {
     * micro-batches — the watermark then advances BETWEEN files, which
     * is what exercises (and lets a test observe) state eviction.
     *
-    * `shufflePartitions` > 0 scopes `spark.sql.shuffle.partitions` for
-    * the drain (restored after): a stream-stream join materializes
-    * FOUR state stores (left/right × keyToNumValues/keyWithIndex) per
-    * shuffle partition, each snapshot/delta-committed per micro-batch,
+    * `shufflePartitions` > 0 sets `spark.sql.shuffle.partitions` for
+    * the drain alone, on a session derived from `spark`: a
+    * stream-stream join materializes FOUR state stores (left/right ×
+    * keyToNumValues/keyWithIndex) per shuffle partition, each
+    * snapshot/delta-committed per micro-batch,
     * so the per-batch floor is O(shufflePartitions) FILE I/O however
     * small the data. Size it to the drain's actual rate — a stateful
     * query pins its partition count in the checkpoint at first start,
@@ -52,8 +53,10 @@ object StreamJoin {
                                watermarkDelay: String = "1 hour",
                                maxFilesPerTrigger: Int = 0,
                                shufflePartitions: Int = 0): StreamingQuery = {
+    val ds = graft.Sessions.derived(spark,
+      graft.Sessions.shufflePartitions(shufflePartitions))
     def side(glob: String, tag: String): DataFrame = {
-      val rd = spark.readStream.schema(schema)
+      val rd = ds.readStream.schema(schema)
       if (maxFilesPerTrigger > 0)
         rd.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       rd.parquet(glob)
@@ -77,16 +80,14 @@ object StreamJoin {
       .select(col("a_key").as(key), col("a_id"), col("b_id"),
         unix_millis(col("a_ts")).as("a_ms"),
         unix_millis(col("b_ts")).as("b_ms"))
-    graft.ScopedSessionConf.withShufflePartitions(spark, shufflePartitions) {
-      val q = joined.writeStream
-        .format("parquet")
-        .option("path", targetPath)
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q
-    }
+    val q = joined.writeStream
+      .format("parquet")
+      .option("path", targetPath)
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    q
   }
 
   /** Read the joined table back through the sink's commit log. */

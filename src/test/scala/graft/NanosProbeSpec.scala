@@ -20,38 +20,7 @@ class NanosProbeSpec extends SparkSpec {
   // current driver layout (MICROS/NTZ as of round 7)
   private val dir = "/root/testdata/sf0.001"
 
-  /** A 3-row events.parquet with ts annotated TIMESTAMP(NANOS) — the
-    * legacy driver layout. Returns the directory holding it. */
-  private lazy val nanosDir: String = {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val schema = Types.buildMessage()
-      .required(PrimitiveTypeName.INT64).named("event_id")
-      .required(PrimitiveTypeName.INT64)
-        .as(LogicalTypeAnnotation.timestampType(
-          /*adjustedToUTC*/ false, LogicalTypeAnnotation.TimeUnit.NANOS))
-        .named("ts")
-      .required(PrimitiveTypeName.INT64).named("user_id")
-      .named("events")
-    val work = java.nio.file.Files.createTempDirectory("graft-nanos").toString
-    val writer = ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(s"$work/events.parquet"))
-      .withType(schema).build()
-    val fac = new SimpleGroupFactory(schema)
-    // 1700000000s + {0, 123456789ns, 999999999ns}: the sub-µs residue
-    // must truncate, not round
-    Seq(0L, 123456789L, 999999999L).zipWithIndex.foreach { case (ns, i) =>
-      val g = fac.newGroup()
-      g.add("event_id", i.toLong)
-      g.add("ts", 1700000000L * 1000000000L + ns)
-      g.add("user_id", 7L)
-      writer.write(g)
-    }
-    writer.close()
-    work
-  }
+  private lazy val nanosDir: String = NanosProbeSpec.nanosEventsDir()
 
   test("NANOS layout: events() truncates ns→µs and returns TimestampType") {
     spark.conf.unset(key)
@@ -103,5 +72,40 @@ class NanosProbeSpec extends SparkSpec {
     assert(spark.conf.get(key) == "true",
       "catalog query must restore the caller's prior conf value")
     spark.conf.unset(key)
+  }
+}
+
+object NanosProbeSpec {
+  /** A 3-row events.parquet with ts annotated TIMESTAMP(NANOS) — the
+    * legacy driver layout. Returns the directory holding it. */
+  def nanosEventsDir(): String = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val schema = Types.buildMessage()
+      .required(PrimitiveTypeName.INT64).named("event_id")
+      .required(PrimitiveTypeName.INT64)
+        .as(LogicalTypeAnnotation.timestampType(
+          /*adjustedToUTC*/ false, LogicalTypeAnnotation.TimeUnit.NANOS))
+        .named("ts")
+      .required(PrimitiveTypeName.INT64).named("user_id")
+      .named("events")
+    val work = java.nio.file.Files.createTempDirectory("graft-nanos").toString
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$work/events.parquet"))
+      .withType(schema).build()
+    val fac = new SimpleGroupFactory(schema)
+    // 1700000000s + {0, 123456789ns, 999999999ns}: the sub-µs residue
+    // must truncate, not round
+    Seq(0L, 123456789L, 999999999L).zipWithIndex.foreach { case (ns, i) =>
+      val g = fac.newGroup()
+      g.add("event_id", i.toLong)
+      g.add("ts", 1700000000L * 1000000000L + ns)
+      g.add("user_id", 7L)
+      writer.write(g)
+    }
+    writer.close()
+    work
   }
 }

@@ -18,6 +18,18 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.warehouse.dir", SparkSpec.warehouseDir)
     .getOrCreate()
 
+  /** Runs `f` with `kvs` set on [[spark]]'s conf, then restores each
+    * key's previous value, or unsets it when it had none. */
+  def withConfs[T](kvs: (String, String)*)(f: => T): T = {
+    // getAll: getOption reports an unset key's default as a value
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   def d(s: String): java.sql.Date = java.sql.Date.valueOf(s)
   def ts(s: String): java.sql.Timestamp = java.sql.Timestamp.valueOf(s)
 }

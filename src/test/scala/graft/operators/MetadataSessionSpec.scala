@@ -25,15 +25,6 @@ class MetadataSessionSpec extends SparkSpec {
     r
   }
 
-  private def withConfs[T](kvs: (String, String)*)(f: => T): T = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getAll.get(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("one metadata session per data session, pinned once, data conf " +
     "untouched") {
     val ms = graft.Sessions.meta(spark)
@@ -124,6 +115,26 @@ class MetadataSessionSpec extends SparkSpec {
 
   test("a data query on another thread never sees metadata sizing while " +
     "vacuum, compactManifested and exportSymlinkManifest run") {
+    // ...nor the data-scale sizing of an incremental merge, a micro
+    // curateBatch, bucketedJoin or a NANOS events read: each runs on a
+    // session derived from `spark`, never by changing `spark`'s conf
+    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+    val broadcastKey = "spark.sql.autoBroadcastJoinThreshold"
+    val broadcast = spark.conf.get(broadcastKey)
+    val sfDir = "/root/testdata/sf0.001"
+    val nanosDir = graft.NanosProbeSpec.nanosEventsDir()
+    val base = java.nio.file.Files.createTempDirectory("graft-metabkt")
+      .toString
+    graft.sources.Bucketing.writeBucketed(
+      (0L until 200L).map(i => (i, i % 5)).toDF("k", "lv"), "meta_bkt_l",
+      Seq("k"), 4, Seq("k"), path = Some(s"$base/l"))
+    graft.sources.Bucketing.writeBucketed(
+      (0L until 100L).map(i => (i * 2, i)).toDF("rk", "rv"), "meta_bkt_r",
+      Seq("rk"), 4, Seq("rk"), path = Some(s"$base/r"))
+    val cur = tmpDir()
+    graft.streaming.StreamCuration.publishQuantizedEmbeddings(spark, cur,
+      s"$sfDir/embeddings.parquet")
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     withConfs("spark.sql.shuffle.partitions" -> "7") {
       val path = tmpDir()
       def day(d: String, ids: Range) =
@@ -141,6 +152,16 @@ class MetadataSessionSpec extends SparkSpec {
           TableManifest.compactManifested(spark, path, "id")
           TableManifest.exportSymlinkManifest(spark, path, tmpDir())
           TableManifest.vacuum(spark, path, keepVersions = 1)
+          val rep = TableManifest.mergeWriteManifested(spark, path,
+            day("2024-01-02", (60 + r) until (65 + r)), keys = Seq("id"))
+          assert(rep.broadcastKeys, "an incremental-sized merge")
+          graft.streaming.StreamCuration.curateBatch(spark,
+            docs.filter(col("doc_id") % 3 === r), cur, minQuality = 0.3,
+            rates = Map("en" -> 0.8), defaultRate = 0.5,
+            publish = r == 2, epoch = r.toLong)
+          graft.sources.Bucketing.bucketedJoin(spark, "meta_bkt_l",
+            "meta_bkt_r", "k", "rk")(_.groupBy("lv").count()).collect()
+          graft.queries.ReferenceCatalog.events(spark, nanosDir).collect()
         }
       } catch { case t: Throwable => failure = Some(t) }
       finally done = true)
@@ -148,15 +169,52 @@ class MetadataSessionSpec extends SparkSpec {
       var samples = 0L
       while (!done) {
         seen.add(spark.conf.get("spark.sql.adaptive.enabled") + "/" +
-          spark.conf.get("spark.sql.shuffle.partitions"))
+          spark.conf.get("spark.sql.shuffle.partitions") + "/" +
+          spark.conf.get(broadcastKey) + "/" +
+          spark.conf.getAll.getOrElse(nanosKey, "unset"))
         samples += 1
       }
       meta.join()
+      spark.sql("DROP TABLE IF EXISTS meta_bkt_l")
+      spark.sql("DROP TABLE IF EXISTS meta_bkt_r")
       failure.foreach(throw _)
       assert(samples > 0)
-      assert(seen.asScala == Set("true/7"),
+      assert(seen.asScala == Set(s"true/7/$broadcast/unset"),
         s"data session conf changed under metadata work: $seen")
       assert(TableManifest.readViaManifest(spark, path).count() == 105L)
+      assert(graft.streaming.StreamCuration.readCurated(spark, cur)
+        .count() > 0)
+    }
+  }
+
+  test("a derived session's pins never show in its parent's conf; a " +
+    "session derived from a derived one keeps both sets of pins") {
+    val aqe = "spark.sql.adaptive.enabled"
+    val parts = "spark.sql.shuffle.partitions"
+    withConfs(parts -> "7") {
+      val before = spark.conf.getAll
+      val d1 = graft.Sessions.derived(spark, graft.Sessions.AqeOff)
+      val d2 = graft.Sessions.derived(d1,
+        graft.Sessions.shufflePartitions(3))
+      assert(graft.Sessions.derived(spark, graft.Sessions.AqeOff) eq d1,
+        "created once and reused")
+      assert(graft.Sessions.derived(spark, Map.empty) eq spark)
+      assert(d1.conf.get(aqe) == "false" && d1.conf.get(parts) == "7")
+      assert(d2.conf.get(aqe) == "false" && d2.conf.get(parts) == "3")
+      d2.range(10).groupBy(col("id") % 2).count().collect()
+      assert(spark.conf.getAll == before,
+        "deriving and running on derived sessions changed the parent")
+      assert(d1.conf.get(parts) == "7", "d2's pin reached d1")
+    }
+    // the parent's later runtime changes reach its derived sessions on
+    // their next derivation, the pins never
+    withConfs(parts -> "5", aqe -> "true") {
+      val d2 = graft.Sessions.derived(
+        graft.Sessions.derived(spark, graft.Sessions.AqeOff),
+        graft.Sessions.shufflePartitions(3))
+      assert(d2.conf.get(aqe) == "false" && d2.conf.get(parts) == "3")
+      assert(graft.Sessions.derived(spark, graft.Sessions.AqeOff)
+        .conf.get(parts) == "5")
     }
   }
 }

@@ -775,6 +775,23 @@ class TableManifestSpec extends SparkSpec {
     assert(warm(3).count() == 11L && warm(4).count() == 0L)
   }
 
+  test("planning memo: a read on a derived session right after the same " +
+    "read on its parent runs no Spark job") {
+    val path = tmpDir()
+    TableManifest.mergeWriteManifested(spark, path,
+      rows("2024-01-01", 1L to 50L, 1.0)
+        .unionByName(rows("2024-01-02", 51L to 90L, 1.0)),
+      keys = Seq("id"))
+    TableManifest.clearPlanMemo()
+    val onParent = TableManifest.readViaManifest(spark, path)
+    val ds = graft.Sessions.derived(spark,
+      graft.Sessions.AqeOff ++ graft.Sessions.shufflePartitions(3))
+    val (onDerived, jobs) = jobsOf(TableManifest.readViaManifest(ds, path))
+    assert(jobs == 0L, s"the derived session's read planned afresh: $jobs jobs")
+    assert(onDerived.sparkSession eq ds)
+    assert(sortedRows(onDerived) == sortedRows(onParent))
+  }
+
   test("planning memo: a read after a publish sees the new version; a " +
     "frame planned before it still reads the old one") {
     val path = tmpDir()
@@ -854,8 +871,8 @@ class TableManifestSpec extends SparkSpec {
     def read() = TableManifest.readPartitions(spark, path, Seq("2024-01-01"))
     assert(read().schema("date").dataType ==
       org.apache.spark.sql.types.DateType)
-    graft.ScopedSessionConf.withConf(spark,
-      "spark.sql.sources.partitionColumnTypeInference.enabled", "false") {
+    withConfs(
+      "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false") {
       val untyped = read()
       assert(untyped.schema("date").dataType ==
         org.apache.spark.sql.types.StringType)
@@ -864,8 +881,7 @@ class TableManifestSpec extends SparkSpec {
     val (typed, warmJobs) = jobsOf(read())
     assert(warmJobs == 0L && typed.schema("date").dataType ==
       org.apache.spark.sql.types.DateType)
-    graft.ScopedSessionConf.withConf(spark, "spark.sql.caseSensitive",
-      "true") {
+    withConfs("spark.sql.caseSensitive" -> "true") {
       val (sensitive, jobs) = jobsOf(read())
       assert(jobs > 0L, "a caseSensitive change must plan afresh")
       assert(sortedRows(sensitive) == sortedRows(typed))

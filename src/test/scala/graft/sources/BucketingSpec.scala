@@ -58,8 +58,7 @@ class BucketingSpec extends SparkSpec {
     // idempotent re-register over the existing name
     Bucketing.writeBucketed(right, "bspec_r", Seq("rk"), 4, Seq("rk"),
       path = Some(s"$base/r"))
-    graft.ScopedSessionConf.withConf(spark,
-      "spark.sql.autoBroadcastJoinThreshold", "-1") {
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = spark.table("bspec_l")
         .join(spark.table("bspec_r"), $"k" === $"rk")
       j.collect()
