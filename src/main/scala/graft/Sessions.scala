@@ -18,12 +18,14 @@ import org.apache.spark.sql.SparkSession
   * log level) — they are workload shape, not engine tuning.
   *
   * Work that needs other SQL settings than its caller's session —
-  * metadata-scale manifest plans ([[meta]]), micro-batch shuffle
-  * sizing, AQE off on batch-bounded plans, a parquet inference flag —
-  * runs on a [[derived]] session with those settings pinned. No code
-  * sets or unsets a conf on a session that other work shares: a
-  * reader beside a writer plans under its own session's conf, never
-  * under a window the writer opened. */
+  * metadata-scale manifest plans ([[meta]]), served responses
+  * bounded by the region count ([[Serving]]: AQE off, one shuffle
+  * partition), micro-batch shuffle sizing, AQE off on batch-bounded
+  * plans, a parquet inference flag — runs on a [[derived]] session
+  * with those settings pinned. No code sets or unsets a conf on a
+  * session that other work shares: a reader beside a writer plans
+  * under its own session's conf, never under a window the writer
+  * opened. */
 object Sessions {
 
   /** Generated-class cache entries: the streaming/store-protocol rows
@@ -77,8 +79,19 @@ object Sessions {
     * overhead. */
   private val MetaPinned = AqeOff ++ shufflePartitions(4)
 
+  /** Pinned on every serving session: a served response (an endpoint
+    * frame, the dashboard's KPI row over it) holds at most one row per
+    * region, so one partition holds it whole — `RangePartitioner` needs
+    * no sample job to sort it — and AQE would only add a stage job per
+    * exchange, with nothing to adapt. */
+  val Serving: Map[String, String] = AqeOff ++ shufflePartitions(1)
+
   private val derivedSessions = new java.util.WeakHashMap[SparkSession,
     java.util.HashMap[Map[String, String], SparkSession]]()
+
+  /** Every derived session's pins, its parent's pins included. */
+  private val pinsOf = new java.util.WeakHashMap[SparkSession,
+    Map[String, String]]()
 
   /** The session `parent` becomes under `pins`: a `newSession()` (same
     * context, cache, catalog and extensions; its own SQL conf), created
@@ -86,22 +99,27 @@ object Sessions {
     * call copies `parent`'s CURRENT runtime SQL conf but the pinned
     * keys, so work on it sees the parent's time zone, inference and
     * other settings, and the pins never show in `parent`'s conf. A
-    * derived session of a derived session keeps both sets of pins.
-    * No pins = `parent` itself. Spark restores the caller's active
-    * session after each action; put a frame of `parent` onto it with
+    * derived session of a derived session keeps both sets of pins;
+    * when `parent` already has every pin of `pins` (no pins, or
+    * `parent` is itself derived under them) it is returned as it is,
+    * so a frame already on a serving session stays there. Spark
+    * restores the caller's active session after each action; put a
+    * frame of `parent` onto it with
     * [[org.apache.spark.sql.graft.bridge.onSession]]. */
-  def derived(parent: SparkSession, pins: Map[String, String]): SparkSession =
-    if (pins.isEmpty) parent
-    else {
-      val d = derivedSessions.synchronized {
-        derivedSessions
-          .computeIfAbsent(parent, _ => new java.util.HashMap())
-          .computeIfAbsent(pins, { _ =>
-            val s = parent.newSession()
-            pins.foreach { case (k, v) => s.conf.set(k, v) }
-            s
-          })
-      }
+  def derived(parent: SparkSession, pins: Map[String, String]): SparkSession = {
+    val cached = derivedSessions.synchronized {
+      val held = Option(pinsOf.get(parent)).getOrElse(Map.empty[String, String])
+      if (pins.forall { case (k, v) => held.get(k).contains(v) }) None
+      else Some(derivedSessions
+        .computeIfAbsent(parent, _ => new java.util.HashMap())
+        .computeIfAbsent(pins, { _ =>
+          val s = parent.newSession()
+          pins.foreach { case (k, v) => s.conf.set(k, v) }
+          pinsOf.put(s, held ++ pins)
+          s
+        }))
+    }
+    cached.fold(parent) { d =>
       def runtime(s: SparkSession) = s.conf.getAll.filter { case (k, _) =>
         !pins.contains(k) && d.conf.isModifiable(k)
       }
@@ -113,6 +131,7 @@ object Sessions {
       }
       d
     }
+  }
 
   /** The METADATA session of `data`: manifest reads and publishes run
     * on it, so their sizing ([[MetaPinned]]) never shows in `data`'s

@@ -761,11 +761,12 @@ object TableManifest {
     * [[MergeUpsert.readPlain]]): every read still resolves `_CURRENT`
     * first, so memoizing changes no read's freshness. What a read then
     * derives from the version it resolved — the version dir's schema,
-    * the files kept for a partition set or key zone, the data schema of
-    * an exact file list under a `mergeSchema` setting — is memoized
-    * under that version's [[Published]] identity (dir path + commit
-    * marker mtime), the reading session and its inference confs, and
-    * re-planning an unchanged version runs no Spark job. This holds
+    * its partition list, the files kept for a partition set or key
+    * zone, the data schema of an exact file list under a `mergeSchema`
+    * setting — is memoized under that version's [[Published]] identity
+    * (dir path + commit marker mtime), the reading session and its
+    * inference confs, and re-planning an unchanged version runs no
+    * Spark job. This holds
     * because a version dir and the data files its manifest lists are
     * never rewritten in place once the marker exists (copy-on-write;
     * vacuum only deletes files no retained version lists), and a dir
@@ -788,9 +789,12 @@ object TableManifest {
                           partitionCol: String)(
                           keep: String => Boolean): Option[DataFrame] =
     liveManifest(spark, path).flatMap { live =>
-      // the partition list is O(#partitions) manifest metadata
-      val parts = live.rows.select("part").distinct().collect()
-        .map(_.getString(0)).filter(keep).toSeq
+      // the partition list is O(#partitions) manifest metadata, and
+      // fixed for a published version
+      val parts = planned(spark, live.id, "parts") {
+        live.rows.select("part").distinct().collect()
+          .map(_.getString(0)).toIndexedSeq
+      }.filter(keep)
       if (parts.isEmpty) None
       else Some(readLiveParts(spark, path, live, parts, partitionCol))
     }

@@ -30,6 +30,20 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** `body`'s result and the Spark jobs it started, counted by Bench's
+    * listener with the bus drained before and after. */
+  def jobsOf[T](body: => T): (T, Long) = {
+    val t = new Bench.Telemetry
+    val sc = spark.sparkContext
+    org.apache.spark.graft.listenerBridge.drain(sc)
+    sc.addSparkListener(t)
+    try {
+      val out = body
+      org.apache.spark.graft.listenerBridge.drain(sc)
+      (out, t.jobs.get)
+    } finally sc.removeSparkListener(t)
+  }
+
   def d(s: String): java.sql.Date = java.sql.Date.valueOf(s)
   def ts(s: String): java.sql.Timestamp = java.sql.Timestamp.valueOf(s)
 }

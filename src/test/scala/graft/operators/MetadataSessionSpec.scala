@@ -217,4 +217,16 @@ class MetadataSessionSpec extends SparkSpec {
         .conf.get(parts) == "5")
     }
   }
+
+  test("deriving a derived session under pins it already holds returns " +
+    "it as it is") {
+    val serving = graft.Sessions.derived(spark, graft.Sessions.Serving)
+    assert(serving ne spark)
+    assert(graft.Sessions.derived(serving, graft.Sessions.Serving) eq serving)
+    assert(graft.Sessions.derived(serving, graft.Sessions.AqeOff) eq serving,
+      "a subset of its pins")
+    val meta = graft.Sessions.meta(spark)
+    assert(graft.Sessions.derived(meta, graft.Sessions.Serving) ne meta,
+      "the same key under another value derives a new session")
+  }
 }

@@ -729,20 +729,6 @@ class TableManifestSpec extends SparkSpec {
     assert(TableManifest.readViaManifest(spark, path).count() == 60)
   }
 
-  /** `body`'s result and the Spark jobs it started, counted by Bench's
-    * listener with the bus drained before and after. */
-  private def jobsOf[T](body: => T): (T, Long) = {
-    val t = new graft.Bench.Telemetry
-    val sc = spark.sparkContext
-    org.apache.spark.graft.listenerBridge.drain(sc)
-    sc.addSparkListener(t)
-    try {
-      val out = body
-      org.apache.spark.graft.listenerBridge.drain(sc)
-      (out, t.jobs.get)
-    } finally sc.removeSparkListener(t)
-  }
-
   private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.select("id", "value", "date").collect().map(_.toString).sorted.toSeq
 
@@ -761,7 +747,9 @@ class TableManifestSpec extends SparkSpec {
       TableManifest.readViaManifest(spark, path),
       TableManifest.readOrPlain(spark, path),
       TableManifest.lookup(spark, path, "id", 60L, 70L)._1,
-      TableManifest.lookup(spark, path, "id", 500L, 600L)._1)
+      TableManifest.lookup(spark, path, "id", 500L, 600L)._1,
+      TableManifest.readPartitionsWhere(spark, path, "date")(
+        _ > "2024-01-01").get)
     TableManifest.clearPlanMemo()
     val (cold, coldJobs) = jobsOf(plans())
     assert(coldJobs > 0, "the first plans infer schemas and collect lists")
@@ -773,6 +761,7 @@ class TableManifestSpec extends SparkSpec {
     assert(sortedRows(warm(0)) ==
       sortedRows(plain.filter(col("date") === "2024-01-02")))
     assert(warm(3).count() == 11L && warm(4).count() == 0L)
+    assert(sortedRows(warm(5)) == sortedRows(warm(0)))
   }
 
   test("planning memo: a read on a derived session right after the same " +
