@@ -1,7 +1,14 @@
 package graft.operators
 
+import java.nio.ByteBuffer
+
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.functions.TextFunctions
 
 /** Distributed Bloom filter over builtins — the scale path for
@@ -162,42 +169,28 @@ object BloomFilter {
 
   /** [[positions]] with a PER-ROW bit count `m` (a long column, always a
     * multiple of 64): the manifest's per-file key blooms size m to each
-    * file's row count, so probe and build evaluate the position math
-    * with m as data. Same Kirsch–Mitzenmacher formula, all codegen
-    * builtins. */
+    * file's row count, so the probe evaluates the position math with m
+    * as data ([[FileKeyBloom]] sets the same positions at build). Same
+    * Kirsch–Mitzenmacher formula, all codegen builtins. */
   def positionsDyn(h: Column, m: Column, k: Int): Seq[Column] = {
     val h1 = h % m
     val h2 = lit(1L) + (shiftright(h, 30) % (m - lit(1L)))
     (0 until k).map(j => (h1 + lit(j.toLong) * h2) % m)
   }
 
-  /** Dense m-bit bitmap (array<long> of m/64 words) assembled from the
-    * SORTED sparse (widx, word) entries `ws` (array<struct<widx:long,
-    * word:long>>, ascending widx) — the manifest per-file key-bloom
-    * assembly (TableManifest.statsForFiles) factored here so the
-    * interpreter-tax audit (HofAudit) times the EXACT production
-    * expression. LINEAR gap-fill (r17 step-profile finding): walk the
-    * sorted entries once, zero-filling the widx gaps, then pad the
-    * tail — O(m/64 + entries) per row. The first cut built a map and
-    * probed it per dense index (element_at on a Spark map is a linear
-    * SCAN), so assembly was O((m/64)^2) — ~50 s of single-task CPU per
-    * store merge at replay-scale blooms. The lambdas here are
-    * interpreted (higher-order functions always are), which is
-    * acceptable ONLY because this runs at metadata scale: one row per
-    * data file, never per data row. */
-  def denseWords(ws: Column, bloomM: Column): Column = {
-    // prev widx per entry: -1 for the first, entry i-1's for entry i
-    val prevWidx = concat(array(lit(-1L)),
-      transform(slice(ws, lit(1), greatest(size(ws) - 1, lit(0))),
-        e => e.getField("widx")))
-    val filled = flatten(zip_with(ws, prevWidx, (e, p) =>
-      concat(
-        array_repeat(lit(0L),
-          (e.getField("widx") - p - lit(1L)).cast("int")),
-        array(e.getField("word")))))
-    concat(filled, array_repeat(lit(0L),
-      (shiftright(bloomM, 6) - size(filled)).cast("int")))
-  }
+  /** Per-group key bloom as ONE aggregate over the group's key hashes
+    * (60-bit, non-negative — [[keyHashCols]]): the dense bitmap
+    * (array<long> of m/64 words) with `m` sized from the group's own
+    * row count — `bitsPerKey` bits per row, rounded up to whole words,
+    * clamped to [`minBits`, `maxBits`] — and [[positionsDyn]]'s `k`
+    * positions of every hash set. The manifest's per-file key blooms
+    * (TableManifest.statsForFiles) are built with it in the same scan
+    * and aggregate as the file's row count and key zone. */
+  def fileKeyBloom(h: Column, k: Int, bitsPerKey: Long, minBits: Long,
+                   maxBits: Long): Column =
+    org.apache.spark.sql.graft.bridge.column(
+      FileKeyBloom(org.apache.spark.sql.graft.bridge.expression(h), k,
+        bitsPerKey, minBits, maxBits).toAggregateExpression())
 
   /** [[mightContain]] against a dense bitmap whose bit count is the
     * per-row column `m` (array length = m/64). */
@@ -236,4 +229,145 @@ object BloomFilter {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bloom_hits"))
   }
+}
+
+/** State of [[FileKeyBloom]]: the group's first hashes, then — once
+  * `n` reaches the row count at which the bit count hits its cap — the
+  * capped bitmap itself, into which every later hash sets its bits. So
+  * a group holds at most min(rows, cap rows) hashes or one final
+  * bitmap, never both for long. */
+final class KeyBloomBuf(var hashes: Array[Long], var n: Long,
+                        var bits: Array[Long])
+
+/** [[BloomFilter.fileKeyBloom]]'s aggregate. Deterministic under any
+  * partitioning: the bit count is a function of the group's total row
+  * count, and a bitmap is the OR of its members' bits. Runs in
+  * ObjectHashAggregateExec; partial buffers ship as packed longs. */
+case class FileKeyBloom(child: Expression, k: Int, bitsPerKey: Long,
+                        minBits: Long, maxBits: Long,
+                        mutableAggBufferOffset: Int = 0,
+                        inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[KeyBloomBuf] with UnaryLike[Expression] {
+
+  /** Rows at which `bitsFor` reaches `maxBits` and stays there. */
+  private val capRows = (maxBits + bitsPerKey - 1) / bitsPerKey
+
+  private def bitsFor(rows: Long): Long =
+    math.min(maxBits, math.max(minBits, ((rows * bitsPerKey + 63) >> 6) << 6))
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
+  override def prettyName: String = "file_key_bloom"
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case LongType =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"file_key_bloom needs a bigint hash, got ${other.simpleString}")
+    }
+
+  /** [[BloomFilter.positionsDyn]]'s positions of `h`, set in `words`. */
+  private def set(words: Array[Long], h: Long): Unit = {
+    val m = words.length.toLong << 6
+    val h1 = h % m
+    val h2 = 1L + ((h >> 30) % (m - 1L))
+    var j = 0
+    while (j < k) {
+      val pos = (h1 + j * h2) % m
+      words((pos >> 6).toInt) |= 1L << (pos & 63L)
+      j += 1
+    }
+  }
+
+  private def add(buf: KeyBloomBuf, h: Long): Unit = {
+    if (buf.bits != null) set(buf.bits, h)
+    else {
+      if (buf.n == buf.hashes.length)
+        buf.hashes = java.util.Arrays.copyOf(buf.hashes,
+          math.min(capRows, math.max(8L, buf.n * 2)).toInt)
+      buf.hashes(buf.n.toInt) = h
+      if (buf.n + 1 == capRows) {
+        buf.bits = new Array[Long]((maxBits >> 6).toInt)
+        var i = 0
+        while (i <= buf.n) { set(buf.bits, buf.hashes(i)); i += 1 }
+        buf.hashes = null
+      }
+    }
+    buf.n += 1
+  }
+
+  override def createAggregationBuffer(): KeyBloomBuf =
+    new KeyBloomBuf(new Array[Long](8), 0L, null)
+
+  override def update(buf: KeyBloomBuf, input: InternalRow): KeyBloomBuf = {
+    val v = child.eval(input)
+    if (v != null) add(buf, v.asInstanceOf[Long])
+    buf
+  }
+
+  override def merge(buf: KeyBloomBuf, other: KeyBloomBuf): KeyBloomBuf = {
+    if (other.bits == null) {
+      var i = 0
+      while (i < other.n) { add(buf, other.hashes(i)); i += 1 }
+    } else {
+      val bits = other.bits.clone()
+      if (buf.bits != null) {
+        var i = 0
+        while (i < bits.length) { bits(i) |= buf.bits(i); i += 1 }
+      } else {
+        var i = 0
+        while (i < buf.n) { set(bits, buf.hashes(i)); i += 1 }
+      }
+      buf.bits = bits
+      buf.hashes = null
+      buf.n += other.n
+    }
+    buf
+  }
+
+  override def eval(buf: KeyBloomBuf): Any =
+    if (buf.n == 0) null
+    else {
+      val words =
+        if (buf.bits != null) buf.bits
+        else {
+          val w = new Array[Long]((bitsFor(buf.n) >> 6).toInt)
+          var i = 0
+          while (i < buf.n) { set(w, buf.hashes(i)); i += 1 }
+          w
+        }
+      UnsafeArrayData.fromPrimitiveArray(words)
+    }
+
+  // layout: n, then the bitmap's words (n >= capRows) or the n hashes
+  override def serialize(buf: KeyBloomBuf): Array[Byte] = {
+    val body = if (buf.bits != null) buf.bits.length else buf.n.toInt
+    val bb = ByteBuffer.allocate(8 + body * 8)
+    bb.putLong(buf.n)
+    val src = if (buf.bits != null) buf.bits else buf.hashes
+    var i = 0
+    while (i < body) { bb.putLong(src(i)); i += 1 }
+    bb.array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): KeyBloomBuf = {
+    val bb = ByteBuffer.wrap(bytes)
+    val n = bb.getLong()
+    val count = bytes.length / 8 - 1
+    val body = new Array[Long](if (n >= capRows) count else math.max(8, count))
+    var i = 0
+    while (i < count) { body(i) = bb.getLong(); i += 1 }
+    if (n >= capRows) new KeyBloomBuf(null, n, body)
+    else new KeyBloomBuf(body, n, null)
+  }
+
+  override def withNewMutableAggBufferOffset(offset: Int): FileKeyBloom =
+    copy(mutableAggBufferOffset = offset)
+  override def withNewInputAggBufferOffset(offset: Int): FileKeyBloom =
+    copy(inputAggBufferOffset = offset)
+  override protected def withNewChildInternal(newChild: Expression): FileKeyBloom =
+    copy(child = newChild)
 }

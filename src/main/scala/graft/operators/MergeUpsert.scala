@@ -102,7 +102,7 @@ object MergeUpsert {
                               sumCols: Seq[String],
                               retainVersions: Int = 2): Unit = {
     val cur = currentPlainVersion(spark, path)
-    val merged = cur.map(v => spark.read.parquet(s"$path/$v")) match {
+    val merged = cur.map(v => readVersionDir(spark, path, v)) match {
       case Some(existing) =>
         // additive semantics are defined over keys ++ sumCols ONLY;
         // silently projecting a wider store onto them would PUBLISH the
@@ -214,7 +214,7 @@ object MergeUpsert {
   def mergeWritePlain(spark: SparkSession, path: String, updates: DataFrame,
                       keys: Seq[String], retainVersions: Int = 2): Unit = {
     val cur = currentPlainVersion(spark, path)
-    val merged = cur.map(v => spark.read.parquet(s"$path/$v")) match {
+    val merged = cur.map(v => readVersionDir(spark, path, v)) match {
       case Some(existing) => merge(existing, updates, keys)
       case None => updates.dropDuplicates(keys)
     }
@@ -225,8 +225,13 @@ object MergeUpsert {
     * check for external incremental writers. The version's schema
     * comes from [[TableManifest]]'s planning memo. */
   def existingPlain(spark: SparkSession, path: String): Option[DataFrame] =
-    currentPlainVersion(spark, path)
-      .map(v => TableManifest.readPublished(spark, s"$path/$v")._1)
+    currentPlainVersion(spark, path).map(readVersionDir(spark, path, _))
+
+  /** Version `v` of the store at `path`, planned from the memo
+    * ([[TableManifest.readPublished]]). */
+  private def readVersionDir(spark: SparkSession, path: String,
+                             v: String): DataFrame =
+    TableManifest.readPublished(spark, s"$path/$v")._1
 
   /** Atomic full-table publish: write `df` as a new immutable version
     * and flip the `_CURRENT` pointer — the whole-table-replace analogue
@@ -257,7 +262,13 @@ object MergeUpsert {
 
   /** Shared publish core: version write, pointer flip, GC. `cur` is the
     * caller's already-resolved live version (one pointer read per
-    * publish, not two).
+    * publish, not two). The version write is the publish's one Spark
+    * job; once the pointer names the version, `df`'s schema is recorded
+    * as the committed dir's in the planning memo
+    * ([[TableManifest.seedPublished]], under the dir's
+    * [[TableManifest.Published]] identity), so the first read of the
+    * version — a manifest's by [[TableManifest]], a plain store's by
+    * [[existingPlain]] or the next merge — infers nothing.
     *
     * CONCURRENCY GUARD (read-check-flip): just before the pointer
     * flip, the live version is re-resolved; if it moved past `cur` —
@@ -344,6 +355,11 @@ object MergeUpsert {
       if (!fs.rename(tmp, ptr))
         throw new java.io.IOException(s"cannot publish pointer $ptr")
     }
+    // the new version's schema is the frame's: its first read
+    // (readVersionDir, TableManifest's manifest reads) infers nothing
+    val published = s"$path/$vname"
+    committedAt(spark, published).foreach(t => TableManifest.seedPublished(
+      spark, TableManifest.Published(published, t), df.schema))
     // GC (best-effort, post-publish): crashed-writer orphans, plus
     // published versions beyond the newest `retainVersions`. Superseded
     // versions are RETAINED for retainVersions-1 merge cycles: an

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.types.StructType
 
 /** File manifest for keyed, date-partitioned parquet tables — the
   * Delta/Iceberg idea reduced to its load-bearing core: readers and
@@ -127,65 +128,49 @@ object TableManifest {
     * [[BloomMinBits]], [[BloomMaxBits]] (a capped file merely degrades
     * toward more false fires). */
   private[operators] val BloomKeyK = 16
-  private val BloomBitsPerKey = 32L
-  private val BloomMinBits = 2048L
-  private val BloomMaxBits = 1L << 26
+  private[operators] val BloomBitsPerKey = 32L
+  private[operators] val BloomMinBits = 2048L
+  private[operators] val BloomMaxBits = 1L << 26
+
+  /** [[BloomFilter.fileKeyBloom]] at the manifest's sizing, over key
+    * hashes `h` — the one definition of a file's `key_bloom`. */
+  private[graft] def keyBloom(h: Column): Column =
+    BloomFilter.fileKeyBloom(h, BloomKeyK, BloomBitsPerKey, BloomMinBits,
+      BloomMaxBits)
 
   /** One manifest row per given data file — O(new files), the
     * incremental refresh unit of every copy-on-write publish.
     *
+    * `written` is the schema of the frame the caller just wrote into
+    * `files` (its partition column included): the files are read under
+    * it, so no schema-inference job runs, and `part` is the written
+    * partition value's string form.
+    *
     * `bloomKeys` (the epoch-store contract, see
-    * [[filesMaybeContaining]]) adds two columns: `bloom_m` (bloom bit
-    * count, sized to the file's row count) and `key_bloom` (dense
-    * array<long> bitmap over xxhash64 of the key columns). Costs one
-    * extra pass over the same just-written, cache-warm files. */
+    * [[filesMaybeContaining]]) adds two columns: `key_bloom` (dense
+    * array<long> bitmap over xxhash64 of the key columns, sized from
+    * the file's row count — [[keyBloom]]) and `bloom_m` (its bit
+    * count). Rows, key zone and bloom come from one scan and one
+    * aggregate, which runs inside the caller's manifest-version write
+    * job. */
   private def statsForFiles(spark: SparkSession, path: String,
-                            files: Seq[String], partitionCol: String,
-                            keyCol: String,
+                            files: Seq[String], written: StructType,
+                            partitionCol: String, keyCol: String,
                             bloomKeys: Option[Seq[String]] = None)
       : DataFrame = {
-    val base = spark.read.option("basePath", path)
+    val bloom = bloomKeys.toSeq.map(bk =>
+      keyBloom(BloomFilter.keyHashCols(bk.map(col))).as("key_bloom"))
+    val stats = spark.read.option("basePath", path).schema(written)
       .parquet(files: _*)
       .groupBy(decodeUri(input_file_name()).as("file"),
         col(partitionCol).cast("string").as("part"))
       .agg(count(lit(1)).as("rows"),
-        min(col(keyCol)).cast("string").as("key_lo"),
-        max(col(keyCol)).cast("string").as("key_hi"))
-    bloomKeys match {
-      case None => base
-      case Some(bk) =>
-        // m per file from the row count (round up to whole words)
-        val sized = base.select(col("file"),
-          least(lit(BloomMaxBits), greatest(lit(BloomMinBits),
-            shiftleft(shiftright(col("rows") * BloomBitsPerKey + 63, 6), 6)))
-            .as("bloom_m"))
-        val hashed = spark.read.option("basePath", path)
-          .parquet(files: _*)
-          .select(decodeUri(input_file_name()).as("file"),
-            BloomFilter.keyHashCols(bk.map(col)).as("h"))
-        val words = hashed.join(broadcast(sized), Seq("file"))
-          .select(col("file"), col("bloom_m"),
-            explode(array(BloomFilter.positionsDyn(col("h"), col("bloom_m"),
-              BloomKeyK): _*)).as("pos"))
-          .groupBy(col("file"), col("bloom_m"),
-            shiftright(col("pos"), 6).as("widx"))
-          .agg(bit_or(call_function("shiftleft", lit(1L),
-            (col("pos") % 64).cast("int"))).as("word"))
-        // LINEAR dense assembly (r17 step-profile finding) — the
-        // gap-fill walk lives in BloomFilter.denseWords (factored so
-        // HofAudit times the exact production expression; its scaladoc
-        // carries the O((m/64)^2) history this replaced)
-        val blooms = words.groupBy("file", "bloom_m")
-          .agg(array_sort(collect_list(struct(col("widx"), col("word"))))
-            .as("ws"))
-          .select(col("file"), col("bloom_m"),
-            BloomFilter.denseWords(col("ws"), col("bloom_m"))
-              .as("key_bloom"))
-        // left join (never loses a stats row), though every file with a
-        // stats row has >= 1 row and therefore a bloom; a null bloom
-        // reads as always-maybe at the probe
-        base.join(blooms, Seq("file"), "left")
-    }
+        min(col(keyCol)).cast("string").as("key_lo") +:
+          max(col(keyCol)).cast("string").as("key_hi") +: bloom: _*)
+    if (bloomKeys.isEmpty) stats
+    else stats.select(col("file"), col("part"), col("rows"), col("key_lo"),
+      col("key_hi"), (size(col("key_bloom")).cast("long") * 64L).as("bloom_m"),
+      col("key_bloom"))
   }
 
   /** Scan the given partition values' files and compute one manifest
@@ -262,19 +247,34 @@ object TableManifest {
         if (hit != null) hit._1.asInstanceOf[T]
         else {
           val v = compute
-          val w = 1 + weightOf(facts) + weightOf(v)
-          if (w <= MemoMaxWeight) memo.synchronized {
-            val old = memo.put(key, (v, w))
-            memoWeight += w - (if (old == null) 0 else old._2)
-            val eldest = memo.values.iterator
-            while (memoWeight > MemoMaxWeight) {
-              memoWeight -= eldest.next()._2
-              eldest.remove()
-            }
-          }
+          remember(key, 1 + weightOf(facts) + weightOf(v), v)
           v
         }
     }
+
+  private def remember(key: AnyRef, w: Int, v: AnyRef): Unit =
+    if (w <= MemoMaxWeight) memo.synchronized {
+      val old = memo.put(key, (v, w))
+      memoWeight += w - (if (old == null) 0 else old._2)
+      val eldest = memo.values.iterator
+      while (memoWeight > MemoMaxWeight) {
+        memoWeight -= eldest.next()._2
+        eldest.remove()
+      }
+    }
+
+  /** The publisher's half of [[readPublished]]'s memo entry: the
+    * schema of committed version dir `dir` is that of the frame
+    * `written` into it, every field nullable as a parquet read returns
+    * it. [[MergeUpsert.publishVersion]] records it under the dir's
+    * [[Published]] identity once the pointer names the version, so the
+    * first read of a version its own process published runs no
+    * inference job. */
+  private[operators] def seedPublished(s: SparkSession, id: Published,
+                                       written: StructType): Unit = {
+    val schema = bridge.nullable(written)
+    remember((scopeOf(s), id, Seq("schema")), 1 + weightOf(schema), schema)
+  }
 
   /** Empty the planning memo. Bench calls it before each rep, so a
     * catalog row's recorded time keeps its planning cost. */
@@ -508,7 +508,8 @@ object TableManifest {
     val (touched, keyEst) = batchStats(updates, keys, partitionCol)
     if (touched.isEmpty) return MergeWriteReport(0, 0L, broadcastKeys = false)
     val before = listPartFiles(spark, path, partitionCol, touched)
-    val report = live match {
+    // the report, and the schema of the frame written
+    val (report, written) = live match {
       case None =>
         // create: repartition by the partition column first —
         // otherwise EVERY task writes a file into EVERY touched
@@ -518,7 +519,7 @@ object TableManifest {
           .repartition(col(partitionCol))
           .write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
           .parquet(path)
-        MergeWriteReport(0, 0L, broadcastKeys = false)
+        (MergeWriteReport(0, 0L, broadcastKeys = false), updates.schema)
       case Some(base) =>
         // the touched partitions' live rows, planned from the manifest
         // (collected by keptFiles before the data read is planned on
@@ -547,7 +548,7 @@ object TableManifest {
           .sortWithinPartitions(keys.map(col): _*) // clustered row groups →
           // parquet min/max stats prune key lookups inside each date file
           .write.mode(SaveMode.Append).partitionBy(partitionCol).parquet(path)
-        MergeWriteReport(touched.length, keyEst, broadcastKeys)
+        (MergeWriteReport(touched.length, keyEst, broadcastKeys), merged.schema)
     }
     // invalidate the shared file-listing cache for readers of this path
     spark.catalog.refreshByPath(path)
@@ -561,7 +562,7 @@ object TableManifest {
       // sizing (measured ~0.3 s/publish of pure tiny-task overhead at
       // 32) or under AQE
       val ms = graft.Sessions.meta(spark)
-      val fresh = statsForFiles(ms, path, newFiles, partitionCol,
+      val fresh = statsForFiles(ms, path, newFiles, written, partitionCol,
         zoneKey.getOrElse(keys.head))
       val parts = touched.map(_.toString)
       val merged = live match {
@@ -631,8 +632,8 @@ object TableManifest {
     }
     val fresh =
       if (newFiles.isEmpty) None
-      else Some(statsForFiles(ms, path, newFiles, partitionCol, keyCol,
-        bloomKeys))
+      else Some(statsForFiles(ms, path, newFiles, df.schema, partitionCol,
+        keyCol, bloomKeys))
     // coalesce(1): a manifest version is metadata (one row per data
     // file) and is re-read/collected on EVERY subsequent store read
     // and probe — one file per version beats shuffle-partition-many
@@ -674,13 +675,15 @@ object TableManifest {
     *
     * The manifest's bloom rows (bounded by [[MaxPlanFiles]]) are
     * collected from the metadata session first; the probe then runs on
-    * `probe`'s own session: the distinct probe-key hashes against
-    * those rows under a codegen'd membership condition (per-pair cost
-    * is k map lookups), as a nested loop over a one-partition local
-    * relation — replicated to the probe's tasks without a broadcast
-    * exchange, which would cost a job of its own. Rows without a bloom
-    * (files a publish registered with no `bloomKeys`) are always-maybe.
-    * `bloomKeys` must match the writes'. */
+    * `probe`'s own session as one narrow stage over `probe`'s own
+    * partitions: each probe row's key hash against those rows under a
+    * codegen'd membership condition (per pair, k word lookups), as a
+    * nested loop over a one-partition local relation — replicated to
+    * the probe's tasks without a broadcast or any other exchange. Each
+    * task returns its fired (file, part) pairs once, and the driver
+    * dedupes across tasks. Rows without a bloom (files a publish
+    * registered with no `bloomKeys`) are always-maybe. `bloomKeys` must
+    * match the writes'. */
   def filesMaybeContaining(spark: SparkSession, path: String,
                            probe: DataFrame, bloomKeys: Seq[String])
       : Seq[(String, String)] =
@@ -700,14 +703,15 @@ object TableManifest {
         val local = probe.sparkSession
           .createDataFrame(java.util.Arrays.asList(rows: _*), blooms.schema)
           .coalesce(1)
+        val pair = Encoders.tuple(Encoders.STRING, Encoders.STRING)
         probe.select(BloomFilter.keyHashCols(bloomKeys.map(col)).as("h_"))
-          .distinct()
           .join(local.hint("shuffle_replicate_nl"),
             col("key_bloom").isNull ||
               BloomFilter.mightContainDyn(col("key_bloom"), col("h_"),
                 col("bloom_m"), BloomKeyK))
-          .select("file", "part").distinct()
-          .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+          .select("file", "part").as(pair)
+          .mapPartitions(_.toSet.iterator)(pair)
+          .collect().distinct.toSeq
     }
 
   /** Out-of-band APPEND with exact manifest registration: writes `df`
@@ -733,7 +737,8 @@ object TableManifest {
       (listPartFiles(spark, path, partitionCol, touched) -- before).toSeq
     if (newFiles.isEmpty) return
     val ms = graft.Sessions.meta(spark)
-    val fresh = statsForFiles(ms, path, newFiles, partitionCol, keyCol)
+    val fresh = statsForFiles(ms, path, newFiles, df.schema, partitionCol,
+      keyCol)
     val merged = live match {
       case None => fresh
       case Some(old) => old.rows.unionByName(fresh)
@@ -865,9 +870,8 @@ object TableManifest {
     // (manifest-planned), rewrite them one-file-per-partition as new
     // appended files — the copy-on-write publish, so readers never see
     // a partial partition and prior versions stay readable
-    spark.read.option("basePath", path)
-      .parquet(files.toIndexedSeq: _*)
-      .repartition(col(partitionCol))
+    val data = readFiles(spark, path, live, files)
+    data.repartition(col(partitionCol))
       .sortWithinPartitions(col(keyCol))
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .partitionBy(partitionCol)
@@ -879,7 +883,7 @@ object TableManifest {
     // new files' stats; the partition values re-enter statsForFiles in
     // their DECODED string form. The DATA rewrite above stays on the
     // caller's session (table-scale work keeps its sizing and AQE)
-    val fresh = statsForFiles(ms, path, newFiles, partitionCol,
+    val fresh = statsForFiles(ms, path, newFiles, data.schema, partitionCol,
       zoneKey.getOrElse(keyCol))
     val merged = m.filter(!col("part").isin(overParts: _*))
       .unionByName(fresh)

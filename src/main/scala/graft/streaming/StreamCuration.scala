@@ -166,9 +166,11 @@ object StreamCuration {
     val stamped0 = deduped.withColumn(epochCol, lit(epochStr))
     val stamped = if (width > 0) stamped0 else stamped0.coalesce(1)
     // steal detection: files of OTHER epochs whose blooms fire for a
-    // batch key (the batch's own epoch is replaced wholesale anyway)
+    // batch key (the batch's own epoch is replaced wholesale anyway);
+    // the probe reads the batch's keys as they are — a key set, so the
+    // dedup exchange would only add a stage
     val firing = TableManifest
-      .filesMaybeContaining(spark, path, deduped.select(keys.map(col): _*),
+      .filesMaybeContaining(spark, path, batch.select(keys.map(col): _*),
         keys)
       .filter(_._2 != epochStr)
     val df =

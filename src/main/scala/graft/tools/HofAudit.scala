@@ -135,46 +135,32 @@ object HofAudit {
     ab("entropy", entropyCur(), entropyRw())
 
     // ---- r17 epoch-store bloom machinery (r16 verdict task 8): the
-    //      per-file key-bloom ASSEMBLY (BloomFilter.denseWords — the
-    //      gap-fill transform/zip_with/flatten in the manifest stats
-    //      build) is the only lambda site the epoch-partitioned stores
-    //      added; the READ path (partition pruning + mightContainDyn
-    //      probe) is all builtins. The lambdas run per manifest ROW
-    //      (one per data file) over m/64 elements, so the audit pins
-    //      (a) LINEARITY — doubling m must ~double assembly time, the
-    //      exact property the r17 quadratic map-probe regression broke
-    //      (O((m/64)^2): ~50 s/merge at replay-scale blooms) — and
-    //      (b) absolute cost per file at replay scale. Synthetic
-    //      sparse words built exactly like statsForFiles builds them
-    //      (xxhash64 -> positionsDyn -> per-word bit_or). ----
-    def bloomAsm(nFiles: Int, keysPerFile: Long): (Double, (Long, Long)) = {
-      import graft.operators.BloomFilter
-      // m from the key count like statsForFiles: rows*32 bits, word-
-      // aligned (keysPerFile is a power of two here, so exact)
-      val m = keysPerFile * 32L
-      val words = spark.range(nFiles * keysPerFile)
+    //      per-file key-bloom ASSEMBLY (TableManifest.keyBloom — the
+    //      FileKeyBloom aggregate the manifest stats pass runs per data
+    //      file) and the bloom PROBE (mightContainDyn, all builtins).
+    //      The audit pins (a) LINEARITY of the assembly — doubling m
+    //      must ~double its time, the exact property the r17 quadratic
+    //      map-probe regression broke (O((m/64)^2): ~50 s/merge at
+    //      replay-scale blooms) — and (b) absolute cost per file at
+    //      replay scale. Synthetic files of xxhash64 key hashes, sized
+    //      like statsForFiles sizes them (32 bits per key). ----
+    import graft.operators.{BloomFilter, TableManifest}
+    def keyHashes(nFiles: Int, keysPerFile: Long, from: Long = 0L) =
+      spark.range(from, from + nFiles * keysPerFile)
         .select((col("id") % nFiles).as("file"),
           xxhash64(col("id")).bitwiseAND(lit(Long.MaxValue)).as("h"))
-        .select(col("file"), explode(array(BloomFilter.positionsDyn(
-          col("h"), lit(m), 16): _*)).as("pos"))
-        .groupBy(col("file"), shiftright(col("pos"), 6).as("widx"))
-        .agg(bit_or(call_function("shiftleft", lit(1L),
-          (col("pos") % 64).cast("int"))).as("word"))
-        .groupBy("file")
-        .agg(array_sort(collect_list(struct(col("widx"), col("word"))))
-          .as("ws"))
-        .localCheckpoint()
-      words.count()
+    def bloomAsm(nFiles: Int, keysPerFile: Long): (Double, (Long, Long)) = {
+      val hashes = keyHashes(nFiles, keysPerFile).localCheckpoint()
+      hashes.count()
       time {
-        words
-          .select(BloomFilter.denseWords(col("ws"), lit(m)).as("bm"))
+        hashes.groupBy("file").agg(TableManifest.keyBloom(col("h")).as("bm"))
           // xor fold, not sum: bloom words are full-range bit patterns
           // and ANSI mode makes a long-sum checksum overflow-fatal
           .select(aggregate(col("bm"), lit(0L), _ bitwiseXOR _).as("cs"))
           .agg(count(lit(1)), sum(col("cs") % 1000003)).head().pipe(both)
       }
     }
-    // replay-scale file (50k keys -> 1.6M-bit bloom, 25k words) and 2x
+    // replay-scale file (64k keys -> 2M-bit bloom, 32k words) and 2x
     val (tb1, nb1) = bloomAsm(32, 1L << 16)
     val (tb2, nb2) = bloomAsm(32, 1L << 17)
     println(f"[hof] bloomasm   m=2^21: $tb1%6.2f s  m=2^22: $tb2%6.2f s  " +
@@ -184,27 +170,16 @@ object HofAudit {
     //      hashes x replicated bloom rows under mightContainDyn — all
     //      builtins, absolute cost only, like x174scan ----
     val (tbp, nbp) = {
-      import graft.operators.BloomFilter
-      val m = (1L << 16) * 32L
-      val blooms = spark.range(32 * (1L << 16))
-        .select((col("id") % 32).as("file"),
-          xxhash64(col("id")).bitwiseAND(lit(Long.MaxValue)).as("h"))
-        .select(col("file"), explode(array(BloomFilter.positionsDyn(
-          col("h"), lit(m), 16): _*)).as("pos"))
-        .groupBy(col("file"), shiftright(col("pos"), 6).as("widx"))
-        .agg(bit_or(call_function("shiftleft", lit(1L),
-          (col("pos") % 64).cast("int"))).as("word"))
-        .groupBy("file")
-        .agg(array_sort(collect_list(struct(col("widx"), col("word"))))
-          .as("ws"))
-        .select(col("file"), lit(m).as("bloom_m"),
-          BloomFilter.denseWords(col("ws"), lit(m)).as("key_bloom"))
+      val blooms = keyHashes(32, 1L << 16)
+        .groupBy("file").agg(TableManifest.keyBloom(col("h")).as("key_bloom"))
+        .select(col("file"),
+          (size(col("key_bloom")).cast("long") * 64L).as("bloom_m"),
+          col("key_bloom"))
         .localCheckpoint()
       blooms.count()
       // 10k-key batch probed against every file's bloom (the
       // filesMaybeContaining shape: hashes x one-partition bloom rows)
-      val probe = spark.range(1L << 40, (1L << 40) + 10000)
-        .select(xxhash64(col("id")).bitwiseAND(lit(Long.MaxValue)).as("h_"))
+      val probe = keyHashes(1, 10000, from = 1L << 40).select(col("h").as("h_"))
       time {
         probe.join(blooms.coalesce(1).hint("shuffle_replicate_nl"),
             BloomFilter.mightContainDyn(col("key_bloom"), col("h_"),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class TableManifestSpec extends SparkSpec {
@@ -910,5 +911,235 @@ class TableManifestSpec extends SparkSpec {
       "each read resolves the pointer: versions never go back")
     assert(values(TableManifest.readPartitions(spark, path,
       Seq("2024-01-01"))) == Set(4.0))
+  }
+
+  // ---- the key-bloom manifest columns against the two-pass assembly
+  //      they replace: a stats scan, a broadcast of each file's bit
+  //      count, a second scan exploding every key's positions, a
+  //      per-word bit_or and a gap-filled dense array ----
+
+  /** The dense bitmap from sorted sparse (widx, word) entries `ws`,
+    * zero-filled between entries and padded to m/64 words. */
+  private def denseWords(ws: Column, bloomM: Column): Column = {
+    val prevWidx = concat(array(lit(-1L)),
+      transform(slice(ws, lit(1), greatest(size(ws) - 1, lit(0))),
+        e => e.getField("widx")))
+    val filled = flatten(zip_with(ws, prevWidx, (e, p) =>
+      concat(
+        array_repeat(lit(0L), (e.getField("widx") - p - lit(1L)).cast("int")),
+        array(e.getField("word")))))
+    concat(filled, array_repeat(lit(0L),
+      (shiftright(bloomM, 6) - size(filled)).cast("int")))
+  }
+
+  /** Per-file (bloom_m, key_bloom) of `hashed` (columns file, h) with
+    * `sized` (file, bloom_m) — the explode / bit_or / gap-fill
+    * assembly. */
+  private def twoPassBlooms(hashed: DataFrame, sized: DataFrame): DataFrame =
+    hashed.join(broadcast(sized), Seq("file"))
+      .select(col("file"), col("bloom_m"),
+        explode(array(BloomFilter.positionsDyn(col("h"), col("bloom_m"),
+          TableManifest.BloomKeyK): _*)).as("pos"))
+      .groupBy(col("file"), col("bloom_m"), shiftright(col("pos"), 6).as("widx"))
+      .agg(bit_or(call_function("shiftleft", lit(1L),
+        (col("pos") % 64).cast("int"))).as("word"))
+      .groupBy("file", "bloom_m")
+      .agg(array_sort(collect_list(struct(col("widx"), col("word")))).as("ws"))
+      .select(col("file"), col("bloom_m"),
+        denseWords(col("ws"), col("bloom_m")).as("key_bloom"))
+
+  /** The manifest rows the two-pass statsForFiles computed for `files`
+    * of the table at `path`. */
+  private def twoPassStats(path: String, files: Seq[String],
+                           partitionCol: String, keyCol: String,
+                           bloomKeys: Seq[String]): DataFrame = {
+    def read = spark.read.option("basePath", path).parquet(files: _*)
+    val base = read
+      .groupBy(TableManifest.decodeUri(input_file_name()).as("file"),
+        col(partitionCol).cast("string").as("part"))
+      .agg(count(lit(1)).as("rows"),
+        min(col(keyCol)).cast("string").as("key_lo"),
+        max(col(keyCol)).cast("string").as("key_hi"))
+    val sized = base.select(col("file"),
+      least(lit(TableManifest.BloomMaxBits),
+        greatest(lit(TableManifest.BloomMinBits),
+          shiftleft(shiftright(col("rows") * TableManifest.BloomBitsPerKey +
+            63, 6), 6))).as("bloom_m"))
+    val hashed = read.select(
+      TableManifest.decodeUri(input_file_name()).as("file"),
+      BloomFilter.keyHashCols(bloomKeys.map(col)).as("h"))
+    base.join(twoPassBlooms(hashed, sized), Seq("file"), "left")
+  }
+
+  private type ManifestRow =
+    (String, String, Long, String, String, Long, Seq[Long])
+
+  private def manifestRows(df: DataFrame): Seq[ManifestRow] =
+    df.select("file", "part", "rows", "key_lo", "key_hi", "bloom_m",
+        "key_bloom").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2),
+        r.getString(3), r.getString(4), r.getLong(5),
+        r.getSeq[Long](6).toSeq))
+      .sortBy(_._1).toSeq
+
+  test("key blooms: the one-pass manifest rows equal the two-pass " +
+    "assembly row for row — single and composite keys, a file at the " +
+    "minimum bit count, a multi-file epoch") {
+    val path = tmpDir()
+    def publish(df: DataFrame, epoch: String, keys: Seq[String]): Unit =
+      TableManifest.replacePartitions(spark, path,
+        df.withColumn("ep", lit(epoch)), keys.head, "ep", Seq(epoch),
+        bloomKeys = Some(keys))
+    // composite-key store: (a, b) pairs; epoch 0 is 7 rows (bit count at
+    // BloomMinBits), epoch 1 is 3000 rows over 3 files, epoch 2 has 64
+    // rows (exactly the minimum: 64 x 32 = 2048 bits)
+    val composite = Seq("a", "b")
+    publish(Seq((1L, 2L), (1L, 3L), (2L, 5L), (9L, 9L), (4L, 1L), (7L, 7L),
+      (8L, 0L)).toDF("a", "b").coalesce(1), "ep0", composite)
+    publish(spark.range(3000).select(col("id").as("a"),
+      (col("id") * 7 % 101).as("b")).repartition(3), "ep1", composite)
+    publish(spark.range(64).select((col("id") + 5000).as("a"),
+      lit(0L).as("b")).coalesce(1), "ep2", composite)
+    val m = TableManifest.load(spark, path).get
+    val files = m.select("file").as[String].collect().toSeq
+    val got = manifestRows(m)
+    assert(got.size == 5 && got.count(_._2 == "ep1") == 3)
+    assert(got.filter(_._2 == "ep0").map(_._6) ==
+      Seq(TableManifest.BloomMinBits))
+    assert(got.filter(_._2 == "ep2").map(_._6) ==
+      Seq(TableManifest.BloomMinBits))
+    assert(got == manifestRows(twoPassStats(path, files, "ep", "a",
+      composite)))
+    // single string key
+    val single = tmpDir()
+    TableManifest.replacePartitions(spark, single,
+      spark.range(1000).select(concat(lit("doc-"), col("id")).as("k"),
+        lit("e").as("ep")).repartition(2),
+      "k", "ep", Seq("e"), bloomKeys = Some(Seq("k")))
+    val sm = TableManifest.load(spark, single).get
+    assert(manifestRows(sm) == manifestRows(twoPassStats(single,
+      sm.select("file").as[String].collect().toSeq, "ep", "k", Seq("k"))))
+  }
+
+  test("key blooms: past the capped bit count the aggregate folds into " +
+    "its final bitmap and still equals the two-pass assembly, whatever " +
+    "the partitioning") {
+    // a 4096-bit cap reached at 128 rows, so files of 50 / 128 / 700
+    // rows cover the uncapped, exactly-capped and capped states, over
+    // 1, 3 and 7 input partitions (every buffer-merge combination)
+    val (bpk, minBits, maxBits) = (32L, 2048L, 4096L)
+    def bloomOf(h: Column) =
+      BloomFilter.fileKeyBloom(h, TableManifest.BloomKeyK, bpk, minBits,
+        maxBits)
+    for (parts <- Seq(1, 3, 7)) {
+      val hashed = Seq(50L, 128L, 700L).map { n =>
+        spark.range(n).select(lit(s"f$n").as("file"),
+          xxhash64(col("id") + n * 1000).bitwiseAND(lit(Long.MaxValue)).as("h"))
+      }.reduce(_ unionByName _).repartition(parts).cache()
+      val got = hashed.groupBy("file").agg(bloomOf(col("h")).as("key_bloom"))
+        .select(col("file"), (size(col("key_bloom")).cast("long") * 64L)
+          .as("bloom_m"), col("key_bloom"))
+      val sized = hashed.groupBy("file").agg(count(lit(1)).as("rows"))
+        .select(col("file"), least(lit(maxBits), greatest(lit(minBits),
+          shiftleft(shiftright(col("rows") * bpk + 63, 6), 6))).as("bloom_m"))
+      def rows(df: DataFrame) = df.collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getSeq[Long](2).toSeq))
+        .sortBy(_._1).toSeq
+      val want = rows(twoPassBlooms(hashed, sized))
+      assert(want.map(_._2) == Seq(4096L, 2048L, 4096L))
+      assert(rows(got) == want, s"$parts partitions")
+      hashed.unpersist()
+    }
+  }
+
+  test("key blooms: filesMaybeContaining returns the two-pass probe's " +
+    "set over fired and unfired keys, a null-bloom row included") {
+    val path = tmpDir()
+    (0 until 3).foreach { e =>
+      TableManifest.replacePartitions(spark, path,
+        spark.range(e * 100L, e * 100L + 80).select(col("id"),
+          lit(s"ep$e").as("ep")).repartition(2),
+        "id", "ep", Seq(s"ep$e"), bloomKeys = Some(Seq("id")))
+    }
+    // one more file registered with a null bloom (always-maybe)
+    val live = TableManifest.load(spark, path).get
+    val ms = live.sparkSession
+    val extra = live.filter(col("part") === "ep2").limit(1)
+      .withColumn("part", lit("ep9"))
+      .withColumn("bloom_m", lit(null).cast("long"))
+      .withColumn("key_bloom", lit(null).cast("array<bigint>"))
+    MergeUpsert.publishPlainFrom(ms, s"$path/_manifest",
+      live.unionByName(extra).coalesce(1), 2,
+      MergeUpsert.currentPlainVersion(ms, s"$path/_manifest"))
+    def twoPassProbe(probe: DataFrame): Set[(String, String)] = {
+      val rows = TableManifest.load(spark, path).get
+        .select("file", "part", "bloom_m", "key_bloom")
+      val local = spark.createDataFrame(
+        java.util.Arrays.asList(rows.collect(): _*), rows.schema).coalesce(1)
+      probe.select(BloomFilter.keyHashCols(Seq(col("id"))).as("h_"))
+        .distinct()
+        .join(local.hint("shuffle_replicate_nl"),
+          col("key_bloom").isNull ||
+            BloomFilter.mightContainDyn(col("key_bloom"), col("h_"),
+              col("bloom_m"), TableManifest.BloomKeyK))
+        .select("file", "part").distinct().as[(String, String)]
+        .collect().toSet
+    }
+    val probes = Seq(
+      "fired" -> Seq(5L, 5L, 150L, 201L),
+      "unfired" -> Seq(90L, 95L, 1000L, 12345L),
+      "mixed" -> (Seq(10L, 10L, 99L, 170L) ++ (5000L until 5400L)),
+      "empty" -> Seq.empty[Long])
+    for ((name, keys) <- probes) {
+      val probe = keys.toDF("id").repartition(3)
+      val got = TableManifest.filesMaybeContaining(spark, path, probe,
+        Seq("id"))
+      assert(got.distinct.size == got.size, s"$name: duplicate pairs")
+      assert(got.toSet == twoPassProbe(probe), name)
+      if (keys.nonEmpty) assert(got.exists(_._2 == "ep9"),
+        s"$name: the null-bloom file is always a maybe")
+    }
+    val fired = TableManifest.filesMaybeContaining(spark, path,
+      Seq(5L, 150L).toDF("id"), Seq("id")).map(_._2).toSet
+    assert(Set("ep0", "ep1", "ep9").subsetOf(fired) && !fired("ep2"))
+  }
+
+  test("a published version's first read plans from the schema its " +
+    "publisher wrote: no job, equal to the inferred schema — manifests " +
+    "with and without blooms, and a table of nested and typed columns") {
+    def check(s: org.apache.spark.sql.SparkSession, store: String): Unit = {
+      val dir = s"$store/${MergeUpsert.currentPlainVersion(s, store).get}"
+      val (seeded, jobs) = jobsOf(TableManifest.readPublished(s, dir)._1.schema)
+      assert(jobs == 0L, s"$dir: the first read planned $jobs jobs")
+      assert(seeded == spark.read.parquet(dir).schema, dir)
+    }
+    val ms = graft.Sessions.meta(spark)
+    val bloomed = tmpDir()
+    TableManifest.clearPlanMemo()
+    TableManifest.replacePartitions(spark, bloomed,
+      spark.range(50).select(col("id"), lit("e0").as("ep")), "id", "ep",
+      Seq("e0"), bloomKeys = Some(Seq("id")))
+    check(ms, s"$bloomed/_manifest")
+    val plain = tmpDir()
+    TableManifest.clearPlanMemo()
+    TableManifest.mergeWriteManifested(spark, plain,
+      rows("2024-01-01", 1L to 20L, 1.0), keys = Seq("id"))
+    check(ms, s"$plain/_manifest")
+    val typed = tmpDir()
+    val df = spark.range(3).select(col("id"),
+      lit(java.sql.Date.valueOf("2024-01-02")).as("d"),
+      lit(java.sql.Timestamp.valueOf("2024-01-02 03:04:05")).as("ts"),
+      lit(java.time.LocalDateTime.of(2024, 1, 2, 3, 4)).as("ntz"),
+      lit(BigDecimal("12.345")).cast("decimal(12,3)").as("dec"),
+      array(col("id"), lit(7L)).as("arr"),
+      map(lit("k"), col("id")).as("m"),
+      struct(col("id").as("x"), array(struct(lit("s").as("y"))).as("ys"))
+        .as("st"),
+      lit(Array[Byte](1, 2)).as("bin"))
+    TableManifest.clearPlanMemo()
+    MergeUpsert.publishPlain(spark, typed, df)
+    check(spark, typed)
+    def shown(d: DataFrame) = d.drop("bin").collect().map(_.toString).sorted.toSeq
+    assert(shown(MergeUpsert.readPlain(spark, typed)) == shown(df))
   }
 }

@@ -452,4 +452,70 @@ class StreamCurationSpec extends SparkSpec {
     assert(fingerprint(StreamCuration.readCurated(spark, s"$work/cur")) ==
       fingerprint(batchCurated(half)))
   }
+
+  test("mergeEpochStore: a micro-batch into a live three-epoch store " +
+    "runs in at most 4 Spark jobs, and the manifest version it published " +
+    "is read with none") {
+    val work = java.nio.file.Files
+      .createTempDirectory("graft-epoch-jobs").toString + "/cur"
+    val store = StreamCuration.docsPath(work)
+    // the micro-batch tick's session (curateBatch: AQE off, scoped
+    // shuffle partitions)
+    val cs = graft.Sessions.derived(spark,
+      graft.Sessions.shufflePartitions(8) ++ graft.Sessions.AqeOff)
+    val s2 = spark; import s2.implicits._
+    def batch(k: Int) = org.apache.spark.sql.graft.bridge.onSession(
+      (0 until 90).map(i => (k * 1000L + i, s"doc $k-$i body"))
+        .toDF("doc_id", "text"), cs)
+    def merge(k: Int): Unit = StreamCuration.mergeEpochStore(cs, store,
+      batch(k), Seq("doc_id"), StreamCuration.IngestEpochCol,
+      StreamCuration.epochName(k.toLong))
+    (0 until 3).foreach(merge)
+    // 9 jobs before the one-pass publish; 4 now: the manifest's bloom
+    // rows collected, the probe, the data write, and the manifest
+    // version write (file stats and blooms included)
+    val (_, jobs) = jobsOf(merge(3))
+    assert(jobs <= 4L, s"a micro-batch epoch merge ran $jobs jobs")
+    val (m, readJobs) = jobsOf(
+      graft.operators.TableManifest.load(cs, store).get)
+    assert(readJobs == 0L,
+      s"reading the just-published manifest version ran $readJobs jobs")
+    assert(m.select("part").as[String].collect().sorted.toSeq ==
+      (0 until 4).map(k => StreamCuration.epochName(k.toLong)))
+    assert(StreamCuration.readStoreOpt(spark, store).get.count() == 360L)
+  }
+
+  test("the labels, dels and emb_q stores' published versions are read " +
+    "with the schema their publisher wrote: no job, equal to the " +
+    "inferred schema") {
+    val work = java.nio.file.Files
+      .createTempDirectory("graft-seeded").toString + "/cur"
+    def check(store: String): Unit = {
+      val cur = graft.operators.MergeUpsert.currentPlainVersion(spark, store)
+      assert(cur.nonEmpty, s"$store was never published")
+      val dir = s"$store/${cur.get}"
+      val (seeded, jobs) = jobsOf(graft.operators.MergeUpsert
+        .existingPlain(spark, store).get.schema)
+      assert(jobs == 0L, s"$dir: the first read planned $jobs jobs")
+      assert(seeded == spark.read.parquet(dir).schema, dir)
+    }
+    graft.operators.TableManifest.clearPlanMemo()
+    StreamCuration.publishQuantizedEmbeddings(spark, work,
+      s"$sfDir/embeddings.parquet")
+    check(s"$work/emb_q")
+    // the second tick's documents repeat the first's texts under
+    // smaller ids, so every first-tick keeper loses to its twin: the
+    // tick publishes both labels and deletes
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .filter(col("doc_id") % 3 === 0)
+    Seq(docs.withColumn("doc_id", col("doc_id") + 1000000L), docs)
+      .zipWithIndex.foreach { case (batch, k) =>
+        graft.operators.TableManifest.clearPlanMemo()
+        StreamCuration.curateBatch(spark, batch, work, minQuality = 0.3,
+          rates = Map("en" -> 0.8), defaultRate = 0.5, publish = true,
+          epoch = k.toLong)
+      }
+    check(StreamCuration.labelsPath(work))
+    check(StreamCuration.curatedDelsPath(work))
+  }
 }
