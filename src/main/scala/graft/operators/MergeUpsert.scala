@@ -101,9 +101,9 @@ object MergeUpsert {
                               updates: DataFrame, keys: Seq[String],
                               sumCols: Seq[String],
                               retainVersions: Int = 2): Unit = {
-    val cur = currentPlainVersion(spark, path)
-    val merged = cur.map(v => readVersionDir(spark, path, v)) match {
-      case Some(existing) =>
+    val live = livePlain(spark, path)
+    val merged = live match {
+      case Some((_, existing)) =>
         // additive semantics are defined over keys ++ sumCols ONLY;
         // silently projecting a wider store onto them would PUBLISH the
         // narrowed schema and permanently drop the other columns
@@ -117,7 +117,7 @@ object MergeUpsert {
         val aggs = sumCols.map(c => sum(col(c)).as(c))
         updates.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
     }
-    publishVersion(spark, path, merged, retainVersions, cur)
+    publishVersion(spark, path, merged, retainVersions, live.map(_._1))
   }
 
   /** Retention-prune a versioned plain store OUTSIDE the publish path:
@@ -167,19 +167,20 @@ object MergeUpsert {
   /** Delete matching rows from a versioned plain store — the retention/
     * takedown pass upserts cannot express. Publishes the filtered
     * contents as a new version through the same atomic protocol
-    * (readers keep the usual window) and returns the number of rows
-    * removed. */
+    * (readers keep the usual window), pinned to the version it read,
+    * and returns the number of rows removed. */
   def deleteWhere(spark: SparkSession, path: String,
                   condition: org.apache.spark.sql.Column,
                   retainVersions: Int = 2): Long = {
-    val current = readPlain(spark, path)
+    val (cur, current) = livePlainOrFail(spark, path)
     // NULL-condition rows are NOT matches: a bare !condition is also
     // NULL there, which filter() drops — silently deleting (and not
     // counting) every row where the predicate is undecidable
     val matches = coalesce(condition, lit(false))
     val removed = current.filter(matches).count()
     if (removed > 0)
-      publishPlain(spark, path, current.filter(!matches), retainVersions)
+      publishVersion(spark, path, current.filter(!matches), retainVersions,
+        Some(cur))
     removed
   }
 
@@ -213,19 +214,33 @@ object MergeUpsert {
     * [[TableManifest.mergeWriteManifested]] (touched-partition rewrite). */
   def mergeWritePlain(spark: SparkSession, path: String, updates: DataFrame,
                       keys: Seq[String], retainVersions: Int = 2): Unit = {
-    val cur = currentPlainVersion(spark, path)
-    val merged = cur.map(v => readVersionDir(spark, path, v)) match {
-      case Some(existing) => merge(existing, updates, keys)
+    val live = livePlain(spark, path)
+    val merged = live match {
+      case Some((_, existing)) => merge(existing, updates, keys)
       case None => updates.dropDuplicates(keys)
     }
-    publishVersion(spark, path, merged, retainVersions, cur)
+    publishVersion(spark, path, merged, retainVersions, live.map(_._1))
   }
 
   /** The store's live version, if one is published — the existence
     * check for external incremental writers. The version's schema
     * comes from [[TableManifest]]'s planning memo. */
   def existingPlain(spark: SparkSession, path: String): Option[DataFrame] =
-    currentPlainVersion(spark, path).map(readVersionDir(spark, path, _))
+    livePlain(spark, path).map(_._2)
+
+  /** The store's live version as ONE pointer resolution names it: its
+    * name and its contents. A read-modify-publish passes the name to
+    * [[publishPlainFrom]], so a publish by another writer after this
+    * read is refused at the flip instead of silently overwritten. */
+  private[graft] def livePlain(spark: SparkSession,
+                               path: String): Option[(String, DataFrame)] =
+    currentPlainVersion(spark, path).map(v => v -> readVersionDir(spark, path, v))
+
+  private def livePlainOrFail(spark: SparkSession,
+                              path: String): (String, DataFrame) =
+    livePlain(spark, path).getOrElse(throw new IllegalStateException(
+      s"no published version at $path — nothing was ever published " +
+        "there through the versioned-store protocol"))
 
   /** Version `v` of the store at `path`, planned from the memo
     * ([[TableManifest.readPublished]]). */
@@ -254,7 +269,8 @@ object MergeUpsert {
     * from a stale base. This is how a COMPOSED publish (TableManifest's
     * data-append-then-manifest-flip) extends the two-writer lost-update
     * detection across its whole span: capture the manifest's version at
-    * merge start, publish through this. */
+    * merge start, publish through this. A read-modify-publish of a
+    * plain store pins the version its read resolved ([[livePlain]]). */
   def publishPlainFrom(spark: SparkSession, path: String, df: DataFrame,
                        retainVersions: Int,
                        baseCur: Option[String]): Unit =
@@ -282,10 +298,11 @@ object MergeUpsert {
     * remains between the check and the rename, so SINGLE-WRITER stays
     * the contract — the guard turns the most likely violation (two
     * long merges interleaving) from silent lost-update into a hard
-    * error. Package-private for the two-writer interleaving spec. */
+    * error. Package-private for the two-writer interleaving spec.
+    * Returns the published version's name. */
   private[operators] def publishVersion(spark: SparkSession, path: String,
                              df: DataFrame, retainVersions: Int,
-                             cur: Option[String]): Unit = {
+                             cur: Option[String]): String = {
     require(retainVersions >= 2,
       s"retainVersions must keep at least the live version plus one " +
         s"superseded version for in-flight readers, got $retainVersions")
@@ -340,21 +357,9 @@ object MergeUpsert {
           "re-run the merge (single-writer is the contract, this guard " +
           "only detects violations)")
     }
-    // publish: write the pointer beside the table, then one atomic
-    // rename. rename-over works on POSIX; filesystems that refuse to
-    // clobber get delete+rename of the POINTER FILE only (a lost
-    // pointer is recoverable — readers fall back to the newest
-    // version dir, see currentPlainVersion).
-    val ptr = new org.apache.hadoop.fs.Path(p, PointerName)
-    val tmp = new org.apache.hadoop.fs.Path(p, s"$PointerName.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(vname.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!fs.rename(tmp, ptr)) {
-      fs.delete(ptr, false)
-      if (!fs.rename(tmp, ptr))
-        throw new java.io.IOException(s"cannot publish pointer $ptr")
-    }
+    // publish (a lost pointer is recoverable — readers fall back to
+    // the newest version dir, see currentPlainVersion)
+    flipPointer(spark, path, PointerName, vname)
     // the new version's schema is the frame's: its first read
     // (readVersionDir, TableManifest's manifest reads) infers nothing
     val published = s"$path/$vname"
@@ -392,6 +397,7 @@ object MergeUpsert {
         d.getPath.getName.startsWith(".tmp-v-"))
       .foreach(d => fs.delete(d.getPath, true))
     spark.catalog.refreshByPath(path)
+    vname
   }
 
   /** Result of [[compactPlain]]: file/byte counts before, files after
@@ -428,10 +434,11 @@ object MergeUpsert {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
     val fs = fsFor(spark, path)
     val p = new org.apache.hadoop.fs.Path(path)
-    val dataDir = currentPlainVersion(spark, path) match {
-      case Some(v) => new org.apache.hadoop.fs.Path(p, v)
+    val cur = currentPlainVersion(spark, path) match {
+      case Some(v) => v
       case None => return CompactionReport(0, 0, 0L, compacted = false)
     }
+    val dataDir = new org.apache.hadoop.fs.Path(p, cur)
     val files = fs.listStatus(dataDir)
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
     val bytes = files.map(_.getLen).sum
@@ -440,15 +447,13 @@ object MergeUpsert {
       return CompactionReport(files.length, files.length, bytes,
         compacted = false)
     val df = spark.read.parquet(dataDir.toString).coalesce(targetN)
-    publishPlain(spark, path, df, retainVersions)
+    val vname = publishVersion(spark, path, df, retainVersions, Some(cur))
     // report what was PUBLISHED, not the target: the parquet read packs
     // small files into fewer partitions than targetN when they fit one
     // maxPartitionBytes split, and coalesce never splits — so the new
     // version can legitimately carry fewer than targetN files
-    val published = currentPlainVersion(spark, path)
-      .map(v => fs.listStatus(new org.apache.hadoop.fs.Path(p, v))
-        .count(st => st.isFile && st.getPath.getName.endsWith(".parquet")))
-      .getOrElse(targetN)
+    val published = fs.listStatus(new org.apache.hadoop.fs.Path(p, vname))
+      .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
     CompactionReport(files.length, published, bytes, compacted = true)
   }
 
@@ -457,9 +462,7 @@ object MergeUpsert {
     * newest committed version dir. A store with no live version fails
     * here — it was never published. */
   def readPlain(spark: SparkSession, path: String): DataFrame =
-    existingPlain(spark, path).getOrElse(throw new IllegalStateException(
-      s"no published version at $path — nothing was ever published " +
-        "there through the versioned-store protocol"))
+    livePlainOrFail(spark, path)._2
 
   /** Time travel: read a SPECIFIC retained version (as listed by
     * [[retainedVersions]]). Versions outside the retention window are
@@ -544,21 +547,49 @@ object MergeUpsert {
   def currentPlainVersion(spark: SparkSession, path: String): Option[String] = {
     val fs = fsFor(spark, path)
     val p = new org.apache.hadoop.fs.Path(path)
-    val ptr = new org.apache.hadoop.fs.Path(p, PointerName)
-    val pointed =
-      if (!fs.exists(ptr)) None
-      else {
-        val in = fs.open(ptr)
-        try {
-          val r = new java.io.BufferedReader(new java.io.InputStreamReader(
-            in, java.nio.charset.StandardCharsets.UTF_8))
-          Option(r.readLine()).map(_.trim).filter(_.nonEmpty)
-        } finally in.close()
-      }
+    val pointed = readPointer(spark, path, PointerName)
     def marked(v: String): Boolean = fs.exists(new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(p, v), CommitMarker))
     pointed.filter(v => fs.exists(new org.apache.hadoop.fs.Path(p, v)))
       .orElse(versionDirs(fs, p).filter(marked).sorted.lastOption)
+  }
+
+  /** The name the pointer file `name` in `dir` holds; None when the
+    * file is absent or empty. The one pointer read: `_CURRENT` here,
+    * and StreamCuration's published and absorbed epoch pointers. */
+  private[graft] def readPointer(spark: SparkSession, dir: String,
+                                 name: String): Option[String] = {
+    val fs = fsFor(spark, dir)
+    val ptr = new org.apache.hadoop.fs.Path(dir, name)
+    if (!fs.exists(ptr)) None
+    else {
+      val in = fs.open(ptr)
+      try {
+        val r = new java.io.BufferedReader(new java.io.InputStreamReader(
+          in, java.nio.charset.StandardCharsets.UTF_8))
+        Option(r.readLine()).map(_.trim).filter(_.nonEmpty)
+      } finally in.close()
+    }
+  }
+
+  /** Point the pointer file `name` in `dir` at `target` atomically:
+    * write it beside (creating `dir` when absent), then one rename.
+    * Rename-over works on POSIX; filesystems that refuse to clobber get
+    * delete+rename of the POINTER FILE only. The one pointer flip, for
+    * the same pointers as [[readPointer]]. */
+  private[graft] def flipPointer(spark: SparkSession, dir: String,
+                                 name: String, target: String): Unit = {
+    val fs = fsFor(spark, dir)
+    val ptr = new org.apache.hadoop.fs.Path(dir, name)
+    val tmp = new org.apache.hadoop.fs.Path(dir, s"$name.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(target.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    if (!fs.rename(tmp, ptr)) {
+      fs.delete(ptr, false)
+      if (!fs.rename(tmp, ptr))
+        throw new java.io.IOException(s"cannot publish pointer $ptr")
+    }
   }
 
   private def versionDirs(fs: org.apache.hadoop.fs.FileSystem,

@@ -250,12 +250,14 @@ object Similarity {
                         centroidTable: DataFrame,
                         retainVersions: Int = 2): Unit = {
     val part = ivfAssign(batch, idCol, vecCol, centroidTable)
-    val merged = MergeUpsert.existingPlain(spark, storePath) match {
+    val live = MergeUpsert.livePlain(spark, storePath)
+    val merged = live match {
       case None => part
-      case Some(existing) => existing.unionByName(part)
+      case Some((_, existing)) => existing.unionByName(part)
         .dropDuplicates("eid")
     }
-    MergeUpsert.publishPlain(spark, storePath, merged, retainVersions)
+    MergeUpsert.publishPlainFrom(spark, storePath, merged, retainVersions,
+      live.map(_._1))
   }
 
   /** [[ivfTopKWith]]'s probe half against a PRE-BUILT postings table

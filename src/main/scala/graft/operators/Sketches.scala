@@ -83,11 +83,12 @@ object Sketches {
                    k: Int, m: Long, retainVersions: Int = 2): Unit = {
     val batchSk = kmvSketch(batch, groupCol, value, k, m)
       .select(col(groupCol), col("sketch"))
-    // the live version is the merge base; the first batch publishes
-    // alone
-    val merged = MergeUpsert.existingPlain(spark, storePath) match {
+    // the live version is the merge base (the publish is pinned to
+    // it); the first batch publishes alone
+    val live = MergeUpsert.livePlain(spark, storePath)
+    val merged = live match {
       case None => batchSk
-      case Some(existing) => existing.as("o")
+      case Some((_, existing)) => existing.as("o")
         .join(batchSk.as("b"), Seq(groupCol), "full_outer")
         .select(col(groupCol),
           when(col("o.sketch").isNull, col("b.sketch"))
@@ -100,8 +101,8 @@ object Sketches {
     // near-empty shuffle partitions as 32 files — pure listing/launch
     // churn for every subsequent read of a 5-row table (part of the
     // x59 run-to-run cost spread)
-    MergeUpsert.publishPlain(spark, storePath, merged.coalesce(1),
-      retainVersions)
+    MergeUpsert.publishPlainFrom(spark, storePath, merged.coalesce(1),
+      retainVersions, live.map(_._1))
   }
 
   /** Count–min sketch of token frequencies: `depth` rows × `width`
@@ -307,9 +308,10 @@ object Sketches {
                 batch: DataFrame, groupCol: String, value: Column,
                 p: Int = 8, retainVersions: Int = 2): Unit = {
     val batchSk = hllSketch(batch, groupCol, value, p)
-    val merged = MergeUpsert.existingPlain(spark, storePath) match {
+    val live = MergeUpsert.livePlain(spark, storePath)
+    val merged = live match {
       case None => batchSk
-      case Some(existing) => existing.as("o")
+      case Some((_, existing)) => existing.as("o")
         .join(batchSk.as("b"), Seq(groupCol), "full_outer")
         .select(col(groupCol),
           when(col("o.registers").isNull, col("b.registers"))
@@ -318,7 +320,7 @@ object Sketches {
             .as("registers"))
     }
     // one file per version, as appendSketch: the store is O(groups·m)
-    MergeUpsert.publishPlain(spark, storePath, merged.coalesce(1),
-      retainVersions)
+    MergeUpsert.publishPlainFrom(spark, storePath, merged.coalesce(1),
+      retainVersions, live.map(_._1))
   }
 }

@@ -16,11 +16,12 @@ import org.apache.spark.sql.types.StructType
   * One row per data file: (file, part, rows, key lo/hi) — the zone-map
   * stats (x140) keyed by file, published through the same atomic
   * `_CURRENT`-pointer protocol as every other store in this engine
-  * ([[MergeUpsert.publishPlain]] on `path/_manifest`; the underscore
-  * prefix keeps it invisible to plain parquet readers of `path`).
-  * Maintenance is O(touched): after a merge rewrites k partitions, only
-  * those partitions' NEW files are scanned and their rows replaced; the
-  * publish is the same pointer flip the data itself gets.
+  * ([[MergeUpsert.publishPlainFrom]] on `path/_manifest`, pinned to the
+  * version the publisher read; the underscore prefix keeps it
+  * invisible to plain parquet readers of `path`). Every publisher ends
+  * in the one private `commit`: after a merge rewrites k partitions,
+  * only those partitions' NEW files are scanned and their rows
+  * replaced, and one pointer flip makes them live.
   *
   * COPY-ON-WRITE data protocol (round 12): a merge or compaction
   * APPENDS new immutable files and never deletes — what changes is
@@ -172,25 +173,6 @@ object TableManifest {
       col("key_hi"), (size(col("key_bloom")).cast("long") * 64L).as("bloom_m"),
       col("key_bloom"))
   }
-
-  /** Scan the given partition values' files and compute one manifest
-    * row per file. O(touched partitions), not O(table). */
-  private def statsFor(spark: SparkSession, path: String,
-                       partitionCol: String, parts: Seq[Any],
-                       keyCol: String): DataFrame =
-    // the partition DIRS are addressed directly (basePath keeps the
-    // partition column) — listing touches k dirs, never the table root
-    // recursively, so maintenance stays O(touched) in LIST calls too.
-    // Partition VALUES are escaped exactly as the writer escaped them
-    // (Spark's Hive-style partition-path escaping) so values with
-    // reserved chars (':', '%', '#', …) address the real dir.
-    spark.read.option("basePath", path)
-      .parquet(parts.map(v => partDir(path, partitionCol, v)): _*)
-      .groupBy(decodeUri(input_file_name()).as("file"),
-        col(partitionCol).cast("string").as("part"))
-      .agg(count(lit(1)).as("rows"),
-        min(col(keyCol)).cast("string").as("key_lo"),
-        max(col(keyCol)).cast("string").as("key_hi"))
 
   /** A published version dir as the planning memo names it: its path
     * plus the modification time of its `_GRAFT_COMMITTED` marker, so a
@@ -355,6 +337,68 @@ object TableManifest {
     }
   }
 
+  /** Append `df` to the table at `path` and return the data files the
+    * append created: the before/after listing of `landing`'s partition
+    * dirs, which must cover every partition value `df` writes (a missed
+    * value leaves that dir's new files unregistered). No committer hook
+    * and no root listing. */
+  private def land(spark: SparkSession, path: String, df: DataFrame,
+                   partitionCol: String, landing: Seq[Any]): Seq[String] = {
+    val before = listPartFiles(spark, path, partitionCol, landing)
+    df.write.mode(SaveMode.Append).partitionBy(partitionCol).parquet(path)
+    // invalidate the shared file-listing cache for readers of this path
+    spark.catalog.refreshByPath(path)
+    (listPartFiles(spark, path, partitionCol, landing) -- before).toSeq
+  }
+
+  /** The ONE manifest commit every publisher ends in. The new version
+    * is `live`'s rows (the version the publisher pinned before any
+    * work) minus the `dropParts` partitions and the `dropFiles` files,
+    * plus one row per data file in `files`, read under `written`, the
+    * schema they were written with ([[statsForFiles]]). It is published
+    * as one file, and its flip is guarded by `live`'s version: a
+    * concurrent publish anywhere in the publisher's span is refused
+    * there, and this call's files stay orphans for [[vacuum]].
+    *
+    * A commit that registers no file publishes only when a drop
+    * removes a row, checked by one `limit(1)` probe over the manifest
+    * that runs only when a drop was asked for: an empty batch is a
+    * no-op, not a version bump per tick. Manifest maintenance is
+    * metadata-scale (one row per data file), so the stats agg and the
+    * publish run on the metadata session, never at the data session's
+    * shuffle sizing or under AQE. */
+  private def commit(spark: SparkSession, path: String, live: Option[Live],
+                     files: Seq[String], written: StructType,
+                     partitionCol: String, keyCol: String,
+                     retainVersions: Int, dropParts: Seq[String] = Nil,
+                     dropFiles: Seq[String] = Nil,
+                     bloomKeys: Option[Seq[String]] = None): Unit = {
+    val ms = graft.Sessions.meta(spark)
+    // `dropFiles` are SPECIFIC superseded files (the epoch stores'
+    // per-file steal rewrite); the strings match exactly because
+    // callers take them from this manifest's rows
+    val drop = Seq("part" -> dropParts, "file" -> dropFiles).collect {
+      case (c, vs) if vs.nonEmpty => col(c).isin(vs: _*)
+    }.reduceOption(_ || _)
+    val fresh =
+      if (files.isEmpty) None
+      else Some(statsForFiles(ms, path, files, written, partitionCol, keyCol,
+        bloomKeys))
+    val rows = live match {
+      case None => fresh
+      case Some(l) =>
+        val kept = drop.fold(l.rows)(d => l.rows.filter(!d))
+        fresh.map(kept.unionByName(_)).orElse(
+          drop.filter(d => !l.rows.filter(d).limit(1).isEmpty).map(_ => kept))
+    }
+    // one file per version: a manifest version is re-read and
+    // collected on every later read and probe of the table, so one
+    // file beats shuffle-partition-many KB-sized ones at streaming
+    // cadence (a 1e6-row manifest is still one ~50 MB task)
+    rows.foreach(r => MergeUpsert.publishPlainFrom(ms, manifestPath(path),
+      r.coalesce(1), retainVersions, live.map(_.version)))
+  }
+
   /** (Re)build manifest rows for `touched` partitions from a FULL
     * rescan of those partitions' dirs, and publish the merged manifest
     * atomically. This is the one BOOTSTRAP/adoption path (a table created
@@ -363,22 +407,21 @@ object TableManifest {
     * a copy-on-write table it is only correct for partitions that hold
     * no superseded files — i.e. never rewritten, or vacuumed with
     * `keepVersions = 1` since their last rewrite. For out-of-band data
-    * arrival on a live table use [[appendManifested]], which registers
-    * exactly the files it wrote. */
+    * arrival on a live table use [[replacePartitions]] with nothing
+    * replaced, which registers exactly the files it wrote. */
   def update(spark: SparkSession, path: String, partitionCol: String,
              touched: Seq[Any], keyCol: String,
              retainVersions: Int = 2): Unit = {
-    val ms = graft.Sessions.meta(spark)
     val live = liveManifest(spark, path)
-    val fresh = statsFor(ms, path, partitionCol, touched, keyCol)
-    val parts = touched.map(_.toString)
-    val merged = live match {
-      case None => fresh
-      case Some(old) => old.rows.filter(!col("part").isin(parts: _*))
-        .unionByName(fresh)
-    }
-    MergeUpsert.publishPlainFrom(ms, manifestPath(path), merged,
-      retainVersions, live.map(_.version))
+    val files = listPartFiles(spark, path, partitionCol, touched).toSeq
+    // another writer laid these files out, so no written schema exists:
+    // it is inferred once, from the listed files
+    val written =
+      if (files.isEmpty) new StructType()
+      else graft.Sessions.meta(spark).read.option("basePath", path)
+        .parquet(files: _*).schema
+    commit(spark, path, live, files, written, partitionCol, keyCol,
+      retainVersions, dropParts = touched.map(_.toString))
   }
 
   /** The live manifest, or None when the table does not exist. The
@@ -507,19 +550,15 @@ object TableManifest {
     // numbers is one whole Spark job per merge at streaming cadence)
     val (touched, keyEst) = batchStats(updates, keys, partitionCol)
     if (touched.isEmpty) return MergeWriteReport(0, 0L, broadcastKeys = false)
-    val before = listPartFiles(spark, path, partitionCol, touched)
-    // the report, and the schema of the frame written
-    val (report, written) = live match {
+    // the report, and the frame appended: one task per touched date
+    val (report, out) = live match {
       case None =>
         // create: repartition by the partition column first —
         // otherwise EVERY task writes a file into EVERY touched
         // partition (tasks × dates tiny files — measured 80× write
         // amplification on a historical backfill spanning ~2400 dates)
-        updates.dropDuplicates(keys)
-          .repartition(col(partitionCol))
-          .write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
-          .parquet(path)
-        (MergeWriteReport(0, 0L, broadcastKeys = false), updates.schema)
+        (MergeWriteReport(0, 0L, broadcastKeys = false),
+          updates.dropDuplicates(keys).repartition(col(partitionCol)))
       case Some(base) =>
         // the touched partitions' live rows, planned from the manifest
         // (collected by keptFiles before the data read is planned on
@@ -543,37 +582,17 @@ object TableManifest {
         // matter there).
         val writer = if (broadcastKeys)
           graft.Sessions.derived(spark, graft.Sessions.AqeOff) else spark
-        bridge.onSession(merged, writer)
-          .repartition(col(partitionCol)) // one task per date → one file per date
-          .sortWithinPartitions(keys.map(col): _*) // clustered row groups →
-          // parquet min/max stats prune key lookups inside each date file
-          .write.mode(SaveMode.Append).partitionBy(partitionCol).parquet(path)
-        (MergeWriteReport(touched.length, keyEst, broadcastKeys), merged.schema)
+        // one sorted file per date: clustered row groups let parquet
+        // min/max stats prune key lookups inside each date file
+        (MergeWriteReport(touched.length, keyEst, broadcastKeys),
+          bridge.onSession(merged, writer).repartition(col(partitionCol))
+            .sortWithinPartitions(keys.map(col): _*))
     }
-    // invalidate the shared file-listing cache for readers of this path
-    spark.catalog.refreshByPath(path)
-    val newFiles =
-      (listPartFiles(spark, path, partitionCol, touched) -- before).toSeq
+    val files = land(spark, path, out, partitionCol, touched)
     beforeManifestPublish()
-    if (newFiles.nonEmpty) {
-      // manifest maintenance is METADATA-scale always (rows = file
-      // count, bounded by MaxPlanFiles): its stats agg and publish run
-      // on the metadata session, never at the data session's shuffle
-      // sizing (measured ~0.3 s/publish of pure tiny-task overhead at
-      // 32) or under AQE
-      val ms = graft.Sessions.meta(spark)
-      val fresh = statsForFiles(ms, path, newFiles, written, partitionCol,
-        zoneKey.getOrElse(keys.head))
-      val parts = touched.map(_.toString)
-      val merged = live match {
-        case None => fresh
-        case Some(old) => old.rows.filter(!col("part").isin(parts: _*))
-          .unionByName(fresh)
-      }
-      // one file per manifest version (see replacePartitions)
-      MergeUpsert.publishPlainFrom(ms, manifestPath(path),
-        merged.coalesce(1), retainVersions, live.map(_.version))
-    }
+    commit(spark, path, live, files, out.schema, partitionCol,
+      zoneKey.getOrElse(keys.head), retainVersions,
+      dropParts = touched.map(_.toString))
     report
   }
 
@@ -590,7 +609,24 @@ object TableManifest {
     * retained-version readers ([[readVersion]]) until [[vacuum]].
     * Same interleave guard as [[mergeWriteManifested]]: the manifest
     * base is pinned first, so a concurrent publish is refused at the
-    * flip and this call's appended files stay vacuumable orphans. */
+    * flip and this call's appended files stay vacuumable orphans.
+    *
+    * With nothing replaced it is the out-of-band APPEND with exact
+    * registration (no merge semantics — the caller owns key
+    * uniqueness): every existing manifest row stays, and only the
+    * files this call wrote are added, so unlike [[update]]'s dir
+    * rescan it cannot resurrect superseded copy-on-write files.
+    *
+    * The first write BOOTSTRAPS the table (no manifest yet, nothing to
+    * drop), so this is also the idempotent "this partition's contents
+    * ARE this frame" writer (StreamCuration's epoch inserts).
+    * `landingParts` is `df`'s partition set when the caller knows it
+    * (it must cover every value `df` writes), so `df` runs once, in the
+    * write, instead of also in a distinct-collect first (r15:
+    * compactCurated's fold plan was paid twice). `replaceFiles` drops
+    * SPECIFIC files, named as this manifest's rows name them (the
+    * epoch stores' per-file steal rewrite — file granularity, so a
+    * fired bloom never forces a whole-partition rewrite). */
   def replacePartitions(spark: SparkSession, path: String, df: DataFrame,
                         keyCol: String, partitionCol: String,
                         replaceParts: Seq[Any],
@@ -598,70 +634,12 @@ object TableManifest {
                         landingParts: Option[Seq[Any]] = None,
                         replaceFiles: Seq[String] = Nil,
                         bloomKeys: Option[Seq[String]] = None): Unit = {
-    val ms = graft.Sessions.meta(spark)
-    // first write BOOTSTRAPS (no manifest yet → nothing to drop):
-    // replacePartitions doubles as the idempotent "this partition's
-    // contents ARE this frame" writer (StreamCuration's epoch inserts)
     val live = manifestFor(spark, path, "replacePartitions")
-    val mBase = live.map(_.version)
-    val m = live.map(_.rows)
-    // only the dirs receiving NEW files need the before/after listing;
-    // the dropped partitions are removed from the manifest by name.
-    // Callers that KNOW df's partition set pass it via `landingParts`
-    // (it must cover every partition value df writes — a missed value
-    // leaves that dir's new files unregistered) so df executes exactly
-    // once, in the write (r15 advice: compactCurated's fold plan was
-    // paid twice — once for this distinct-collect, once writing).
     val landing = landingParts.getOrElse(
       df.select(col(partitionCol)).distinct().collect().map(_.get(0)).toSeq)
-    val before = listPartFiles(spark, path, partitionCol, landing)
-    df.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy(partitionCol).parquet(path)
-    spark.catalog.refreshByPath(path)
-    val newFiles =
-      (listPartFiles(spark, path, partitionCol, landing) -- before).toSeq
-    val dropped = replaceParts.map(_.toString)
-    // `replaceFiles` drops SPECIFIC superseded files (the epoch
-    // stores' per-file steal rewrite — file granularity, so a fired
-    // bloom never forces a whole-partition rewrite); strings match
-    // exactly because callers take them from this manifest's rows
-    val kept = m.map { old =>
-      val byPart = old.filter(!col("part").isin(dropped: _*))
-      if (replaceFiles.isEmpty) byPart
-      else byPart.filter(!col("file").isin(replaceFiles: _*))
-    }
-    val fresh =
-      if (newFiles.isEmpty) None
-      else Some(statsForFiles(ms, path, newFiles, df.schema, partitionCol,
-        keyCol, bloomKeys))
-    // coalesce(1): a manifest version is metadata (one row per data
-    // file) and is re-read/collected on EVERY subsequent store read
-    // and probe — one file per version beats shuffle-partition-many
-    // KB-sized files at streaming cadence (r17; a 1e6-row manifest is
-    // still a single ~50 MB task, maintenance-scale)
-    (kept, fresh) match {
-      case (Some(k), Some(f)) =>
-        MergeUpsert.publishPlainFrom(ms, manifestPath(path),
-          k.unionByName(f).coalesce(1), retainVersions, mBase)
-      case (Some(k), None) =>
-        // nothing landed: publish only if the drop filters actually
-        // removed rows — an empty batch into an epoch store must be a
-        // no-op, not a version bump per tick (the probe is one
-        // limit(1) over the tiny manifest)
-        val dropsAnything = m.exists { old =>
-          !old.filter(col("part").isin(dropped: _*) ||
-              (if (replaceFiles.isEmpty) lit(false)
-               else col("file").isin(replaceFiles: _*)))
-            .limit(1).isEmpty
-        }
-        if (dropsAnything)
-          MergeUpsert.publishPlainFrom(ms, manifestPath(path),
-            k.coalesce(1), retainVersions, mBase)
-      case (None, Some(f)) =>
-        MergeUpsert.publishPlainFrom(ms, manifestPath(path),
-          f.coalesce(1), retainVersions, mBase)
-      case (None, None) => () // empty df on an absent table: no-op
-    }
+    val files = land(spark, path, df, partitionCol, landing)
+    commit(spark, path, live, files, df.schema, partitionCol, keyCol,
+      retainVersions, replaceParts.map(_.toString), replaceFiles, bloomKeys)
   }
 
   /** The manifest files whose per-file key bloom MIGHT contain any of
@@ -714,40 +692,6 @@ object TableManifest {
           .collect().distinct.toSeq
     }
 
-  /** Out-of-band APPEND with exact manifest registration: writes `df`
-    * as new files (no merge semantics — the caller owns key
-    * uniqueness) and registers EXACTLY the files it wrote, leaving
-    * every existing manifest row in place. This is the safe form of
-    * "external writer lands data on a live table": unlike [[update]]'s
-    * dir rescan it cannot resurrect superseded copy-on-write files,
-    * because it never looks at files it didn't just create. */
-  def appendManifested(spark: SparkSession, path: String, df: DataFrame,
-                       keyCol: String, partitionCol: String = "date",
-                       retainVersions: Int = 2): Unit = {
-    // pinned like mergeWriteManifested's base: a concurrent manifest
-    // publish during the append is refused at the flip
-    val live = manifestFor(spark, path, "appendManifested")
-    val touched = df.select(col(partitionCol)).distinct()
-      .collect().map(_.get(0)).toSeq
-    val before = listPartFiles(spark, path, partitionCol, touched)
-    df.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy(partitionCol).parquet(path)
-    spark.catalog.refreshByPath(path)
-    val newFiles =
-      (listPartFiles(spark, path, partitionCol, touched) -- before).toSeq
-    if (newFiles.isEmpty) return
-    val ms = graft.Sessions.meta(spark)
-    val fresh = statsForFiles(ms, path, newFiles, df.schema, partitionCol,
-      keyCol)
-    val merged = live match {
-      case None => fresh
-      case Some(old) => old.rows.unionByName(fresh)
-    }
-    // one file per manifest version (see replacePartitions)
-    MergeUpsert.publishPlainFrom(ms, manifestPath(path),
-      merged.coalesce(1), retainVersions, live.map(_.version))
-  }
-
   /** Manifest-planned read of the given PARTITION values: keep only
     * the manifest files whose partition matches — the date-filtered
     * endpoint read (QueryLayer's q07–q10 path) with zero directory
@@ -758,7 +702,7 @@ object TableManifest {
     *
     * Manifest-currency contract (applies to every manifest-planned
     * read here): files appended out-of-band and never registered via
-    * [[appendManifested]]/[[update]] are INVISIBLE — derived jobs
+    * [[replacePartitions]]/[[update]] are INVISIBLE — derived jobs
     * reading through the manifest silently exclude them, they do not
     * fail. Register every out-of-band arrival before reading.
     *
@@ -835,7 +779,7 @@ object TableManifest {
     * file.
     *
     * Contract: the manifest must be CURRENT (register any out-of-band
-    * append via [[appendManifested]] first) — the rewrite reads exactly
+    * append via [[replacePartitions]] first) — the rewrite reads exactly
     * the manifest's file list, so rows in unregistered files of a
     * compacted partition would vanish from the new manifest version.
     * `zoneKey` must match the zone column every prior publish used
@@ -852,48 +796,37 @@ object TableManifest {
     // (liveManifest): a concurrent manifest publish is refused at the
     // flip instead of being silently unreferenced by the compacted
     // manifest (the publishPlainFrom contract)
-    val ms = graft.Sessions.meta(spark)
     val live = manifestFor(spark, path, "compactManifested")
       .getOrElse(sys.error(s"no manifest at $path — call update() first"))
-    val (mBase, m) = (live.version, live.rows)
+    val m = live.rows
     val filesBefore = m.count()
     // over-threshold partitions found DISTRIBUTED from the manifest;
-    // only their names (bounded by partition count) reach the driver
-    val overParts = m.groupBy("part").agg(count(lit(1)).as("nf"))
+    // only their names and file counts (bounded by partition count)
+    // reach the driver
+    val over = m.groupBy("part").agg(count(lit(1)).as("nf"))
       .filter(col("nf") > maxFilesPerPart)
-      .select("part").collect().map(_.getString(0)).toSeq
-    if (overParts.isEmpty)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+    if (over.isEmpty)
       return CompactReport(0, filesBefore, filesBefore)
-    val files = keptFiles(spark, live, overParts)
-    val before = listPartFiles(spark, path, partitionCol, overParts)
+    val overParts = over.map(_._1)
     // read ONLY the over-threshold partitions' live files
     // (manifest-planned), rewrite them one-file-per-partition as new
     // appended files — the copy-on-write publish, so readers never see
-    // a partial partition and prior versions stay readable
-    val data = readFiles(spark, path, live, files)
-    data.repartition(col(partitionCol))
+    // a partial partition and prior versions stay readable. The DATA
+    // rewrite stays on the caller's session (table-scale work keeps
+    // its sizing and AQE)
+    val out = readFiles(spark, path, live, keptFiles(spark, live, overParts))
+      .repartition(col(partitionCol))
       .sortWithinPartitions(col(keyCol))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy(partitionCol)
-      .parquet(path)
-    spark.catalog.refreshByPath(path)
-    val newFiles =
-      (listPartFiles(spark, path, partitionCol, overParts) -- before).toSeq
-    // replace exactly the compacted partitions' manifest rows with the
-    // new files' stats; the partition values re-enter statsForFiles in
-    // their DECODED string form. The DATA rewrite above stays on the
-    // caller's session (table-scale work keeps its sizing and AQE)
-    val fresh = statsForFiles(ms, path, newFiles, data.schema, partitionCol,
-      zoneKey.getOrElse(keyCol))
-    val merged = m.filter(!col("part").isin(overParts: _*))
-      .unionByName(fresh)
-    MergeUpsert.publishPlainFrom(ms, manifestPath(path), merged,
-      retainVersions, Some(mBase))
-    // filesAfter is MEASURED from the refreshed manifest (one row per
-    // file), not derived from a one-file-per-partition assumption a
-    // writer setting like maxRecordsPerFile could break
+    val files = land(spark, path, out, partitionCol, overParts)
+    commit(spark, path, Some(live), files, out.schema, partitionCol,
+      zoneKey.getOrElse(keyCol), retainVersions, dropParts = overParts)
+    // filesAfter is the published version's row count (one row per
+    // file): the carried rows plus the files the rewrite registered —
+    // measured, not a one-file-per-partition assumption a writer
+    // setting like maxRecordsPerFile could break
     CompactReport(overParts.size, filesBefore,
-      load(spark, path).map(_.count()).getOrElse(0L))
+      filesBefore - over.map(_._2).sum + files.size)
   }
 
   /** The manifest's retained version names (oldest first) — the
@@ -1329,7 +1262,7 @@ object TableManifest {
     * contract as [[readPartitions]].
     *
     * SCHEMA EVOLUTION (x244): a table whose generations were written
-    * under evolved schemas — [[appendManifested]] of a batch carrying
+    * under evolved schemas — [[replacePartitions]] of a batch carrying
     * a new column, or [[mergeWriteManifested]] after an evolveSchema
     * merge — needs `mergeSchema = true` to reconcile: the union schema
     * is computed from the listed files' footers (distributed) and

@@ -56,7 +56,7 @@ object MetricsJob {
     try {
       // manifest-currency contract (TableManifest.readOrPlain): rows
       // appended to capacity out-of-band and never registered
-      // (appendManifested/update) are silently EXCLUDED from the
+      // (replacePartitions/update) are silently EXCLUDED from the
       // derivation, not an error — register arrivals before deriving
       val capacity = TableManifest.readOrPlain(spark, capacityPath)
       val metrics = derive(capacity, runId)

@@ -9866,10 +9866,10 @@ object ExtensionCatalog {
         val extra = ev.filter(col("event_id") % 11 === 0)
           .withColumn("event_id", col("event_id") + 10000000L)
         // out-of-band arrival registered with EXACT file accounting
-        // (appendManifested) — on a copy-on-write table a dir rescan
-        // (update) could resurrect superseded files
-        TableManifest.appendManifested(s, path, extra.repartition(4),
-          keyCol = "event_id")
+        // (replacePartitions, nothing replaced) — on a copy-on-write
+        // table a dir rescan (update) could resurrect superseded files
+        TableManifest.replacePartitions(s, path, extra.repartition(4),
+          keyCol = "event_id", partitionCol = "date", replaceParts = Nil)
         val rep = TableManifest.compactManifested(s, path,
           keyCol = "event_id")
         require(rep.partsCompacted >= 1 &&
@@ -10152,7 +10152,7 @@ object ExtensionCatalog {
 
     // ---- schema evolution on the MANIFESTED copy-on-write path
     //      (r12 verdict item 6): a widened batch (new score_q column,
-    //      fresh keys) lands through appendManifested — exact file
+    //      fresh keys) lands through replacePartitions — exact file
     //      registration, no dir rescan — and the manifest read
     //      reconciles both schema generations with mergeSchema
     //      (pre-evolution rows read NULL in the added column). The
@@ -10183,7 +10183,8 @@ object ExtensionCatalog {
         TableManifest.mergeWriteManifested(s, path, evBase,
           keys = Seq("event_id"))
         // the widened generation: same layout + score_q, disjoint keys
-        // (appendManifested is append-only — the caller owns uniqueness)
+        // (replacing nothing, it is append-only — the caller owns
+        // uniqueness)
         val widened = eventsNs(s, dir)
           .filter(col("event_id") % 9 === 0)
           .select((col("event_id") + 10000000L).as("event_id"),
@@ -10192,8 +10193,8 @@ object ExtensionCatalog {
             to_date(timestamp_micros(expr("ts DIV 1000"))).cast("string")
               .as("date"),
             floor(col("value") * 10000.0 + 0.5).cast("long").as("score_q"))
-        TableManifest.appendManifested(s, path, widened,
-          keyCol = "event_id")
+        TableManifest.replacePartitions(s, path, widened,
+          keyCol = "event_id", partitionCol = "date", replaceParts = Nil)
         val t = TableManifest.readViaManifest(s, path, mergeSchema = true)
         require(t.columns.contains("score_q"),
           "the merged manifest read must carry the evolved column")

@@ -292,47 +292,12 @@ object StreamCuration {
   /** The published epoch pointer, if any. */
   private[streaming] def publishedEpoch(spark: SparkSession,
                                         workDir: String): Option[String] =
-    readPointerFile(spark, workDir, PublishedPointer)
+    MergeUpsert.readPointer(spark, curatedPath(workDir), PublishedPointer)
 
   private def flipPointer(spark: SparkSession, workDir: String,
                           epoch: String): Unit =
-    flipPointerFile(spark, workDir, PublishedPointer, epoch)
-
-  private def readPointerFile(spark: SparkSession, workDir: String,
-                              name: String): Option[String] = {
-    val fs = new org.apache.hadoop.fs.Path(curatedPath(workDir))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ptr = new org.apache.hadoop.fs.Path(curatedPath(workDir), name)
-    if (!fs.exists(ptr)) None
-    else {
-      val in = fs.open(ptr)
-      try {
-        val s = new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        if (s.isEmpty) None else Some(s)
-      } finally in.close()
-    }
-  }
-
-  /** Atomically flip a curated pointer file (write-beside + rename,
-    * the same primitive as the stores' `_CURRENT` flips). */
-  private def flipPointerFile(spark: SparkSession, workDir: String,
-                              name: String, epoch: String): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(curatedPath(workDir))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dir)
-    val ptr = new org.apache.hadoop.fs.Path(dir, name)
-    val tmp = new org.apache.hadoop.fs.Path(dir, s"$name.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(epoch.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!fs.rename(tmp, ptr)) {
-      fs.delete(ptr, false)
-      if (!fs.rename(tmp, ptr))
-        throw new java.io.IOException(s"cannot publish pointer $ptr")
-    }
-  }
+    MergeUpsert.flipPointer(spark, curatedPath(workDir), PublishedPointer,
+      epoch)
 
   private def start(spark: SparkSession, srcGlob: String,
                     schema: StructType, workDir: String,
@@ -963,11 +928,12 @@ object StreamCuration {
     * pairs the label state has absorbed. */
   private def absorbedEpoch(spark: SparkSession,
                             workDir: String): Option[String] =
-    readPointerFile(spark, workDir, AbsorbedPointer)
+    MergeUpsert.readPointer(spark, curatedPath(workDir), AbsorbedPointer)
 
   private def flipAbsorbed(spark: SparkSession, workDir: String,
                            epoch: String): Unit =
-    flipPointerFile(spark, workDir, AbsorbedPointer, epoch)
+    MergeUpsert.flipPointer(spark, curatedPath(workDir), AbsorbedPointer,
+      epoch)
 
   /** Next epoch for DIRECT (non-stream) callers: one past the newest
     * epoch any curated store mentions (the stream passes its
@@ -1022,29 +988,12 @@ object StreamCuration {
     (publishedEpoch(spark, workDir),
         TableManifest.load(spark, curatedBasePath(workDir))) match {
       case (Some(p), Some(m)) =>
-        val parts = m.select("part").distinct().collect()
-          .map(_.getString(0)).filter(_ <= p).toSeq
+        val (parts, targetN) = foldSizing(spark, curatedBasePath(workDir),
+          EpochCol, m, p, targetBytes)
         if (parts.nonEmpty) {
-          // size the fold's OUTPUT (the point of compaction is fewer,
-          // bigger files): target byte-sized files from a k-dir
-          // listing (metadata; superseded generations overcount ≤ the
-          // retention factor, which only rounds the target up).
           // repartition, not coalesce — a narrow coalesce would
           // propagate through the broadcast-join fold plan and
           // serialize the base scan itself.
-          val base = curatedBasePath(workDir)
-          val fs = new org.apache.hadoop.fs.Path(base)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val bytes = parts.iterator.map { v =>
-            val d = new org.apache.hadoop.fs.Path(s"$base/$EpochCol=$v")
-            if (!fs.exists(d)) 0L
-            else fs.listStatus(d).iterator
-              .filter(st => st.isFile &&
-                st.getPath.getName.endsWith(".parquet"))
-              .map(_.getLen).sum
-          }.sum
-          val targetN =
-            math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
           val folded = readCurated(spark, workDir)
             .withColumn(EpochCol, lit(p))
             .repartition(targetN)
@@ -1123,28 +1072,10 @@ object StreamCuration {
     TableManifest.load(spark, path) match {
       case None => Seq.empty
       case Some(m) =>
-        val parts = m.select("part").distinct().collect()
-          .map(_.getString(0)).filter(_ <= upTo).toSeq
+        val (parts, targetN) =
+          foldSizing(spark, path, epochCol, m, upTo, targetBytes)
         if (parts.size <= 1) Seq.empty
         else {
-          val fs = new org.apache.hadoop.fs.Path(path)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          // output sizing from the k dirs' listing (metadata;
-          // superseded generations overcount <= the retention factor,
-          // which only rounds the target up)
-          val bytes = parts.iterator.map { v =>
-            val d = new org.apache.hadoop.fs.Path(
-              s"$path/$epochCol=" +
-                org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                  .escapePathName(v))
-            if (!fs.exists(d)) 0L
-            else fs.listStatus(d).iterator
-              .filter(st => st.isFile &&
-                st.getPath.getName.endsWith(".parquet"))
-              .map(_.getLen).sum
-          }.sum
-          val targetN =
-            math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
           val folded = TableManifest
             .readPartitions(spark, path, parts, epochCol)
             .withColumn(epochCol, lit(upTo))
@@ -1156,6 +1087,31 @@ object StreamCuration {
           (parts :+ upTo).distinct
         }
     }
+
+  /** A fold's input and output size: the partitions of manifest `m`
+    * at or below `upTo`, and the fold's output file count — their
+    * parquet bytes over `targetBytes`, rounded up (the point of a fold
+    * is fewer, bigger files). The bytes come from listing those k
+    * partition dirs (metadata; superseded generations overcount by at
+    * most the retention factor, which only rounds the count up). */
+  private def foldSizing(spark: SparkSession, path: String,
+                         epochCol: String, m: DataFrame, upTo: String,
+                         targetBytes: Long): (Seq[String], Int) = {
+    val parts = m.select("part").distinct().collect()
+      .map(_.getString(0)).filter(_ <= upTo).toSeq
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val bytes = parts.iterator.map { v =>
+      val d = new org.apache.hadoop.fs.Path(s"$path/$epochCol=" +
+        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+          .escapePathName(v))
+      if (!fs.exists(d)) 0L
+      else fs.listStatus(d).iterator
+        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+        .map(_.getLen).sum
+    }.sum
+    (parts, math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt))
+  }
 
   /** Scoped-vacuum every ON-DISK epoch dir of an epoch-partitioned
     * store and remove emptied dirs — shared by the curated base and

@@ -35,9 +35,11 @@ object StreamScd2 {
   val BatchCol = "_batch_id"
 
   def lastApplied(spark: SparkSession, storePath: String): Option[Long] =
-    MergeUpsert.existingPlain(spark, storePath).flatMap(
-      _.agg(max(col(BatchCol))).collect().headOption
-        .filterNot(_.isNullAt(0)).map(_.getLong(0)))
+    MergeUpsert.existingPlain(spark, storePath).flatMap(appliedIn)
+
+  private def appliedIn(hist: DataFrame): Option[Long] =
+    hist.agg(max(col(BatchCol))).collect().headOption
+      .filterNot(_.isNullAt(0)).map(_.getLong(0))
 
   /** The maintained history (provenance column included). */
   def readHistory(spark: SparkSession, storePath: String): DataFrame =
@@ -45,14 +47,17 @@ object StreamScd2 {
 
   /** Apply ONE snapshot batch exactly-once: no-op when `batchId` is
     * already applied, else merge run starts and republish intervals +
-    * watermark in one atomic version flip. */
+    * watermark in one atomic version flip, pinned to the version it
+    * read. */
   def applyBatch(spark: SparkSession, storePath: String, batch: DataFrame,
                  keyCol: String, batchCol: String, attrCols: Seq[String],
                  batchId: Long, retainVersions: Int = 2): Unit = {
-    if (lastApplied(spark, storePath).exists(_ >= batchId)) return
+    val live = MergeUpsert.livePlain(spark, storePath)
+    val stored = live.map(_._2)
+    if (stored.flatMap(appliedIn).exists(_ >= batchId)) return
     val incoming = Scd2.history(batch, keyCol, batchCol, attrCols)
       .select((keyCol +: attrCols).map(col) :+ col("valid_from"): _*)
-    val starts = MergeUpsert.existingPlain(spark, storePath) match {
+    val starts = stored match {
       case None => incoming
       case Some(hist) => hist
         .select((keyCol +: attrCols).map(col) :+ col("valid_from"): _*)
@@ -75,7 +80,7 @@ object StreamScd2 {
     // (key, valid_from) alone would let a replaced interval keep the
     // superseded batch's id, misattributing the correction; attrs
     // compare null-safely (<=>) so a null attribute still matches.
-    val old = MergeUpsert.existingPlain(spark, storePath).map(
+    val old = stored.map(
       _.select((keyCol +: attrCols).map(c => col(c).as(s"_old_$c"))
         :+ col("valid_from").as("_old_valid_from") :+ col(BatchCol): _*))
     val tagged = old match {
@@ -89,6 +94,7 @@ object StreamScd2 {
           .withColumn(BatchCol, coalesce(col(BatchCol), lit(batchId)))
           .select(merged.columns.map(merged(_)) :+ col(BatchCol): _*)
     }
-    MergeUpsert.publishPlain(spark, storePath, tagged, retainVersions)
+    MergeUpsert.publishPlainFrom(spark, storePath, tagged, retainVersions,
+      live.map(_._1))
   }
 }

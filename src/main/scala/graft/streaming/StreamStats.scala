@@ -31,9 +31,11 @@ object StreamStats {
     * (its ledger row; ignoring it would double-apply a redelivered
     * batch). */
   def lastApplied(spark: SparkSession, storePath: String): Option[Long] =
-    MergeUpsert.existingPlain(spark, storePath).flatMap(
-      _.filter(col("term") === LedgerKey)
-        .select("freq").collect().headOption.map(_.getLong(0)))
+    MergeUpsert.existingPlain(spark, storePath).flatMap(appliedIn)
+
+  private def appliedIn(store: DataFrame): Option[Long] =
+    store.filter(col("term") === LedgerKey)
+      .select("freq").collect().headOption.map(_.getLong(0))
 
   /** The maintained vocabulary (ledger row excluded). */
   def readVocab(spark: SparkSession, storePath: String): DataFrame =
@@ -42,26 +44,28 @@ object StreamStats {
 
   /** Apply ONE batch exactly-once: no-op if `batchId` is already in the
     * ledger, else additively merge the batch's lowercased token counts
-    * and publish counts + new ledger row in one atomic version flip. */
+    * and publish counts + new ledger row in one atomic version flip,
+    * pinned to the version whose ledger and counts it read. */
   def applyBatch(spark: SparkSession, storePath: String, batch: DataFrame,
                  textCol: String, batchId: Long,
                  retainVersions: Int = 2): Unit = {
-    if (lastApplied(spark, storePath).exists(_ >= batchId)) return
+    val live = MergeUpsert.livePlain(spark, storePath)
+    if (live.flatMap(l => appliedIn(l._2)).exists(_ >= batchId)) return
     val counts = batch
       .select(explode(TextFunctions.tokens(lower(col(textCol)))).as("term"))
       .groupBy("term").agg(count(lit(1)).as("freq"))
     // the live version is the merge base; the first batch publishes
     // alone
-    val merged = MergeUpsert.existingPlain(spark, storePath) match {
+    val merged = live match {
       case None => counts
-      case Some(existing) => MergeUpsert.mergeAdditive(
+      case Some((_, existing)) => MergeUpsert.mergeAdditive(
         existing.filter(col("term") =!= LedgerKey), counts,
         Seq("term"), Seq("freq"))
     }
     val ledger = spark.range(1)
       .select(lit(LedgerKey).as("term"), lit(batchId).as("freq"))
-    MergeUpsert.publishPlain(spark, storePath,
-      merged.unionByName(ledger), retainVersions)
+    MergeUpsert.publishPlainFrom(spark, storePath,
+      merged.unionByName(ledger), retainVersions, live.map(_._1))
   }
 
   /** Continuous vocabulary maintenance over a document-file stream. */

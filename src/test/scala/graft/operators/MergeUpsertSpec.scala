@@ -375,4 +375,55 @@ class MergeUpsertSpec extends SparkSpec {
     assert(MergeUpsert.readPlain(spark, dir)
       .select("total_beds").as[Int].collect().toSeq == Seq(2))
   }
+
+  test("deleteWhere pins its publish to the version it read: another " +
+    "writer's publish in between is refused, not overwritten") {
+    val dir = Files.createTempDirectory("graft-delpin").toString + "/t"
+    val other = Files.createTempDirectory("graft-delpin").toString + "/o"
+    MergeUpsert.publishPlain(spark, dir,
+      tbl(("2024-01-15", "CA", 1), ("2024-01-15", "TX", 2)))
+    MergeUpsert.publishPlain(spark, other, tbl(("2024-01-15", "NY", 7)))
+    // the second writer publishes `other`'s rows as the store's next
+    // version while deleteWhere counts its matches — after its read,
+    // before its flip
+    MergeUpsertSpec.hook.set(() => MergeUpsertSpec.publishCopy(
+      s"$other/v-0000000001", dir, "v-0000000002"))
+    val fire = udf { (_: String) =>
+      Option(MergeUpsertSpec.hook.getAndSet(null)).foreach(_())
+      true
+    }.asNondeterministic()
+    intercept[java.util.ConcurrentModificationException] {
+      MergeUpsert.deleteWhere(spark, dir,
+        fire(col("region_id")) && col("region_id") === "TX")
+    }
+    assert(MergeUpsertSpec.hook.get == null, "the second writer ran")
+    assert(MergeUpsert.currentPlainVersion(spark, dir)
+      .contains("v-0000000002"))
+    assert(MergeUpsert.readPlain(spark, dir)
+      .select("region_id", "total_beds").as[(String, Int)].collect().toSeq
+      == Seq(("NY", 7)), "the second writer's publish stands")
+  }
+}
+
+object MergeUpsertSpec {
+  /** Run once by the first task that reaches it (tasks share the
+    * driver's JVM under `local[4]`). */
+  val hook = new java.util.concurrent.atomic.AtomicReference[() => Unit]()
+
+  /** Another writer's publish made with the filesystem alone, so it
+    * can run inside a task: copy version dir `from` into store `to`
+    * as version `name`, then flip `to`'s `_CURRENT` to it. */
+  def publishCopy(from: String, to: String, name: String): Unit = {
+    val dst = java.nio.file.Paths.get(to, name)
+    Files.createDirectories(dst)
+    Files.list(java.nio.file.Paths.get(from)).forEach(f =>
+      Files.copy(f, dst.resolve(f.getFileName)))
+    // the old pointer's checksum sidecar would fail the new contents
+    Files.deleteIfExists(java.nio.file.Paths.get(to, "._CURRENT.crc"))
+    val tmp = java.nio.file.Paths.get(to, "_CURRENT.tmp")
+    Files.write(tmp, name.getBytes("UTF-8"))
+    Files.move(tmp, java.nio.file.Paths.get(to, "_CURRENT"),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
 }

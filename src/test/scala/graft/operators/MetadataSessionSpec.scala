@@ -57,10 +57,11 @@ class MetadataSessionSpec extends SparkSpec {
       onData("mergeWriteManifested") {
         TableManifest.mergeWriteManifested(spark, path, evs, keys = Seq("k"))
       }
-      onData("appendManifested") {
-        TableManifest.appendManifested(spark, path,
+      onData("replacePartitions") {
+        TableManifest.replacePartitions(spark, path,
           Seq((new java.sql.Timestamp(t0.getTime - 3600L * 1000L),
-            "2024-03-09", -1.0)).toDF("k", "date", "value"), "k")
+            "2024-03-09", -1.0)).toDF("k", "date", "value"), "k", "date",
+          replaceParts = Nil)
       }
       // the zones as the DATA session renders the key
       val expected = onData("readViaManifest") {
@@ -147,8 +148,9 @@ class MetadataSessionSpec extends SparkSpec {
       @volatile var failure: Option[Throwable] = None
       val meta = new Thread(() => try {
         (0 until 3).foreach { r =>
-          TableManifest.appendManifested(spark, path,
-            day("2024-01-01", (1000 + r * 10) until (1005 + r * 10)), "id")
+          TableManifest.replacePartitions(spark, path,
+            day("2024-01-01", (1000 + r * 10) until (1005 + r * 10)), "id",
+            "date", replaceParts = Nil)
           TableManifest.compactManifested(spark, path, "id")
           TableManifest.exportSymlinkManifest(spark, path, tmpDir())
           TableManifest.vacuum(spark, path, keepVersions = 1)

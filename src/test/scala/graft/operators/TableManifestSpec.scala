@@ -99,7 +99,8 @@ class TableManifestSpec extends SparkSpec {
       "merge" -> (() =>
         TableManifest.mergeWriteManifested(spark, path, batch, keys = Seq("id"))),
       "append" -> (() =>
-        TableManifest.appendManifested(spark, path, batch, keyCol = "id")),
+        TableManifest.replacePartitions(spark, path, batch, keyCol = "id",
+          partitionCol = "date", replaceParts = Nil)),
       "replace" -> (() =>
         TableManifest.replacePartitions(spark, path, batch, keyCol = "id",
           partitionCol = "date", replaceParts = Seq(dates(1)))),
@@ -296,11 +297,11 @@ class TableManifestSpec extends SparkSpec {
       rows("2024-01-01", 11L to 25L, 2.0), keys = Seq("id"))
     assert(TableManifest.readViaManifest(spark, path).count() == 25L)
     // out-of-band arrival into the SAME partition + a new one
-    TableManifest.appendManifested(spark, path,
+    TableManifest.replacePartitions(spark, path,
       rows("2024-01-01", 101L to 105L, 5.0)
         .unionByName(rows("2024-01-02", 201L to 203L, 5.0))
         .repartition(col("date")),
-      keyCol = "id")
+      keyCol = "id", partitionCol = "date", replaceParts = Nil)
     val got = TableManifest.readViaManifest(spark, path)
     assert(got.count() == 33L,
       "append must add its rows without resurrecting the superseded file")
@@ -320,9 +321,10 @@ class TableManifestSpec extends SparkSpec {
       .toDF("id", "g", "date", "value")
     TableManifest.mergeWriteManifested(spark, path, df,
       keys = Seq("id"), zoneKey = Some("g"))
-    TableManifest.appendManifested(spark, path,
+    TableManifest.replacePartitions(spark, path,
       (41L to 48L).map(i => (i, s"g${i % 4}", "2024-01-01", i.toDouble))
-        .toDF("id", "g", "date", "value").repartition(4), keyCol = "g")
+        .toDF("id", "g", "date", "value").repartition(4), keyCol = "g",
+      partitionCol = "date", replaceParts = Nil)
     val rep = TableManifest.compactManifested(spark, path,
       keyCol = "id", zoneKey = Some("g"))
     assert(rep.partsCompacted == 1 && rep.filesAfter == 1, s"got $rep")
@@ -422,7 +424,8 @@ class TableManifestSpec extends SparkSpec {
     // the widened generation: same layout + a new column, fresh keys
     val widened = (101L to 120L).map(i => (i, "2024-01-01", 2.0, i * 10L))
       .toDF("id", "date", "value", "score")
-    TableManifest.appendManifested(spark, path, widened, keyCol = "id")
+    TableManifest.replacePartitions(spark, path, widened, keyCol = "id",
+      partitionCol = "date", replaceParts = Nil)
     val t = TableManifest.readViaManifest(spark, path, mergeSchema = true)
     assert(t.columns.contains("score"))
     val byId = t.select("id", "score").collect()
@@ -827,9 +830,10 @@ class TableManifestSpec extends SparkSpec {
       rows("2024-01-01", 1L to 50L, 1.0), keys = Seq("id"))
     // each generation carries a column the other lacks, so a plain
     // read (one footer) and a merged read never infer the same schema
-    TableManifest.appendManifested(spark, path,
+    TableManifest.replacePartitions(spark, path,
       (101L to 120L).map(i => (i, "2024-01-01", i * 10L))
-        .toDF("id", "date", "score"), keyCol = "id")
+        .toDF("id", "date", "score"), keyCol = "id", partitionCol = "date",
+      replaceParts = Nil)
     def fresh(mergeSchema: Boolean) = {
       TableManifest.clearPlanMemo()
       TableManifest.readViaManifest(spark, path, mergeSchema)
@@ -1141,5 +1145,60 @@ class TableManifestSpec extends SparkSpec {
     check(spark, typed)
     def shown(d: DataFrame) = d.drop("bin").collect().map(_.toString).sorted.toSeq
     assert(shown(MergeUpsert.readPlain(spark, typed)) == shown(df))
+  }
+
+  test("every publisher commits through one step: each manifest version " +
+    "is one file, and a call that lands no file and drops nothing " +
+    "publishes nothing and runs no probe job") {
+    val path = tmpDir()
+    // eight dates, so a manifest version's stats spread over several
+    // of the metadata session's shuffle partitions
+    val dates = (1 to 8).map(d => f"2024-01-$d%02d")
+    def batch(ids: Seq[Long], v: Double) =
+      ids.map(i => (i, dates((i % 8).toInt), v)).toDF("id", "date", "value")
+    val empty = batch(Nil, 0.0)
+    def live() = MergeUpsert.currentPlainVersion(spark, s"$path/_manifest")
+    // (publisher, a publish, a no-op call, the jobs of the no-op's own
+    // work); in order on one table: a merge creates it, update rescans
+    // its untouched dirs, an append fragments every date, and the
+    // compaction folds them
+    val cases = Seq[(String, () => Any, () => Any, Long)](
+      ("mergeWriteManifested",
+        () => TableManifest.mergeWriteManifested(spark, path,
+          batch(1L to 64L, 1.0), keys = Seq("id")),
+        () => TableManifest.mergeWriteManifested(spark, path, empty,
+          keys = Seq("id")),
+        1L), // the batch's stats collect
+      ("update",
+        () => TableManifest.update(spark, path, "date", dates, "id"),
+        () => TableManifest.update(spark, path, "date", Nil, "id"),
+        0L),
+      ("replacePartitions",
+        () => TableManifest.replacePartitions(spark, path,
+          batch(65L to 128L, 2.0).repartition(4), "id", "date",
+          replaceParts = Nil),
+        () => TableManifest.replacePartitions(spark, path, empty, "id",
+          "date", replaceParts = Nil, landingParts = Some(dates)),
+        1L), // the empty frame's write
+      ("compactManifested",
+        () => TableManifest.compactManifested(spark, path, "id"),
+        () => TableManifest.compactManifested(spark, path, "id"),
+        2L)) // the file count and the over-threshold collect
+    cases.foreach { case (name, publish, noop, ownJobs) =>
+      val before = live()
+      publish()
+      val v = live().get
+      assert(!before.contains(v), s"$name published no version")
+      val files = new java.io.File(s"$path/_manifest/$v").listFiles()
+        .count(_.getName.endsWith(".parquet"))
+      assert(files == 1, s"$name published a $files-file manifest version")
+      val versions = TableManifest.versions(spark, path)
+      val (_, jobs) = jobsOf(noop())
+      assert(live().contains(v) &&
+        TableManifest.versions(spark, path) == versions,
+        s"$name's no-op published a version")
+      assert(jobs == ownJobs, s"$name's no-op ran $jobs jobs, not $ownJobs")
+    }
+    assert(TableManifest.readViaManifest(spark, path).count() == 128L)
   }
 }
